@@ -422,35 +422,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE may re-plan (coalesce) stages that READ a cached relation
-      // (default false for cache-partitioning stability, not
-      // correctness). The persist-based operators (sparseCosinePairs'
-      // tf relation, minhashPairs' signature cache) otherwise pin every
-      // cached-consumer stage at the full shuffle-partition count even
-      // when the cached relation is KB-sized — measured r16 at sf0.1:
-      // q147 cold 7.55 -> 4.31 s, warm 3.80 -> 2.80 s; q26/q98 colds
-      // 1.09/1.70 -> 0.79/1.44. Scale-adaptive by construction: AQE
-      // coalesces toward its advisory partition size, so large cached
-      // relations keep their parallelism. (OPTIMIZATION_r16.md §2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // AQE partition coalescing is byte-proportional, so it collapses
-      // CPU-DENSE sub-MB stages (containment's array_intersect verify,
-      // rankedToks joins over exploded shingles) to ONE task at the
-      // default 1 MB minPartitionSize — measured r16: a 3.0-3.4 s
-      // single-task stage inside q231; q231 cold 4.97 -> 2.67 s, warm
-      // 5.09 -> 2.56 s with a 64k floor. Tail impact measured neutral
-      // (30-query sample, median per-query ratio 1.000). At cluster
-      // scale multi-GB stages are sized by totalBytes/parallelism, so a
-      // 64k floor only affects tiny stages. (OPTIMIZATION_r16.md §4)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
     // The round-13 forced-broadcast removals (q177 unigrams, q187 supp,
     // q188 tombstones, sparse-cosine frequentVocab) rely on stats/AQE to
     // recover the broadcast at bench SF — with adaptive execution OFF

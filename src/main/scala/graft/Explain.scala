@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for selected queries so the
   * physical plan (pushed filters, read schema, broadcast vs shuffle,
   * whole-stage-codegen spans) can be reviewed per operator.
@@ -11,17 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // AQE on cached-plan consumers — see Bench.scala (r16)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 64k coalescing floor for CPU-dense sub-MB stages — see Bench.scala (r16)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
+    val spark = graft.core.Catalog.newSession("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-table-set N× scale-up generator — the sf1 testdata the driver
@@ -56,12 +56,7 @@ object GenScale {
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir = args.lift(2).getOrElse(s"/tmp/graft-sf1")
     val rotate = !args.lift(3).contains("norotate")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
 
     if (rotate && copies > 26)
       System.err.println(s"[genscale] WARNING: copies=$copies > 26 - the " +

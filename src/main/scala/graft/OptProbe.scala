@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement probes for the optimization rounds (r16) — the
   * evidence generators behind OPTIMIZATION_r16.md:
   *  - "read  <sfDir>": times repeated spark.read.parquet DataFrame
@@ -20,21 +18,12 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("read")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Engine posture matches the Bench/Verify session builders (r16's
-    // two AQE confs included) so probe traces measure the same plans
-    // the bench runs. SPARK_GRAFT_PROBE_MINPS overrides the coalescing
-    // floor for A/B'ing its effect (r17 q232 adjudication).
-    val minPS = sys.env.getOrElse("SPARK_GRAFT_PROBE_MINPS", "64k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPS)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
+    // The engine session, so probe traces measure the same plans the
+    // bench runs. SPARK_GRAFT_PROBE_MINPS overrides the coalescing floor
+    // for A/B'ing its effect (r17 q232 adjudication).
+    val spark = graft.core.Catalog.newSession()
+    sys.env.get("SPARK_GRAFT_PROBE_MINPS").foreach(minPS => spark.conf.set(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize", minPS))
     spark.sparkContext.setLogLevel("ERROR")
     mode match {
       case "read" =>

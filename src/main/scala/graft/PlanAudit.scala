@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -63,17 +62,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.drop(1).headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // AQE on cached-plan consumers — see Bench.scala (r16)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 64k coalescing floor for CPU-dense sub-MB stages — see Bench.scala (r16)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
+    val spark = graft.core.Catalog.newSession("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     graft.core.Catalog.statsMany(spark, sfDir,
       graft.core.Catalog.tableNames, withHistograms = true)

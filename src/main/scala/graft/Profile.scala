@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time selected queries N times each (first run shows cold
   * cost, repeats show steady-state) so bench hot spots can be separated
   * into fixed overhead vs real work.
@@ -12,13 +10,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val repeats = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
     names.foreach { n =>
       val times = (1 to repeats).map { _ =>

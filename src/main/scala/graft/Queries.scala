@@ -1057,32 +1057,24 @@ object Queries {
     path
   }
 
-  /** Derived session for the streaming queries with shuffle partitions
-    * sized to the stream volume: streaming state lives PER PARTITION
-    * (a stream-stream join commits four state stores per partition per
-    * trigger), so inheriting the batch-tuned 32 partitions multiplies
-    * fixed state-store overhead ~4x for zero parallelism benefit at this
-    * state size. On a cluster this is the same knob you'd size to
-    * executor count × state volume.
-    */
-  // GRAFT_STREAM_PARTS overrides for A/B tuning runs only (driver never
-  // sets it). Measured at sf0.1 on the stream-stream join: 4 parts
-  // median 5.2 s (parallelism-starved), 8 -> 3.2 s, 16 -> 3.2 s with
-  // worse cold — 8 is the knee, re-confirming the state-store sizing
-  // note in SCALE.md.
-  private lazy val streamPartsDefault: Int = {
-    val raw = sys.env.getOrElse("GRAFT_STREAM_PARTS", "8")
-    val n = raw.toIntOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"GRAFT_STREAM_PARTS must be a positive int, got '$raw'"))
-    require(n > 0, s"GRAFT_STREAM_PARTS must be > 0, got $n")
-    n
-  }
+  // Measured at sf0.1 on the stream-stream join: 4 parts median 5.2 s
+  // (parallelism-starved), 8 -> 3.2 s, 16 -> 3.2 s with worse cold — 8 is
+  // the knee, re-confirming the state-store sizing note in SCALE.md.
+  private val StreamPartitions = 8
 
-  private def streamSession(s: SparkSession, partitions: Int = streamPartsDefault,
+  /** Derived session for the streaming queries and the stream probes,
+    * with shuffle partitions sized to the stream volume: streaming state
+    * lives PER PARTITION (a stream-stream join commits four state stores
+    * per partition per trigger), so inheriting the batch session's one
+    * partition per core (32 on a local[32] bench) multiplies fixed
+    * state-store overhead ~4x for zero parallelism benefit at this state
+    * size. On a cluster this is the
+    * same knob you'd size to executor count × state volume.
+    */
+  private[graft] def streamSession(s: SparkSession,
       noDataBatches: Boolean = false): SparkSession = {
     val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s2.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toString)
     // RocksDB state store: measured 1.5-4x faster and far less variant
     // than the HDFS-backed default at sf0.1 (q62: ~3.8 s vs 5.7-16.7 s),
     // and it is the backend that holds large state off-heap at cluster
@@ -1113,23 +1105,6 @@ object Queries {
     // process otherwise accumulate maintenance work that steals cycles
     // from the next query's batch.
     s2.conf.set("spark.sql.streaming.stateStore.unloadOnCommit", "true")
-    // A/B knob for the stream floor analysis (SCALE.md): default keeps
-    // Spark's row tracking; set GRAFT_STREAM_NOTRACK=1 to skip per-put
-    // total-row maintenance in RocksDB.
-    if (sys.env.contains("GRAFT_STREAM_NOTRACK"))
-      s2.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-    // A/B knobs for the scale-knee probes (SCALE.md §q62): the measured
-    // 100x bump is claimed to be state crossing the per-store BLOCK
-    // CACHE (8 MB default) — GRAFT_ROCKSDB_CACHE_MB sizes it directly;
-    // GRAFT_STREAM_NOCHANGELOG=1 reverts to full-snapshot commits to
-    // separate commit cost from lookup cost in the same experiment.
-    sys.env.get("GRAFT_ROCKSDB_CACHE_MB").foreach(mb =>
-      s2.conf.set("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", mb))
-    if (sys.env.contains("GRAFT_STREAM_NOCHANGELOG"))
-      s2.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "false")
     s2
   }
 

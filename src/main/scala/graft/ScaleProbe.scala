@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic N× scale probe for the heaviest iterative/stateful
@@ -58,20 +58,14 @@ object ScaleProbe {
     // vocab-mode tapes live in their own dirs (different text content)
     val dir = s"/tmp/graft-scaleprobe-${copies}x-v2" +
       (if (vocabMode) "-vocab" else "")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // GRAFT_SCALE_SHUFFLE: shuffle-partition override for the
-      // partitions-scale-with-data demonstrations (a cluster raises
-      // this with the corpus; local probes pin it to the core count
-      // unless a residual needs the lever isolated — e.g. the q187
-      // 300x per-task memory-pressure A/B, SCALE.md §Round-13 cont.)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SCALE_SHUFFLE",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
+    // GRAFT_SCALE_SHUFFLE: shuffle-partition override for the
+    // partitions-scale-with-data demonstrations (a cluster raises
+    // this with the corpus; local probes pin it to the core count
+    // unless a residual needs the lever isolated — e.g. the q187
+    // 300x per-task memory-pressure A/B, SCALE.md §Round-13 cont.)
+    sys.env.get("GRAFT_SCALE_SHUFFLE").foreach(n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n))
     spark.range(1000000).selectExpr("sum(id)").collect() // warm the session
 
     // Pass-level contention self-flagging (r15 verdict next-round #7):

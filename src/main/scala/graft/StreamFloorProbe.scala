@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Measurement harness for the q62 stream-stream-join floor experiment
   * (SCALE.md §Streaming): the bench runs the join as a FINITE one-shot
   * query, so its ~0.65 s of fixed lifecycle cost (0.35 s per-trigger
@@ -23,25 +20,9 @@ object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nFiles = args.lift(1).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // the q62 streaming session config (streamSession), replicated:
-    // stream-sized partitions, RocksDB + changelog, no-data batches off
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", "8"))
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val spark = graft.core.Catalog.newSession()
+    // the q62 streaming session
+    val s = Queries.streamSession(spark)
 
     // tape: the same event volume as q62, cut into nFiles segments so
     // the run holds nFiles triggers instead of one

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Direct measurement of the streaming STATE-WRITE path behind the
@@ -60,13 +60,7 @@ object StreamWriteProbe {
       else Seq(1, 10, 30, 100)
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nFiles = sys.env.getOrElse("GRAFT_WRITEPROBE_FILES", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     tiers.foreach { copies =>
@@ -135,13 +129,13 @@ object StreamWriteProbe {
       require(aggWindow == "1 hour" || shape == "agg",
         s"GRAFT_WRITEPROBE_AGGWINDOW='$aggWindow' is set but shape " +
           s"'$shape' has no windowed aggregation — unset it for this run")
-      // the q62 streaming session, replicated (Queries.streamSession)
-      val s = spark.newSession()
+      // the q62 streaming session
+      val s = Queries.streamSession(spark)
       // GRAFT_WRITEPROBE_AUTOPARTS=1: provision partitions through the
       // ACTUAL API (Streams.provisionStatePartitions) from the tape's
       // input-row count × the measured per-row join-state constant —
-      // the round-12 validation that the r11 hand-set
-      // GRAFT_STREAM_PARTS=32 result reproduces through the API path
+      // the round-12 validation that the r11 hand-set 32-partition
+      // result reproduces through the API path
       // the shape's state-key count, computed batch-side from the tape
       // with the SAME key definition the streaming operator shards on —
       // the denominator of the per-key constant (and the keys input of
@@ -175,15 +169,7 @@ object StreamWriteProbe {
           case "totals" => graft.streaming.Streams.provisionForRunningTotals(s, shapeKeys)
         }
         println(s"""[writeprobe] {"copies":$copies,"shape":"$shape","autoparts":$n,"keys":$shapeKeys}""")
-      } else s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_PARTS", "8"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      s.conf.set("spark.sql.streaming.stateStore.unloadOnCommit", "true")
+      }
 
       // default 4 files/trigger over 16 time-ordered files = 4 triggers
       // of accumulating state; GRAFT_WRITEPROBE_ONESHOT=1 reproduces the

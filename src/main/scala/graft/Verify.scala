@@ -1,28 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // The engine's own extensions (Selinger reorder, TopK strategy, SQL
     // functions) are live in the verified path — correctness is checked
     // WITH our optimizer rules active, not around them.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same engine posture as Bench (r16): AQE may re-plan stages
-      // reading cached relations — see the Bench.scala comment
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 64k coalescing floor for CPU-dense sub-MB stages — see Bench.scala (r16)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
     // Load the catalog's statistics up front (the reference loads
     // Catalog.txt at startup): full stats (row counts, histograms, ndv sketches) for every table,
     // so SelingerJoinReorder decisions are deterministic rather than

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Write-path audit (r15 verdict next-round #3): the write-path queries
   * are planless (q220) or plan-audited only on their READ-BACK side
   * (q94, q133) in PLANS.md, so a slow bench number on one of them was
@@ -36,14 +34,7 @@ object WriteAudit {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val outFile = args.lift(1).getOrElse("WRITEPATH.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Catalog.newSession()
     spark.range(1000000).selectExpr("sum(id)").collect()
     Bench.warmEnginePaths(spark)
     // q220 reads the staged stream source like the bench does
@@ -105,7 +96,7 @@ object WriteAudit {
 
     val sb = new StringBuilder
     sb ++= "# WRITEPATH — write-path query audit (r15 verdict #3)\n\n"
-    sb ++= s"Generated by `runMain graft.WriteAudit $sfDir` on local[$cpus].\n"
+    sb ++= s"Generated by `runMain graft.WriteAudit $sfDir` on local[${graft.core.Catalog.cpus}].\n"
     sb ++= "One row per write-path query at bench SF: data files written and\n"
     sb ++= "bytes on disk (filesystem walk of the query's scratch output,\n"
     sb ++= "exact), sink bytes/records from executor output metrics, task\n"

@@ -302,19 +302,60 @@ object Catalog {
     names.map(n => n -> statsCache.get((dir, n))._1).toMap
   }
 
-  /** Standard session factory: 32 shuffle partitions to match local[32]
-    * (not the 200 default sized for clusters), AQE on for runtime
-    * coalescing and skew-join handling.
+  /** Worker threads for the default `local[n]` master: `SPARK_GRAFT_CPUS`
+    * when set, else the machine's available processors.
     */
-  def newSession(master: String = "local[32]"): SparkSession = {
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  private val LocalN = """local\[(\d+)\]""".r
+
+  /** Shuffle partitions for a master: one per core (not the 200 default
+    * sized for clusters).
+    */
+  private[graft] def shufflePartitions(master: String): Int = master match {
+    case LocalN(n) => n.toInt
+    case other => throw new IllegalArgumentException(
+      s"newSession needs a local[n] master, got '$other'")
+  }
+
+  /** The one session factory: every tool, the bench and the verify dump
+    * run this session, so they all plan with the engine's extensions
+    * (Selinger reorder, TopK strategy, SQL functions) and the same AQE
+    * posture. Tool-only levers are set with `spark.conf.set` afterwards.
+    */
+  def newSession(master: String = s"local[$cpus]"): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", shufflePartitions(master).toString)
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE on cached-plan consumers — see Bench.scala (r16)
+      // AQE may re-plan (coalesce) stages that READ a cached relation
+      // (default false for cache-partitioning stability, not
+      // correctness). The persist-based operators (sparseCosinePairs'
+      // tf relation, minhashPairs' signature cache) otherwise pin every
+      // cached-consumer stage at the full shuffle-partition count even
+      // when the cached relation is KB-sized — measured r16 at sf0.1:
+      // q147 cold 7.55 -> 4.31 s, warm 3.80 -> 2.80 s; q26/q98 colds
+      // 1.09/1.70 -> 0.79/1.44. Scale-adaptive by construction: AQE
+      // coalesces toward its advisory partition size, so large cached
+      // relations keep their parallelism. (OPTIMIZATION_r16.md §2)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 64k coalescing floor for CPU-dense sub-MB stages — see Bench.scala (r16)
+      // AQE partition coalescing is byte-proportional, so it collapses
+      // CPU-DENSE sub-MB stages (containment's array_intersect verify,
+      // rankedToks joins over exploded shingles) to ONE task at the
+      // default 1 MB minPartitionSize — measured r16: a 3.0-3.4 s
+      // single-task stage inside q231; q231 cold 4.97 -> 2.67 s, warm
+      // 5.09 -> 2.56 s with a 64k floor. Tail impact measured neutral
+      // (30-query sample, median per-query ratio 1.000). At cluster
+      // scale multi-GB stages are sized by totalBytes/parallelism, so a
+      // 64k floor only affects tiny stages. (OPTIMIZATION_r16.md §4)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -91,7 +91,7 @@ object Streams {
     * targetMbPerStore. Derived from, and validated against, the
     * SCALE.md §Round-12 API-path run: the q62 100× shape provisioned
     * through this function reproduces the zero-flush ~80 s result that
-    * GRAFT_STREAM_PARTS=32 demonstrated by hand in round 11.
+    * 32 hand-set stream partitions demonstrated in round 11.
     *
     * Sizing inputs are the caller's state model: for a windowed agg,
     * keys = windows×groups in the watermark horizon and bytesPerKey the

@@ -11,10 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * on a specific physical structure — the properties `.explain` review
   * established, pinned so a regression can't silently reintroduce a
   * scale-killer. Counting is done on the pre-AQE physical plan (the
-  * shape Catalyst chose; AQE only refines it at runtime).
+  * shape Catalyst chose; AQE only refines it at runtime), under the
+  * engine's extensions, as Bench and Verify plan it.
   */
 class PlanShapeSpec extends AnyFunSuite {
-  private lazy val spark = SharedSpark.spark
+  private lazy val spark = SharedSpark.sparkWithExtensions
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): SparkPlan =

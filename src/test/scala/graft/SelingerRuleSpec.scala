@@ -285,4 +285,54 @@ class SelingerRuleSpec extends AnyFunSuite {
     assert(!leaves.head.startsWith("l_"), s"leaves: $leaves")
     assert(df.count() > 0)
   }
+
+  // Leaf order of the optimized plan, by first output column, under the
+  // engine session with full stats registered. PLANS.md records exchange
+  // counts, not order, so a change in where or how the rule runs (e.g.
+  // injecting it pre-CBO instead of as an optimizer rule) shows up here
+  // first. q05 orders its joins itself through exec.Executor.
+  private val pinnedOrders: Map[String, Seq[String]] = Map(
+    "q05_join_opt" -> Seq("n_nationkey", "c_custkey", "o_orderkey", "l_orderkey"),
+    "q51_tpch_q1" -> Seq("l_orderkey"),
+    "q52_tpch_q3" -> Seq("c_custkey", "o_orderkey", "l_orderkey"),
+    "q53_tpch_q5" -> Seq("s_suppkey", "n_nationkey", "r_regionkey", "c_custkey",
+      "o_orderkey", "l_orderkey"),
+    "q54_tpch_q6" -> Seq("l_orderkey"),
+    "q55_tpch_q10" -> Seq("o_orderkey", "c_custkey", "n_nationkey", "l_orderkey"),
+    "q69_tpch_q4" -> Seq("o_orderkey", "l_orderkey"),
+    "q70_tpch_q14" -> Seq("l_orderkey", "p_partkey"),
+    "q71_tpch_q19" -> Seq("l_orderkey", "p_partkey"),
+    "q72_tpch_q17" -> Seq("p_partkey", "l_orderkey", "l_orderkey"),
+    "q73_tpch_q2" -> Seq("l_orderkey", "p_partkey", "s_suppkey"),
+    "q74_tpch_q7" -> Seq("n_nationkey", "s_suppkey", "l_orderkey", "o_orderkey",
+      "c_custkey", "n_nationkey"),
+    "q75_tpch_q13" -> Seq("c_custkey", "o_orderkey"),
+    "q76_tpch_q18" -> Seq("l_orderkey", "o_orderkey", "c_custkey"),
+    "q77_tpch_q22" -> Seq("c_custkey", "o_orderkey", "c_custkey"),
+    "q78_tpch_q15" -> Seq("s_suppkey", "l_orderkey", "l_orderkey"),
+    "q79_tpch_q16" -> Seq("l_orderkey", "s_suppkey", "p_partkey"),
+    "q80_tpch_q21" -> Seq("s_suppkey", "l_orderkey", "l_orderkey", "o_orderkey",
+      "l_orderkey"),
+    "q86_tpch_q8" -> Seq("p_partkey", "l_orderkey", "s_suppkey", "o_orderkey",
+      "c_custkey", "n_nationkey", "r_regionkey", "n_nationkey"),
+    "q87_tpch_q9" -> Seq("s_suppkey", "n_nationkey", "l_orderkey", "p_partkey",
+      "o_orderkey"),
+    "q88_tpch_q11" -> Seq("l_orderkey", "s_suppkey", "l_orderkey", "s_suppkey"),
+    "q89_tpch_q12" -> Seq("o_orderkey", "l_orderkey"),
+    "q90_tpch_q20" -> Seq("s_suppkey", "l_orderkey", "l_orderkey"))
+
+  test("chosen join order is pinned for q05 and the TPC-H-block queries") {
+    val s2 = SharedSpark.sparkWithExtensions
+    graft.core.Catalog.tableNames.foreach { t =>
+      graft.stats.StatsRegistry.register(graft.core.Catalog.table(s2, dir, t),
+        graft.core.Catalog.stats(s2, dir, t), full = true)
+    }
+    assert(pinnedOrders.keySet ==
+      SparkEntry.queries.keySet.filter(_.contains("_tpch_")) + "q05_join_opt")
+    pinnedOrders.foreach { case (n, expected) =>
+      val leaves = joinChainLeaves(
+        SparkEntry.queries(n)(s2, dir).queryExecution.optimizedPlan)
+      assert(leaves == expected, s"$n join order changed")
+    }
+  }
 }

@@ -639,7 +639,7 @@ class StreamingSpec extends AnyFunSuite {
     // the q62 100x shape: 20 M input rows x the measured 86 B/row ->
     // 28 partitions, which puts per-store state at ~14.7 MB — inside the
     // 15 MB/store memtable-resident band the write probe measured, and
-    // the same class as the hand-validated GRAFT_STREAM_PARTS=32 run
+    // the same class as the hand-validated 32-partition run
     // (12.8 MB/store, zero flush, 80.3 s vs ~400). The API-path re-run
     // at 100x is recorded in SCALE.md §Round-12.
     val n = Streams.recommendedStatePartitions(
