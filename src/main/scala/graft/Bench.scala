@@ -382,10 +382,7 @@ object Bench {
     */
   def warmEnginePaths(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions._
-    // trailing segment so the dead-pid reaper's anchored pattern
-    // (prefix-pid-suffix) matches crash residue
-    val dir = Queries.pidScratch(
-      s"/tmp/graft-bench-warm-${ProcessHandle.current().pid()}-scratch")
+    val dir = graft.core.Scratch.scratch("bench-warm")
     try {
       spark.range(50000)
         .select(col("id"), (col("id") % 97).as("k"),
@@ -406,17 +403,9 @@ object Bench {
       spark.sql("SELECT count(DISTINCT collate(c, 'UTF8_LCASE')) " +
         "FROM VALUES ('a'), ('A') t(c)").collect()
     } finally {
-      // tiny scratch, deleted eagerly; pidScratch's exit hook + dead-pid
-      // reaper cover the failure paths
-      try {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.exists(root))
-          scala.util.Using.resource(java.nio.file.Files.walk(root)) { s =>
-            s.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(java.nio.file.Files.delete)
-          }
-      } catch { case scala.util.control.NonFatal(_) => () }
+      // tiny scratch, deleted eagerly; the scratch root's exit hook +
+      // dead-pid reaper cover the failure paths
+      graft.core.Scratch.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }
 
@@ -621,33 +610,11 @@ object Bench {
         (Map.empty[String, Double], None)
     }
     val refSfMismatch = refSfRead.exists(_ != sfDir)
-    // The compact stdout line keys by numeric prefix ("q52_tpch_q3" ->
-    // "q52"); two queries sharing a prefix would silently collide into
-    // one JSON key with last-writer-wins timings — fail loudly instead.
-    locally {
-      val collisions = SparkEntry.queries.keys.toSeq
-        .groupBy(n => n.indexOf('_') match { case -1 => n; case i => n.substring(0, i) })
-        .filter(_._2.size > 1)
-      require(collisions.isEmpty,
-        s"bench compact-JSON prefix collision: $collisions — rename the queries")
-    }
     // streaming policy membership comes from the EXPLICIT registry the
-    // engine exports, never a name substring (r13 verdict #7): the
-    // substring was one honest naming accident away from silently
-    // mixing the min-of-3 and challenge-rerun stabilization policies.
-    // A stream-NAMED query missing from the registry is exactly that
-    // accident half-made — refuse by name instead of guessing. Checked
-    // HERE, before the cold pass: it is pure static data, and failing
-    // after the expensive passes would discard the whole run (review
-    // r14).
+    // engine exports, never a name substring (r13 verdict #7); the
+    // registry itself refuses stream-named batch rows and shared
+    // numeric prefixes when Queries initialises
     val streamSet = SparkEntry.streamingQueries
-    locally {
-      val unTagged = SparkEntry.queries.keys
-        .filter(n => n.contains("stream") && !streamSet(n))
-      require(unTagged.isEmpty,
-        s"queries named like streaming but not in SparkEntry.streamingQueries: " +
-          s"$unTagged — tag them (streaming) or rename them (batch)")
-    }
     val cold = ordered.map { case (name, fn) => name -> runOnce(name, fn) }
     // The iterative queries (CC rounds, PageRank) localCheckpoint
     // per-round RDDs that only release via ContextCleaner after a GC;

@@ -23,9 +23,9 @@ object EnvFilter {
     case c => c.toString
   }
 
-  def only(): Option[Set[String]] = {
-    val o = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+  /** The query names in `raw` (default: `SPARK_GRAFT_ONLY`), if set. */
+  def only(raw: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Option[Set[String]] = {
+    val o = raw.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     o.foreach { names =>
       val unknown = names.diff(SparkEntry.queries.keySet)
       require(unknown.isEmpty,

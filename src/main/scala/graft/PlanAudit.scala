@@ -39,18 +39,6 @@ object PlanAudit {
       "q236_txn_retention",
       "q147_cosine_pairs", "q233_fanout_probe")
 
-  /** Queries whose OPERATOR UNDER TEST is a write: constructing the
-    * DataFrame performs /tmp deletes and parquet/table writes before
-    * returning the read-back plan (q94 z-order write, q107 bucketed
-    * writes). A "plan-only" audit pass still executes those writes —
-    * deliberate (the read-back plan is meaningless without them), but
-    * don't be surprised by the Spark jobs.
-    */
-  val writePathQueries: Set[String] =
-    Set("q94_zorder_roundtrip", "q107_bucketed_join", "q121_xml_roundtrip",
-      "q133_partitioned_write", "q146_schema_evolution",
-      "q162_dynamic_pruning", "q235_file_compaction")
-
   /** The pre-AQE physical plan — the shape Catalyst chose; AQE only
     * refines it at runtime.
     */

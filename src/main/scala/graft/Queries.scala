@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Catalog
+import graft.core.Scratch.{deleteRecursively, dirSlug, scratch}
 import graft.exec.Executor
 import graft.operators._
 import graft.plans.{JoinEdge, JoinOptimizer}
@@ -11,9 +12,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The engine's query surface: every operator family from SURVEY.md §2
-  * plus the north-star pipeline operators, each as a
-  * (SparkSession, sfDir) => DataFrame paired (where SQL-expressible) with
-  * a DuckDB oracle in [[oracle]].
+  * plus the north-star pipeline operators, each a
+  * (SparkSession, sfDir) => DataFrame registered in [[specs]] with the
+  * DuckDB SQL that states its result.
   *
   * Float discipline for oracle parity: monetary doubles are converted to
   * integer cents at the source (`round(x*100)::BIGINT` — a single IEEE
@@ -25,90 +26,6 @@ object Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Catalog.table(s, dir, name)
-
-  /** sfDir → filesystem-safe slug for the write-path queries' scratch
-    * names (one definition; q94/q107/q121 share it). The readable part
-    * alone is NOT injective ('/a/b' and '/a_b' collide), and a
-    * collision would make a same-process marker-guarded scratch cache
-    * (q37's tape, the stream staging dirs) serve the WRONG dataset —
-    * append a hash of the raw path to make the slug injective in
-    * practice.
-    */
-  private def dirSlug(dir: String): String =
-    dir.replaceAll("[^a-zA-Z0-9]", "_") + f"_${dir.hashCode & 0x7fffffff}%08x"
-
-  /** Per-process /tmp scratch paths: pid-unique names prevent the
-    * cross-session overwrite race (verify + bench over the same SF dir),
-    * but without cleanup every process leaks its staged table copies.
-    * Registering each path here installs ONE JVM shutdown hook that
-    * recursively deletes them on exit, so disk use is bounded by live
-    * processes, not by run count. Crash-killed JVMs (kill -9) skip
-    * shutdown hooks; that residue is bounded by the crash count.
-    */
-  private val scratchPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // crash-residue reaper, run once per process: a kill -9'd JVM skips its
-  // shutdown hook, so on startup delete scratch dirs whose embedded pid is
-  // no longer alive. The pattern is anchored to OUR exact scratch-name
-  // prefixes (never a bare number match — test fixtures carry random
-  // numerals that must not parse as pids).
-  private lazy val staleScratchReaped: Unit = {
-    val pat = ("^(graft-q37|graft-q126|graft-q180|graft-q220|graft-q234|" +
-      "graft-q235|graft-q236|graft-writeprobe-ckpt|graft-dpp-fact|" +
-      "graft-stream-src|graft-stream-late|graft-bench-warm|" +
-      "graft-docstream-src|graft_q121_xml|graft_q146_evo|" +
-      "graft_q179_zonemap|graft_q94_zorder|graft_q133_part|graft_q107_li|" +
-      "graft_q107_ord)[-_]([0-9]+)[-_].*$").r
-    try {
-      val tmp = java.nio.file.Paths.get("/tmp")
-      scala.util.Using.resource(java.nio.file.Files.list(tmp)) { st =>
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.foreach { p =>
-          // per-entry try: one malformed name (e.g. a digit run that
-          // overflows Long in toLong, thrown INSIDE the match guard)
-          // must skip that entry, not abort the whole sweep via the
-          // outer catch
-          try {
-            p.getFileName.toString match {
-              case pat(_, pid) if pid.toLongOption
-                  .exists(l => !ProcessHandle.of(l)
-                    .map[Boolean](_.isAlive).orElse(false)) =>
-                deleteRecursively(p)
-              case _ => ()
-            }
-          } catch { case _: Throwable => () }
-        }
-      }
-    } catch { case _: Throwable => () } // best-effort hygiene, never fail a query
-  }
-  /** Recursive tree delete. `strict = false` (hygiene paths: shutdown
-    * hook, stale reaper) swallows per-file failures — best-effort, never
-    * fail the caller; `strict = true` (tape/staging REBUILD paths)
-    * propagates them, because a silently surviving file would collide
-    * with the errorifexists writes that follow.
-    */
-  private def deleteRecursively(root: java.nio.file.Path,
-      strict: Boolean = false): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder()).iterator().asScala
-          .foreach { f => try java.nio.file.Files.delete(f)
-            catch { case e: Throwable => if (strict) throw e } }
-      }
-    }
-  private lazy val scratchHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchPaths.forEach { p =>
-        try deleteRecursively(java.nio.file.Paths.get(p))
-        catch { case _: Throwable => () } // best-effort: never block exit
-      }
-    }, "graft-scratch-cleanup"))
-  private[graft] def pidScratch(path: String): String = {
-    staleScratchReaped
-    scratchHookInstalled
-    scratchPaths.add(path)
-    path
-  }
 
   /** round(x*100) as long — exact-cents conversion.
     *
@@ -666,16 +583,15 @@ object Queries {
     */
   def q37_txn_visibility(s: SparkSession, dir: String): DataFrame = {
     // The txn tape (3 parquet batch writes) is deterministic per sfDir;
-    // build it once PER PROCESS — keyed by pid + the sanitized source
-    // path, so a fresh JVM always pays the full transaction path (begin/
-    // insert/commit/abort/crash), later invocations in the same process
-    // exercise the cold-open recovery path (a fresh TxnTable re-deriving
-    // committed state from the durable log), no two processes ever share
-    // a tape, and a regenerated dataset can't serve stale state across
-    // runs. A marker written last makes partially-built dirs (crash
+    // build it once PER PROCESS — in the process's scratch root, keyed
+    // by the source path, so a fresh JVM always pays the full transaction
+    // path (begin/insert/commit/abort/crash), later invocations in the
+    // same process exercise the cold-open recovery path (a fresh TxnTable
+    // re-deriving committed state from the durable log), no two processes
+    // ever share a tape, and a regenerated dataset can't serve stale state
+    // across runs. A marker written last makes partially-built dirs (crash
     // mid-build) detectable and rebuilt.
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val tmp = pidScratch(s"/tmp/graft-q37-${ProcessHandle.current().pid()}-$sanitized")
+    val tmp = scratch("q37", dir)
     val root = java.nio.file.Paths.get(tmp)
     val marker = root.resolve("_graft_built")
     if (!java.nio.file.Files.exists(marker)) {
@@ -709,8 +625,7 @@ object Queries {
     * exercise the cold-open recovery path.
     */
   def q126_txn_timetravel(s: SparkSession, dir: String): DataFrame = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val tmp = pidScratch(s"/tmp/graft-q126-${ProcessHandle.current().pid()}-$sanitized")
+    val tmp = scratch("q126", dir)
     val root = java.nio.file.Paths.get(tmp)
     val marker = root.resolve("_graft_built")
     if (!java.nio.file.Files.exists(marker)) {
@@ -735,7 +650,7 @@ object Queries {
   /** The file-stream copy of `events` shared by the streaming queries
     * (q38/q62/q63/q64): the file source needs a directory, and
     * re-materializing the table per invocation would dominate every
-    * streaming query's cost. Keyed by pid + sanitized path (same
+    * streaming query's cost. Keyed by process + source path (same
     * discipline as the q37 txn tape): one write per process, never
     * shared across processes, never stale across dataset regenerations.
     */
@@ -775,8 +690,7 @@ object Queries {
     sessionStragglerStreamDir(s, dir)
 
   private def dppFactDir(s: SparkSession, dir: String): String = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val path = pidScratch(s"/tmp/graft-dpp-fact-${ProcessHandle.current().pid()}-$sanitized")
+    val path = scratch("dpp-fact", dir)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/_SUCCESS")))
       t(s, dir, "events")
         .select(col("event_id"), col("user_id"), cents(col("value")).as("v"),
@@ -786,8 +700,7 @@ object Queries {
   }
 
   private def eventsStreamDir(s: SparkSession, dir: String): String = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val streamDir = pidScratch(s"/tmp/graft-stream-src-${ProcessHandle.current().pid()}-$sanitized")
+    val streamDir = scratch("stream-src", dir)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$streamDir/_SUCCESS")))
       t(s, dir, "events").repartition(4).write.mode("overwrite").parquet(streamDir)
     streamDir
@@ -811,13 +724,11 @@ object Queries {
     * All three populations are SQL-expressible, so the DuckDB oracle
     * can replay the per-trigger watermark arithmetic. Explicit mtimes
     * (2 minutes apart) pin the file source's modification-time listing
-    * order, making trigger assignment deterministic; same pid+dir
+    * order, making trigger assignment deterministic; same per-process
     * staging contract as [[eventsStreamDir]].
     */
   private def lateReplayStreamDir(s: SparkSession, dir: String): String = {
-    val sanitized = dirSlug(dir)
-    val path = pidScratch(
-      s"/tmp/graft-stream-late-${ProcessHandle.current().pid()}-$sanitized")
+    val path = scratch("stream-late", dir)
     val root = java.nio.file.Paths.get(path)
     val marker = root.resolve("_graft_staged")
     if (!java.nio.file.Files.exists(marker)) {
@@ -919,9 +830,7 @@ object Queries {
     * query).
     */
   private def sessionStragglerStreamDir(s: SparkSession, dir: String): String = {
-    val sanitized = dirSlug(dir)
-    val path = pidScratch(
-      s"/tmp/graft-stream-straggler-${ProcessHandle.current().pid()}-$sanitized")
+    val path = scratch("stream-straggler", dir)
     val root = java.nio.file.Paths.get(path)
     val marker = root.resolve("_graft_staged")
     if (!java.nio.file.Files.exists(marker)) {
@@ -1368,8 +1277,7 @@ object Queries {
        FROM st WHERE n_oov * 50 <= n_tokens"""
 
   private def docsStreamDir(s: SparkSession, dir: String): String = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val streamDir = pidScratch(s"/tmp/graft-docstream-src-${ProcessHandle.current().pid()}-$sanitized")
+    val streamDir = scratch("docstream-src", dir)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$streamDir/_SUCCESS")))
       t(s, dir, "documents").repartition(4).write.mode("overwrite").parquet(streamDir)
     streamDir
@@ -2285,33 +2193,29 @@ object Queries {
     * plan has zero exchanges (BucketingSpec pins that); this query pins
     * the VALUES against the plain-join oracle.
     *
-    * WRITE-PATH query (PlanAudit.writePathQueries): building the
+    * WRITE-PATH query (WriteAudit.audited): building the
     * DataFrame drops/deletes the scratch tables and performs both
     * bucketed writes — the operator under test.
     */
   def q107_bucketed_join(s: SparkSession, dir: String): DataFrame = {
-    // pid in the tag: same cross-session overwrite race as the other
-    // write-then-read scratch paths (q179 discipline), plus shutdown-hook
-    // cleanup of the external table dirs via pidScratch
-    val tag = s"${ProcessHandle.current().pid()}_${dirSlug(dir)}"
-    val (lt, ot) = (s"graft_q107_li_$tag", s"graft_q107_ord_$tag")
-    Seq(lt, ot).foreach(n => pidScratch(s"/tmp/$n"))
-    // external tables at explicit paths, pre-cleaned: a managed table's
-    // leftover warehouse dir from a PREVIOUS session's run would fail
-    // the create with LOCATION_ALREADY_EXISTS (catalog is in-memory,
+    val (lt, ot) = (s"graft_q107_li_${dirSlug(dir)}", s"graft_q107_ord_${dirSlug(dir)}")
+    val (lp, op) = (scratch("q107-li", dir), scratch("q107-ord", dir))
+    // external tables at explicit scratch paths, pre-cleaned: a managed
+    // table's leftover warehouse dir from a PREVIOUS session's run would
+    // fail the create with LOCATION_ALREADY_EXISTS (catalog is in-memory,
     // the filesystem is not)
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq(lt, ot).foreach { n =>
+    Seq(lt -> lp, ot -> op).foreach { case (n, p) =>
       s.sql(s"DROP TABLE IF EXISTS $n")
-      fs.delete(new org.apache.hadoop.fs.Path(s"/tmp/$n"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(p), true)
     }
     graft.core.Bucketing.writeBucketed(
       t(s, dir, "lineitem").select(col("l_orderkey"),
         cents(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev_c")),
-      lt, "l_orderkey", buckets = 8, path = Some(s"/tmp/$lt"))
+      lt, "l_orderkey", buckets = 8, path = Some(lp))
     graft.core.Bucketing.writeBucketed(
       t(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-      ot, "o_orderkey", buckets = 8, path = Some(s"/tmp/$ot"))
+      ot, "o_orderkey", buckets = 8, path = Some(op))
     graft.core.Bucketing.coLocatedJoin(s, lt, ot, "l_orderkey", "o_orderkey")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), sum(col("rev_c")).as("revenue_c"))
@@ -2671,14 +2575,14 @@ object Queries {
     * back with explicit schema → aggregate. Any row dropped, duplicated,
     * or mutated across the serialize/parse round-trip breaks the hash
     * against the oracle, which reads the SOURCE table. WRITE-PATH query
-    * (PlanAudit.writePathQueries): building the DataFrame performs the
-    * /tmp write.
+    * (WriteAudit.audited): building the DataFrame performs the
+    * scratch write.
     */
   def q121_xml_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         cents(col("c_acctbal")).as("acctbal_c"))
-    val path = pidScratch(s"/tmp/graft_q121_xml_${ProcessHandle.current().pid()}_${dirSlug(dir)}")
+    val path = scratch("q121-xml", dir)
     graft.sources.Formats.writeXml(c, path, rowTag = "customer")
     graft.sources.Formats.readXml(s, path, c.schema, rowTag = "customer")
       .groupBy("c_mktsegment")
@@ -2937,7 +2841,7 @@ object Queries {
     */
   def q146_schema_evolution(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val root = pidScratch(s"/tmp/graft_q146_evo_${ProcessHandle.current().pid()}_${dirSlug(dir)}")
+    val root = scratch("q146-evo", dir)
     docs.where(col("doc_id") % 2 === 0).select("doc_id", "lang")
       .write.mode("overwrite").parquet(s"$root/gen=1")
     docs.where(col("doc_id") % 2 === 1).select("doc_id", "lang", "n_chars")
@@ -3721,10 +3625,7 @@ object Queries {
   def q179_zonemap_prune(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-    // pid keeps concurrent sessions (verify + bench over the same SF
-    // dir) from racing one another's overwrite (q180/q220 discipline)
-    val path =
-      pidScratch(s"/tmp/graft_q179_zonemap_${ProcessHandle.current().pid()}_${dirSlug(dir)}")
+    val path = scratch("q179-zonemap", dir)
     graft.core.ZoneMap.write(li, path, "l_shipdate", numFiles = 16)
     val lo = lit("1997-01-01 00:00:00").cast("timestamp")
     val hi = lit("1997-06-30 23:59:59").cast("timestamp")
@@ -3744,8 +3645,7 @@ object Queries {
     * construction rule.
     */
   def q180_txn_diff(s: SparkSession, dir: String): DataFrame = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val tmp = pidScratch(s"/tmp/graft-q180-${ProcessHandle.current().pid()}-$sanitized")
+    val tmp = scratch("q180", dir)
     val root = java.nio.file.Paths.get(tmp)
     val marker = root.resolve("_graft_built")
     if (!java.nio.file.Files.exists(marker)) {
@@ -4746,7 +4646,7 @@ object Queries {
   def q220_stream_lakehouse_sink(s0: SparkSession, dir: String): DataFrame = {
     val s = streamSession(s0)
     val streamDir = eventsStreamDir(s, dir)
-    val base = pidScratch(s"/tmp/graft-q220-${ProcessHandle.current().pid()}-${dirSlug(dir)}")
+    val base = scratch("q220", dir)
     val landing = s"$base/landing"
     val clustered = s"$base/clustered"
     val root = java.nio.file.Paths.get(base)
@@ -5156,8 +5056,7 @@ object Queries {
     // Same per-process tape-caching discipline as q37 (marker file,
     // pid + dir key); later invocations in the same process exercise
     // the cold-open path over the compacted tape.
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val tmp = pidScratch(s"/tmp/graft-q234-${ProcessHandle.current().pid()}-$sanitized")
+    val tmp = scratch("q234", dir)
     val root = java.nio.file.Paths.get(tmp)
     val marker = root.resolve("_graft_built")
     if (!java.nio.file.Files.exists(marker)) {
@@ -5213,8 +5112,7 @@ object Queries {
     * loss, positioned by the knob instead of abolished.
     */
   def q236_txn_retention(s: SparkSession, dir: String): DataFrame = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val tmp = pidScratch(s"/tmp/graft-q236-${ProcessHandle.current().pid()}-$sanitized")
+    val tmp = scratch("q236", dir)
     val root = java.nio.file.Paths.get(tmp)
     val marker = root.resolve("_graft_built")
     if (!java.nio.file.Files.exists(marker)) {
@@ -5382,11 +5280,10 @@ object Queries {
     * then hashes the ENTIRE compacted relation against the raw table —
     * compaction must lose, duplicate, or corrupt NOTHING, including the
     * partition column round-tripped through directory names. WRITE-PATH
-    * query (PlanAudit.writePathQueries).
+    * query (WriteAudit.audited).
     */
   def q235_file_compaction(s: SparkSession, dir: String): DataFrame = {
-    val sanitized = dirSlug(dir) // one slug convention for every scratch path
-    val base = pidScratch(s"/tmp/graft-q235-${ProcessHandle.current().pid()}-$sanitized")
+    val base = scratch("q235", dir)
     val root = java.nio.file.Paths.get(base)
     val marker = root.resolve("_graft_built")
     val src = s"$base/src"
@@ -5565,12 +5462,12 @@ object Queries {
     * file-SKIPPING benefit of the layout is measured in ZOrderSpec;
     * this pins end-to-end correctness of the write path.
     *
-    * WRITE-PATH query (PlanAudit.writePathQueries): building the
-    * DataFrame performs the /tmp write — the operator under test.
+    * WRITE-PATH query (WriteAudit.audited): building the
+    * DataFrame performs the scratch write — the operator under test.
     */
   def q94_zorder_roundtrip(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    val path = pidScratch(s"/tmp/graft_q94_zorder_${ProcessHandle.current().pid()}_${dirSlug(dir)}")
+    val path = scratch("q94-zorder", dir)
     graft.core.ZOrder.writeZOrdered(li, path, Seq("l_orderkey", "l_partkey"), numFiles = 8)
     s.read.parquet(path)
       .where(col("l_orderkey").between(100, 700) && col("l_partkey").between(50, 150))
@@ -5607,12 +5504,12 @@ object Queries {
     * which the oracle states from the SOURCE table. The partition
     * column round-trips through directory names (value → path → value),
     * so any escaping/typing bug breaks the hash. WRITE-PATH query
-    * (PlanAudit.writePathQueries).
+    * (WriteAudit.audited).
     */
   def q133_partitioned_write(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
       .select("doc_id", "lang", "source", "n_chars")
-    val path = pidScratch(s"/tmp/graft_q133_part_${ProcessHandle.current().pid()}_${dirSlug(dir)}")
+    val path = scratch("q133-part", dir)
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     s.read.parquet(path)
       .where(col("lang") === "en")
@@ -5710,276 +5607,6 @@ object Queries {
         array_min(col("embedding")).cast("double").as("min_v"),
         array_max(col("embedding")).cast("double").as("max_v"),
         element_at(array_sort(col("embedding")), 3).cast("double").as("third_smallest"))
-
-  // ================================================================ maps
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_scan" -> (q01_scan _),
-    "q02_filter" -> (q02_filter _),
-    "q03_project_expr" -> (q03_project_expr _),
-    "q04_agg" -> (q04_agg _),
-    "q05_join_opt" -> (q05_join_opt _),
-    "q06_theta_join" -> (q06_theta_join _),
-    "q07_anti_join" -> (q07_anti_join _),
-    "q08_semi_join" -> (q08_semi_join _),
-    "q09_distinct" -> (q09_distinct _),
-    "q10_window" -> (q10_window _),
-    "q11_topk" -> (q11_topk _),
-    "q12_intersect" -> (q12_intersect _),
-    "q13_except" -> (q13_except _),
-    "q14_rollup" -> (q14_rollup _),
-    "q15_scalar_funcs" -> (q15_scalar_funcs _),
-    "q16_date_funcs" -> (q16_date_funcs _),
-    "q17_agg_derived" -> (q17_agg_derived _),
-    "q18_histogram" -> (q18_histogram _),
-    "q20_dedup_exact" -> (q20_dedup_exact _),
-    "q21_dedup_tokenset" -> (q21_dedup_tokenset _),
-    "q22_token_stats" -> (q22_token_stats _),
-    "q23_lang_id" -> (q23_lang_id _),
-    "q24_quality" -> (q24_quality _),
-    "q25_fingerprint" -> (q25_fingerprint _),
-    "q26_minhash" -> (q26_minhash _),
-    "q27_simhash" -> (q27_simhash _),
-    "q28_embed_neardup" -> (q28_embed_neardup _),
-    "q29_ngram_jaccard" -> (q29_ngram_jaccard _),
-    "q30_knn_brute" -> (q30_knn_brute _),
-    "q31_knn_ivf" -> (q31_knn_ivf _),
-    "q32_events_window" -> (q32_events_window _),
-    "q33_asof_join" -> (q33_asof_join _),
-    "q34_sessionize" -> (q34_sessionize _),
-    "q35_multimodal" -> (q35_multimodal _),
-    "q36_json" -> (q36_json _),
-    "q37_txn_visibility" -> (q37_txn_visibility _),
-    "q38_stream_window" -> (q38_stream_window _),
-    "q39_union" -> (q39_union _),
-    "q40_cube" -> (q40_cube _),
-    "q41_grouping_sets" -> (q41_grouping_sets _),
-    "q42_subqueries" -> (q42_subqueries _),
-    "q43_outer_joins" -> (q43_outer_joins _),
-    "q44_conditional_agg" -> (q44_conditional_agg _),
-    "q45_variance" -> (q45_variance _),
-    "q46_range_join" -> (q46_range_join _),
-    "q47_full_outer" -> (q47_full_outer _),
-    "q48_count_distinct" -> (q48_count_distinct _),
-    "q49_edit_distance" -> (q49_edit_distance _),
-    "q50_window_funcs" -> (q50_window_funcs _),
-    "q51_tpch_q1" -> (q51_tpch_q1 _),
-    "q52_tpch_q3" -> (q52_tpch_q3 _),
-    "q53_tpch_q5" -> (q53_tpch_q5 _),
-    "q54_tpch_q6" -> (q54_tpch_q6 _),
-    "q55_tpch_q10" -> (q55_tpch_q10 _),
-    "q56_topk_custom" -> (q56_topk_custom _),
-    "q57_frames" -> (q57_frames _),
-    "q58_explode" -> (q58_explode _),
-    "q59_running_sum" -> (q59_running_sum _),
-    "q60_array_funcs" -> (q60_array_funcs _),
-    "q61_knn_ivf_trained" -> (q61_knn_ivf_trained _),
-    "q62_stream_join" -> (q62_stream_join _),
-    "q65_multimodal_audio" -> (q65_multimodal_audio _),
-    "q66_multimodal_video" -> (q66_multimodal_video _),
-    "q67_decontaminate" -> (q67_decontaminate _),
-    "q68_repetition" -> (q68_repetition _),
-    "q69_tpch_q4" -> (q69_tpch_q4 _),
-    "q70_tpch_q14" -> (q70_tpch_q14 _),
-    "q71_tpch_q19" -> (q71_tpch_q19 _),
-    "q72_tpch_q17" -> (q72_tpch_q17 _),
-    "q73_tpch_q2" -> (q73_tpch_q2 _),
-    "q74_tpch_q7" -> (q74_tpch_q7 _),
-    "q75_tpch_q13" -> (q75_tpch_q13 _),
-    "q76_tpch_q18" -> (q76_tpch_q18 _),
-    "q77_tpch_q22" -> (q77_tpch_q22 _),
-    "q78_tpch_q15" -> (q78_tpch_q15 _),
-    "q79_tpch_q16" -> (q79_tpch_q16 _),
-    "q80_tpch_q21" -> (q80_tpch_q21 _),
-    "q81_merge_upsert" -> (q81_merge_upsert _),
-    "q82_stratified_sample" -> (q82_stratified_sample _),
-    "q83_pack_shards" -> (q83_pack_shards _),
-    "q86_tpch_q8" -> (q86_tpch_q8 _),
-    "q87_tpch_q9" -> (q87_tpch_q9 _),
-    "q88_tpch_q11" -> (q88_tpch_q11 _),
-    "q89_tpch_q12" -> (q89_tpch_q12 _),
-    "q90_tpch_q20" -> (q90_tpch_q20 _),
-    "q91_group_median" -> (q91_group_median _),
-    "q92_stream_enrich" -> (q92_stream_enrich _),
-    "q93_bpeish_tokens" -> (q93_bpeish_tokens _),
-    "q84_ngram_topk" -> (q84_ngram_topk _),
-    "q85_inverted_index" -> (q85_inverted_index _),
-    "q63_stream_sessions" -> (q63_stream_sessions _),
-    "q64_stream_dedup" -> (q64_stream_dedup _),
-    "q94_zorder_roundtrip" -> (q94_zorder_roundtrip _),
-    "q95_sketch_quantiles" -> (q95_sketch_quantiles _),
-    "q96_hll_ndv" -> (q96_hll_ndv _),
-    "q97_corpus_pipeline" -> (q97_corpus_pipeline _),
-    "q98_dup_clusters" -> (q98_dup_clusters _),
-    "q99_mixture_sample" -> (q99_mixture_sample _),
-    "q100_ts_gapfill" -> (q100_ts_gapfill _),
-    "q101_bloom_join" -> (q101_bloom_join _),
-    "q102_pivot_unpivot" -> (q102_pivot_unpivot _),
-    "q103_label_centroids" -> (q103_label_centroids _),
-    "q104_exact_k_sample" -> (q104_exact_k_sample _),
-    "q105_incremental_agg" -> (q105_incremental_agg _),
-    "q106_salted_join" -> (q106_salted_join _),
-    "q107_bucketed_join" -> (q107_bucketed_join _),
-    "q108_centroid_assign" -> (q108_centroid_assign _),
-    "q109_canonical_pick" -> (q109_canonical_pick _),
-    "q110_fuzzy_join" -> (q110_fuzzy_join _),
-    "q111_funnel" -> (q111_funnel _),
-    "q112_heavy_hitters" -> (q112_heavy_hitters _),
-    "q113_pagerank" -> (q113_pagerank _),
-    "q114_pii_scrub" -> (q114_pii_scrub _),
-    "q115_boilerplate" -> (q115_boilerplate _),
-    "q116_band_filter" -> (q116_band_filter _),
-    "q117_window_dedup" -> (q117_window_dedup _),
-    "q118_chunking" -> (q118_chunking _),
-    "q119_int8_quantize" -> (q119_int8_quantize _),
-    "q120_stream_antijoin" -> (q120_stream_antijoin _),
-    "q121_xml_roundtrip" -> (q121_xml_roundtrip _),
-    "q122_ann_recall" -> (q122_ann_recall _),
-    "q123_tfidf" -> (q123_tfidf _),
-    "q124_source_cap" -> (q124_source_cap _),
-    "q125_session_window" -> (q125_session_window _),
-    "q126_txn_timetravel" -> (q126_txn_timetravel _),
-    "q127_stream_session_timeout" -> (q127_stream_session_timeout _),
-    "q128_embed_clusters" -> (q128_embed_clusters _),
-    "q129_asof_forward" -> (q129_asof_forward _),
-    "q130_containment" -> (q130_containment _),
-    "q131_mad_outliers" -> (q131_mad_outliers _),
-    "q132_stream_outer_join" -> (q132_stream_outer_join _),
-    "q133_partitioned_write" -> (q133_partitioned_write _),
-    "q134_json_permissive" -> (q134_json_permissive _),
-    "q135_stream_session_window" -> (q135_stream_session_window _),
-    "q136_oov_filter" -> (q136_oov_filter _),
-    "q137_winnowing" -> (q137_winnowing _),
-    "q138_winnowing_pairs" -> (q138_winnowing_pairs _),
-    "q139_stream_oov_filter" -> (q139_stream_oov_filter _),
-    "q140_pps_sample" -> (q140_pps_sample _),
-    "q141_span_corrupt" -> (q141_span_corrupt _),
-    "q142_unigram_drift" -> (q142_unigram_drift _),
-    "q143_stream_span_corrupt" -> (q143_stream_span_corrupt _),
-    "q144_vocab_encode" -> (q144_vocab_encode _),
-    "q145_interval_overlap" -> (q145_interval_overlap _),
-    "q146_schema_evolution" -> (q146_schema_evolution _),
-    "q147_cosine_pairs" -> (q147_cosine_pairs _),
-    "q148_stream_cdc_merge" -> (q148_stream_cdc_merge _),
-    "q149_temperature_sample" -> (q149_temperature_sample _),
-    "q150_table_diff" -> (q150_table_diff _),
-    "q151_bfs_hops" -> (q151_bfs_hops _),
-    "q152_validate" -> (q152_validate _),
-    "q153_stream_window_ndv" -> (q153_stream_window_ndv _),
-    "q154_epoch_repeat" -> (q154_epoch_repeat _),
-    "q155_hard_negatives" -> (q155_hard_negatives _),
-    "q156_stream_window_topk" -> (q156_stream_window_topk _),
-    "q157_winsorize" -> (q157_winsorize _),
-    "q158_time_decay" -> (q158_time_decay _),
-    "q159_k_anonymity" -> (q159_k_anonymity _),
-    "q160_bitext_candidates" -> (q160_bitext_candidates _),
-    "q161_epoch_order" -> (q161_epoch_order _),
-    "q162_dynamic_pruning" -> (q162_dynamic_pruning _),
-    "q163_time_range_frame" -> (q163_time_range_frame _),
-    "q164_nullsafe_join" -> (q164_nullsafe_join _),
-    "q165_variant" -> (q165_variant _),
-    "q166_lateral_topk" -> (q166_lateral_topk _),
-    "q167_collation" -> (q167_collation _),
-    "q168_gopher_quality" -> (q168_gopher_quality _),
-    "q169_top_bigram" -> (q169_top_bigram _),
-    "q170_listagg" -> (q170_listagg _),
-    "q171_unpivot" -> (q171_unpivot _),
-    "q172_l_diversity" -> (q172_l_diversity _),
-    "q173_domain_stats" -> (q173_domain_stats _),
-    "q174_bm25" -> (q174_bm25 _),
-    "q175_recursive_cte" -> (q175_recursive_cte _),
-    "q176_triangles" -> (q176_triangles _),
-    "q177_pmi_bigrams" -> (q177_pmi_bigrams _),
-    "q178_phrase_search" -> (q178_phrase_search _),
-    "q179_zonemap_prune" -> (q179_zonemap_prune _),
-    "q180_txn_diff" -> (q180_txn_diff _),
-    "q181_attribution" -> (q181_attribution _),
-    "q182_chi2_assoc" -> (q182_chi2_assoc _),
-    "q183_minhash_error" -> (q183_minhash_error _),
-    "q184_skyline" -> (q184_skyline _),
-    "q185_rank_normalize" -> (q185_rank_normalize _),
-    "q186_regression_slope" -> (q186_regression_slope _),
-    "q187_assoc_rules" -> (q187_assoc_rules _),
-    "q188_gdpr_cascade" -> (q188_gdpr_cascade _),
-    "q189_stream_running_totals" -> (q189_stream_running_totals _),
-    "q190_stream_dedup_within" -> (q190_stream_dedup_within _),
-    "q191_observe_metrics" -> (q191_observe_metrics _),
-    "q192_hits" -> (q192_hits _),
-    "q193_stream_warm_start" -> (q193_stream_warm_start _),
-    "q194_cogroup_convert" -> (q194_cogroup_convert _),
-    "q195_repair_roundtrip" -> (q195_repair_roundtrip _),
-    "q196_bloom_fpr" -> (q196_bloom_fpr _),
-    "q197_join_ivm" -> (q197_join_ivm _),
-    "q198_forward_fill" -> (q198_forward_fill _),
-    "q199_time_weighted_avg" -> (q199_time_weighted_avg _),
-    "q200_profile_table" -> (q200_profile_table _),
-    "q201_sliding_window" -> (q201_sliding_window _),
-    "q202_cumulative_ndv" -> (q202_cumulative_ndv _),
-    "q203_cohort_retention" -> (q203_cohort_retention _),
-    "q204_ks_drift" -> (q204_ks_drift _),
-    "q205_bitmask_profile" -> (q205_bitmask_profile _),
-    "q206_set_similarity_join" -> (q206_set_similarity_join _),
-    "q207_scd2_intervals" -> (q207_scd2_intervals _),
-    "q208_weighted_median" -> (q208_weighted_median _),
-    "q209_id_gaps" -> (q209_id_gaps _),
-    "q210_activity_streaks" -> (q210_activity_streaks _),
-    "q211_bag_set_ops" -> (q211_bag_set_ops _),
-    "q212_vocab_coverage" -> (q212_vocab_coverage _),
-    "q213_union_drift" -> (q213_union_drift _),
-    "q214_disorder_metric" -> (q214_disorder_metric _),
-    "q215_ohlc_candles" -> (q215_ohlc_candles _),
-    "q216_wow_growth" -> (q216_wow_growth _),
-    "q217_rolling_wau" -> (q217_rolling_wau _),
-    "q218_try_arithmetic" -> (q218_try_arithmetic _),
-    "q219_r_squared" -> (q219_r_squared _),
-    "q220_stream_lakehouse_sink" -> (q220_stream_lakehouse_sink _),
-    "q221_global_row_number" -> (q221_global_row_number _),
-    "q222_asof_tolerance" -> (q222_asof_tolerance _),
-    "q223_top_k_ties" -> (q223_top_k_ties _),
-    "q224_gini" -> (q224_gini _),
-    "q225_hhi" -> (q225_hhi _),
-    "q226_order_reconciliation" -> (q226_order_reconciliation _),
-    "q227_cohens_kappa" -> (q227_cohens_kappa _),
-    "q228_class_prf" -> (q228_class_prf _),
-    "q229_calendar_spine" -> (q229_calendar_spine _),
-    "q230_max_drawdown" -> (q230_max_drawdown _),
-    "q231_containment_join" -> (q231_containment_join _),
-    "q232_containment_cap" -> (q232_containment_cap _),
-    "q233_fanout_probe" -> (q233_fanout_probe _),
-    "q234_txn_compaction" -> (q234_txn_compaction _),
-    "q235_file_compaction" -> (q235_file_compaction _),
-    "q236_txn_retention" -> (q236_txn_retention _),
-    "q237_stream_watermark_eviction" -> (q237_stream_watermark_eviction _),
-    "q238_stream_session_straggler" -> (q238_stream_session_straggler _))
-
-  /** The STREAMING-tagged queries — an explicit registry, not a name
-    * substring (r13 verdict #7): the bench's stabilization policy
-    * differs for streaming queries (min-of-3 stream medians, excluded
-    * from challenge re-runs — a fourth lifecycle would mix two
-    * policies), and keying that off `name.contains("stream")` was one
-    * honest naming accident away from silently mixing them. Every
-    * query that executes through a streaming sink belongs here;
-    * batch queries never do (q125_session_window uses the
-    * session_window EXPRESSION in batch mode — not streaming).
-    * Membership is validated against [[all]] at first use.
-    */
-  val streamingQueries: Set[String] = {
-    val s = Set(
-      "q38_stream_window", "q62_stream_join", "q63_stream_sessions",
-      "q64_stream_dedup", "q92_stream_enrich", "q120_stream_antijoin",
-      "q127_stream_session_timeout", "q132_stream_outer_join",
-      "q135_stream_session_window", "q139_stream_oov_filter",
-      "q143_stream_span_corrupt", "q148_stream_cdc_merge",
-      "q153_stream_window_ndv", "q156_stream_window_topk",
-      "q189_stream_running_totals", "q190_stream_dedup_within",
-      "q193_stream_warm_start", "q220_stream_lakehouse_sink",
-      "q237_stream_watermark_eviction", "q238_stream_session_straggler")
-    val ghosts = s -- all.keySet
-    require(ghosts.isEmpty,
-      s"streamingQueries names queries that do not exist: $ghosts — " +
-        "fix the registry when renaming a query")
-    s
-  }
 
   // -------------------------------------------------------- oracle SQL
 
@@ -6101,16 +5728,30 @@ object Queries {
          FROM sc) WHERE rn <= 5"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "q01_scan" ->
-      "SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem",
-    "q02_filter" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity < 24 AND l_returnflag = 'R'",
-    "q03_project_expr" ->
+  // ----------------------------------------------------------- registry
+
+  /** One registered query: its builder, the DuckDB SQL that states its
+    * result, and whether it executes through a streaming sink. The bench
+    * keys its stabilization policy off `streaming` (min-of-3 stream
+    * medians, no challenge re-runs), never off a name substring; batch
+    * queries never set it (q125_session_window uses the session_window
+    * EXPRESSION in batch mode).
+    */
+  final case class QuerySpec(name: String,
+      build: (SparkSession, String) => DataFrame, oracle: String,
+      streaming: Boolean = false)
+
+  /** The query surface: adding a query is its `def` plus one row here. */
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_scan", q01_scan,
+      "SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem"),
+    QuerySpec("q02_filter", q02_filter,
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity < 24 AND l_returnflag = 'R'"),
+    QuerySpec("q03_project_expr", q03_project_expr,
       s"""SELECT l_orderkey, l_linenumber,
          ${centsSql("l_extendedprice*(1-l_discount)")} AS revenue_c,
-         ${centsSql("l_extendedprice*l_tax")} AS tax_c FROM lineitem""",
-    "q04_agg" ->
+         ${centsSql("l_extendedprice*l_tax")} AS tax_c FROM lineitem"""),
+    QuerySpec("q04_agg", q04_agg,
       s"""SELECT l_returnflag, l_linestatus,
          CAST(sum(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_c,
          CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_c,
@@ -6118,89 +5759,89 @@ object Queries {
          min(${centsSql("l_extendedprice")}) AS min_price_c,
          max(${centsSql("l_extendedprice")}) AS max_price_c,
          count(*) AS n
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q05_join_opt" ->
+         FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
+    QuerySpec("q05_join_opt", q05_join_opt,
       s"""SELECT n_name, count(*) AS n,
          CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT) AS revenue_c
          FROM lineitem, orders, customer, nation
          WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
            AND c_nationkey = n_nationkey AND l_quantity < 24
-         GROUP BY n_name""",
-    "q06_theta_join" ->
-      "SELECT a.r_name AS r1, b.r_name AS r2 FROM region a JOIN region b ON a.r_regionkey < b.r_regionkey",
-    "q07_anti_join" ->
-      "SELECT c_custkey FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)",
-    "q08_semi_join" ->
-      "SELECT c_custkey FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)",
-    "q09_distinct" ->
-      "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer",
-    "q10_window" ->
+         GROUP BY n_name"""),
+    QuerySpec("q06_theta_join", q06_theta_join,
+      "SELECT a.r_name AS r1, b.r_name AS r2 FROM region a JOIN region b ON a.r_regionkey < b.r_regionkey"),
+    QuerySpec("q07_anti_join", q07_anti_join,
+      "SELECT c_custkey FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)"),
+    QuerySpec("q08_semi_join", q08_semi_join,
+      "SELECT c_custkey FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)"),
+    QuerySpec("q09_distinct", q09_distinct,
+      "SELECT DISTINCT c_mktsegment, c_nationkey FROM customer"),
+    QuerySpec("q10_window", q10_window,
       """SELECT o_custkey, o_orderkey, rn FROM (
          SELECT o_custkey, o_orderkey,
                 row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-         FROM orders) WHERE rn <= 3""",
-    "q11_topk" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10",
-    "q12_intersect" ->
-      "SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING' INTERSECT SELECT o_custkey AS k FROM orders",
-    "q13_except" ->
-      "SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING' EXCEPT SELECT o_custkey AS k FROM orders WHERE o_totalprice > 400000",
-    "q14_rollup" ->
-      "SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)",
-    "q15_scalar_funcs" ->
+         FROM orders) WHERE rn <= 3"""),
+    QuerySpec("q11_topk", q11_topk,
+      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"),
+    QuerySpec("q12_intersect", q12_intersect,
+      "SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING' INTERSECT SELECT o_custkey AS k FROM orders"),
+    QuerySpec("q13_except", q13_except,
+      "SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING' EXCEPT SELECT o_custkey AS k FROM orders WHERE o_totalprice > 400000"),
+    QuerySpec("q14_rollup", q14_rollup,
+      "SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"),
+    QuerySpec("q15_scalar_funcs", q15_scalar_funcs,
       """SELECT p_partkey, upper(p_brand) AS brand_u,
          CAST(length(p_name) AS BIGINT) AS name_len,
          substring(p_type, 1, 5) AS type5,
          p_brand || '#' || p_type AS bt,
          abs(p_size - 25) AS size_dist,
-         p_size % 7 AS size_mod FROM part""",
-    "q16_date_funcs" ->
+         p_size % 7 AS size_mod FROM part"""),
+    QuerySpec("q16_date_funcs", q16_date_funcs,
       """SELECT o_orderkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
          CAST(month(o_orderdate) AS BIGINT) AS mo,
          CAST(day(o_orderdate) AS BIGINT) AS dom,
-         date_trunc('month', o_orderdate) AS month_start FROM orders""",
-    "q17_agg_derived" ->
+         date_trunc('month', o_orderdate) AS month_start FROM orders"""),
+    QuerySpec("q17_agg_derived", q17_agg_derived,
       s"""SELECT o_orderpriority, n, sum_price_c, min_price, max_price,
          CAST(sum_price_c AS DOUBLE)/100/n AS avg_price FROM (
            SELECT o_orderpriority, count(*) AS n,
              CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS sum_price_c,
              min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
-           FROM orders GROUP BY o_orderpriority)""",
-    "q18_histogram" ->
+           FROM orders GROUP BY o_orderpriority)"""),
+    QuerySpec("q18_histogram", q18_histogram,
       """WITH s AS (SELECT min(p_size) AS mn, max(p_size) AS mx FROM part)
          SELECT CAST(least(CAST(floor((p_size - mn)/greatest(1.0, (1.0 + mx - mn)/100)) AS BIGINT), 99) AS BIGINT) AS bucket,
                 count(*) AS cnt
-         FROM part, s GROUP BY 1""",
-    "q20_dedup_exact" ->
-      "SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM documents GROUP BY text",
-    "q21_dedup_tokenset" ->
+         FROM part, s GROUP BY 1"""),
+    QuerySpec("q20_dedup_exact", q20_dedup_exact,
+      "SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM documents GROUP BY text"),
+    QuerySpec("q21_dedup_tokenset", q21_dedup_tokenset,
       """SELECT CAST(min(doc_id) AS BIGINT) AS doc_id, count(*) AS n_dups
-         FROM documents GROUP BY list_sort(list_distinct(string_split(text, ' ')))""",
-    "q22_token_stats" ->
+         FROM documents GROUP BY list_sort(list_distinct(string_split(text, ' ')))"""),
+    QuerySpec("q22_token_stats", q22_token_stats,
       s"""SELECT doc_id, $tokCountSql AS n_tokens,
          CAST(length(replace(text, ' ', '')) AS DOUBLE) / $tokCountSql AS mean_tok_len,
          CAST($stopSumSql AS DOUBLE) / $tokCountSql AS stop_ratio
-         FROM documents""",
-    "q23_lang_id" -> {
+         FROM documents"""),
+    QuerySpec("q23_lang_id", q23_lang_id, {
       val scoreCols = TextAnalysis.langMarkers.map { case (l, _) =>
         s"${langScoreSql(l)} AS s_$l"
       }.mkString(", ")
       s"""SELECT doc_id, lang, $langCaseSql AS lang_pred FROM (
          SELECT doc_id, lang, $scoreCols FROM documents)"""
-    },
-    "q24_quality" ->
+    }),
+    QuerySpec("q24_quality", q24_quality,
       s"""SELECT doc_id, $qualitySql AS quality
-         FROM documents""",
-    "q25_fingerprint" ->
+         FROM documents"""),
+    QuerySpec("q25_fingerprint", q25_fingerprint,
       """SELECT doc_id,
          list_reduce(
            list_prepend(CAST(0 AS BIGINT),
              list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
            (acc, c) -> (acc*31 + c) % 1000000007) AS fp
-         FROM documents""",
+         FROM documents"""),
     // Recall invariant: Spark emits (exact pairs ≥ 0.5) ∩ (LSH candidates);
     // the oracle states the full exact pair set. Equal iff LSH recall = 1.
-    "q26_minhash" ->
+    QuerySpec("q26_minhash", q26_minhash,
       """WITH sh AS (
            SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
@@ -6212,14 +5853,14 @@ object Queries {
              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5""",
+             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5"""),
     // Pigeonhole identity: banded and brute-force SimHash pair sets must
     // not disagree — the oracle states the symmetric difference is empty.
-    "q27_simhash" ->
+    QuerySpec("q27_simhash", q27_simhash,
       """SELECT CAST(NULL AS BIGINT) AS id_a, CAST(NULL AS BIGINT) AS id_b,
                 CAST(NULL AS BIGINT) AS hamming
-         WHERE FALSE""",
-    "q28_embed_neardup" -> {
+         WHERE FALSE"""),
+    QuerySpec("q28_embed_neardup", q28_embed_neardup, {
       val dot = dotSql("va", "vb")
       val na = dotSql("va", "va"); val nb = dotSql("vb", "vb")
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -6229,10 +5870,10 @@ object Queries {
          FROM (SELECT vec_id, v AS va FROM e) a
          JOIN (SELECT vec_id, v AS vb FROM e) b ON a.vec_id < b.vec_id
          WHERE ($dot)/(sqrt($na)*sqrt($nb)) >= 0.45"""
-    },
+    }),
     // q28's pair predicate + recursive closure; every capped vec appears,
     // isolated ones as their own component (componentsFor contract)
-    "q128_embed_clusters" -> {
+    QuerySpec("q128_embed_clusters", q128_embed_clusters, {
       val dot = dotSql("va", "vb")
       val na = dotSql("va", "va"); val nb = dotSql("vb", "vb")
       s"""WITH RECURSIVE
@@ -6252,9 +5893,9 @@ object Queries {
                 CAST(CASE WHEN component = id THEN 1 ELSE 0 END AS BIGINT)
                   AS is_canonical
          FROM comp"""
-    },
+    }),
     // forward as-of replayed as min-aggs (q33's shape with >= and min)
-    "q129_asof_forward" ->
+    QuerySpec("q129_asof_forward", q129_asof_forward,
       """WITH c AS (SELECT event_id, user_id, ts FROM events
                     WHERE event_type = 'click'),
          p AS (SELECT event_id AS p_event, user_id AS p_user, ts AS p_ts
@@ -6268,10 +5909,10 @@ object Queries {
          FROM c
          JOIN m ON m.event_id = c.event_id
          JOIN p ON p.p_user = c.user_id AND p.p_ts = m.next_ts
-         GROUP BY c.event_id, c.user_id, m.next_ts""",
+         GROUP BY c.event_id, c.user_id, m.next_ts"""),
     // asymmetric containment |A∩B|/|A| — integer-cardinality quotient,
     // bit-identical cross-engine; shingle CTE shared with q26's form
-    "q130_containment" ->
+    QuerySpec("q130_containment", q130_containment,
       """WITH sh AS (
            SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
@@ -6282,10 +5923,10 @@ object Queries {
                 CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s)
                   AS containment
          FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
-         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.6""",
+         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) >= 0.6"""),
     // doubled-median MAD gate: every percentile input is BIGINT (the
     // q91 parity class); 2*med is exact once rounded
-    "q131_mad_outliers" ->
+    QuerySpec("q131_mad_outliers", q131_mad_outliers,
       s"""WITH o AS (SELECT o_orderkey, o_orderpriority,
                   ${centsSql("o_totalprice")} AS price_c FROM orders),
          med AS (SELECT o_orderpriority,
@@ -6298,8 +5939,8 @@ object Queries {
                  GROUP BY o.o_orderpriority)
          SELECT o_orderkey, o_orderpriority, price_c
          FROM o JOIN mad USING (o_orderpriority)
-         WHERE CAST(abs(2*price_c - m2) AS DOUBLE) > 2.0 * mad_x2""",
-    "q29_ngram_jaccard" ->
+         WHERE CAST(abs(2*price_c - m2) AS DOUBLE) > 2.0 * mad_x2"""),
+    QuerySpec("q29_ngram_jaccard", q29_ngram_jaccard,
       """WITH sh AS (
            SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
@@ -6311,12 +5952,12 @@ object Queries {
              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jaccard
          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.3""",
-    "q30_knn_brute" -> knnOracleSql,
-    "q31_knn_ivf" -> knnOracleSql,
+             / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.3"""),
+    QuerySpec("q30_knn_brute", q30_knn_brute, knnOracleSql),
+    QuerySpec("q31_knn_ivf", q31_knn_ivf, knnOracleSql),
     // knn oracle with the label-mismatch predicate; rank-only output so
     // no float crosses the compare
-    "q155_hard_negatives" -> {
+    QuerySpec("q155_hard_negatives", q155_hard_negatives, {
       val dot = dotSql("qv", "cv")
       val na = dotSql("qv", "qv"); val nb = dotSql("cv", "cv")
       s"""WITH q AS (SELECT vec_id AS query_id,
@@ -6334,19 +5975,19 @@ object Queries {
                   row_number() OVER (PARTITION BY query_id
                     ORDER BY cos DESC, neighbor_id) AS rn
            FROM sc) WHERE rn <= 3"""
-    },
-    "q61_knn_ivf_trained" -> knnOracleSql,
-    "q62_stream_join" ->
+    }),
+    QuerySpec("q61_knn_ivf_trained", q61_knn_ivf_trained, knnOracleSql),
+    QuerySpec("q62_stream_join", q62_stream_join,
       """SELECT a.user_id AS l_user, a.ts AS l_ts, a.event_id AS l_event,
                 b.ts AS r_ts, b.event_id AS r_event
          FROM events a JOIN events b
            ON a.user_id = b.user_id AND a.event_id < b.event_id
-          AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 15 MINUTE""",
+          AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 15 MINUTE""", streaming = true),
     // matched rows = the batch left join's inner part (watermark 0 in
     // the data batch drops nothing); null rows = unmatched lefts whose
     // state value watermark l_ts + 15min (ms) sits strictly below the
     // final ms-floored watermark max(ts) - 30min — the eviction moment
-    "q132_stream_outer_join" ->
+    QuerySpec("q132_stream_outer_join", q132_stream_outer_join,
       """WITH ev AS (SELECT * FROM events WHERE user_id % 3 = 0),
          wm AS (SELECT (epoch_us(max(ts)) // 1000) - 1800000 AS w
                 FROM ev),
@@ -6359,8 +6000,8 @@ object Queries {
          SELECT l_user, l_ts, l_event, r_ts, r_event
          FROM cand CROSS JOIN wm
          WHERE r_event IS NOT NULL
-            OR (epoch_us(l_ts) // 1000) + 900000 < wm.w""",
-    "q63_stream_sessions" ->
+            OR (epoch_us(l_ts) // 1000) + 900000 < wm.w""", streaming = true),
+    QuerySpec("q63_stream_sessions", q63_stream_sessions,
       """WITH x AS (
            SELECT user_id, ts, event_id,
                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
@@ -6382,13 +6023,13 @@ object Queries {
            FROM z GROUP BY user_id, sid)
          SELECT user_id, s_start, s_end, n_events
          FROM se
-         WHERE sid < (SELECT max(sid) FROM se s2 WHERE s2.user_id = se.user_id)""",
-    "q64_stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type, ts FROM events",
+         WHERE sid < (SELECT max(sid) FROM se s2 WHERE s2.user_id = se.user_id)""", streaming = true),
+    QuerySpec("q64_stream_dedup", q64_stream_dedup,
+      "SELECT DISTINCT user_id, event_type, ts FROM events", streaming = true),
     // q63's session chain + the timeout population: last sessions whose
     // ceil-ms timeout (end + gap) sits strictly below the ms-floored
     // final watermark (max ts - lateness) — Spark's exact boundary rule
-    "q127_stream_session_timeout" ->
+    QuerySpec("q127_stream_session_timeout", q127_stream_session_timeout,
       """WITH x AS (
            SELECT user_id, ts, event_id,
                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
@@ -6412,22 +6053,22 @@ object Queries {
          SELECT user_id, s_start, s_end, n_events
          FROM se CROSS JOIN wm
          WHERE sid < (SELECT max(sid) FROM se s2 WHERE s2.user_id = se.user_id)
-            OR ((epoch_us(s_end) + 1800000000 + 999) // 1000) < wm.w""",
-    "q65_multimodal_audio" ->
+            OR ((epoch_us(s_end) + 1800000000 + 999) // 1000) < wm.w""", streaming = true),
+    QuerySpec("q65_multimodal_audio", q65_multimodal_audio,
       """SELECT CAST(doc_id AS BIGINT) AS media_id, 'wav' AS format,
          CAST(44 AS BIGINT) AS n_bytes,
          CAST(8000 + (doc_id % 8) * 1000 AS INTEGER) AS sample_rate,
          CAST(1 + doc_id % 2 AS INTEGER) AS channels, 16 AS bits,
          CAST(100 + (doc_id * 13) % 900 AS BIGINT) AS n_samples
-         FROM documents""",
-    "q66_multimodal_video" ->
+         FROM documents"""),
+    QuerySpec("q66_multimodal_video", q66_multimodal_video,
       """SELECT CAST(doc_id AS BIGINT) AS media_id, 'mp4' AS format,
          CAST(232 AS BIGINT) AS n_bytes,
          CAST(16 + doc_id % 1920 AS INTEGER) AS width,
          CAST(16 + (doc_id * 3) % 1080 AS INTEGER) AS height,
          CAST(1000 + doc_id % 60000 AS BIGINT) AS duration_ms
-         FROM documents""",
-    "q67_decontaminate" ->
+         FROM documents"""),
+    QuerySpec("q67_decontaminate", q67_decontaminate,
       """WITH sh AS (
            SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
@@ -6437,16 +6078,16 @@ object Queries {
          corpus AS (SELECT doc_id, u.g FROM sh, unnest(sh.s) AS u(g) WHERE doc_id >= 20)
          SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_overlap
          FROM corpus c JOIN bench b ON c.g = b.g
-         GROUP BY c.doc_id""",
-    "q69_tpch_q4" ->
+         GROUP BY c.doc_id"""),
+    QuerySpec("q69_tpch_q4", q69_tpch_q4,
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
            AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
            AND EXISTS (SELECT 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-         GROUP BY o_orderpriority""",
-    "q70_tpch_q14" -> {
+         GROUP BY o_orderpriority"""),
+    QuerySpec("q70_tpch_q14", q70_tpch_q14, {
       val rev = centsSql("l_extendedprice*(1-l_discount)")
       s"""SELECT
          CAST(sum(CASE WHEN p_type = 'PROMO' THEN $rev ELSE 0 END) AS BIGINT) AS promo_c,
@@ -6457,8 +6098,8 @@ object Queries {
          WHERE l_partkey = p_partkey
            AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'"""
-    },
-    "q71_tpch_q19" ->
+    }),
+    QuerySpec("q71_tpch_q19", q71_tpch_q19,
       s"""SELECT coalesce(CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT), 0) AS revenue_c,
          CAST(count(*) AS BIGINT) AS n
          FROM lineitem, part
@@ -6466,8 +6107,8 @@ object Queries {
            (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
               AND l_quantity BETWEEN 1 AND 25) OR
            (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-              AND l_quantity BETWEEN 10 AND 40))""",
-    "q72_tpch_q17" ->
+              AND l_quantity BETWEEN 10 AND 40))"""),
+    QuerySpec("q72_tpch_q17", q72_tpch_q17,
       s"""SELECT coalesce(CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT), 0) AS sum_price_c,
          CAST(count(*) AS BIGINT) AS n
          FROM lineitem l, part p,
@@ -6475,8 +6116,8 @@ object Queries {
             FROM lineitem GROUP BY l_partkey) a
          WHERE l.l_partkey = p.p_partkey AND p.p_brand = 'Brand#3'
            AND l.l_partkey = a.ap_partkey
-           AND l.l_quantity < a.qty_threshold""",
-    "q73_tpch_q2" ->
+           AND l.l_quantity < a.qty_threshold"""),
+    QuerySpec("q73_tpch_q2", q73_tpch_q2,
       s"""WITH ps AS (SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
             FROM lineitem)
          SELECT p_partkey, s_suppkey, s_name,
@@ -6485,8 +6126,8 @@ object Queries {
          WHERE p_partkey = ps_partkey AND s_suppkey = ps_suppkey AND p_size = 10
            AND s_acctbal = (SELECT min(s2.s_acctbal) FROM ps ps2, supplier s2
                             WHERE ps2.ps_partkey = p_partkey
-                              AND s2.s_suppkey = ps2.ps_suppkey)""",
-    "q74_tpch_q7" ->
+                              AND s2.s_suppkey = ps2.ps_suppkey)"""),
+    QuerySpec("q74_tpch_q7", q74_tpch_q7,
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                 CAST(date_part('year', l_shipdate) AS BIGINT) AS l_year,
                 CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT) AS revenue_c
@@ -6498,23 +6139,23 @@ object Queries {
                 (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
            AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-         GROUP BY 1, 2, 3""",
-    "q75_tpch_q13" ->
+         GROUP BY 1, 2, 3"""),
+    QuerySpec("q75_tpch_q13", q75_tpch_q13,
       """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
            SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
            FROM customer LEFT JOIN orders
              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
            GROUP BY c_custkey)
-         GROUP BY c_count""",
-    "q76_tpch_q18" ->
+         GROUP BY c_count"""),
+    QuerySpec("q76_tpch_q18", q76_tpch_q18,
       s"""SELECT c_custkey, c_name, o_orderkey, o_orderdate,
                 ${centsSql("o_totalprice")} AS totalprice_c,
                 CAST(sum(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_c
          FROM customer, orders, lineitem
          WHERE c_custkey = o_custkey AND o_orderkey = l_orderkey
          GROUP BY c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice
-         HAVING sum(${centsSql("l_quantity")}) > 25000""",
-    "q77_tpch_q22" ->
+         HAVING sum(${centsSql("l_quantity")}) > 25000"""),
+    QuerySpec("q77_tpch_q22", q77_tpch_q22,
       s"""SELECT c_nationkey, CAST(count(*) AS BIGINT) AS numcust,
                 CAST(sum(${centsSql("c_acctbal")}) AS BIGINT) AS totacctbal_c
          FROM customer c
@@ -6524,8 +6165,8 @@ object Queries {
            AND NOT EXISTS (SELECT 1 FROM orders
                            WHERE o_custkey = c.c_custkey
                              AND o_orderpriority = '1-URGENT')
-         GROUP BY c_nationkey""",
-    "q78_tpch_q15" ->
+         GROUP BY c_nationkey"""),
+    QuerySpec("q78_tpch_q15", q78_tpch_q15,
       s"""WITH rev AS (
            SELECT l_suppkey,
                   CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT) AS total_rev_c
@@ -6536,15 +6177,15 @@ object Queries {
          SELECT s_suppkey, s_name, total_rev_c
          FROM supplier, rev
          WHERE s_suppkey = l_suppkey
-           AND total_rev_c = (SELECT max(total_rev_c) FROM rev)""",
-    "q79_tpch_q16" ->
+           AND total_rev_c = (SELECT max(total_rev_c) FROM rev)"""),
+    QuerySpec("q79_tpch_q16", q79_tpch_q16,
       """SELECT p_brand, p_size, CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
          FROM lineitem, part
          WHERE p_partkey = l_partkey
            AND p_brand <> 'Brand#1' AND p_type <> 'PROMO'
            AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-         GROUP BY p_brand, p_size""",
-    "q80_tpch_q21" ->
+         GROUP BY p_brand, p_size"""),
+    QuerySpec("q80_tpch_q21", q80_tpch_q21,
       """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
          FROM supplier, lineitem l1, orders
          WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -6557,8 +6198,8 @@ object Queries {
                            WHERE l3.l_orderkey = l1.l_orderkey
                              AND l3.l_suppkey <> l1.l_suppkey
                              AND l3.l_shipdate > o_orderdate + INTERVAL 90 DAY)
-         GROUP BY s_name""",
-    "q81_merge_upsert" ->
+         GROUP BY s_name"""),
+    QuerySpec("q81_merge_upsert", q81_merge_upsert,
       s"""WITH changes AS (
            SELECT o_orderkey, o_custkey, o_orderstatus,
                   o_totalprice + 10 AS o_totalprice,
@@ -6579,22 +6220,22 @@ object Queries {
            FROM all_rows)
          SELECT o_orderkey, o_custkey, o_orderstatus,
                 ${centsSql("o_totalprice")} AS price_c
-         FROM ranked WHERE rn = 1 AND (op IS NULL OR op <> 'D')""",
-    "q82_stratified_sample" ->
+         FROM ranked WHERE rn = 1 AND (op IS NULL OR op <> 'D')"""),
+    QuerySpec("q82_stratified_sample", q82_stratified_sample,
       """SELECT doc_id, lang,
                 ((doc_id % 1000000000) * 2654435761) % 10000 AS bucket
          FROM documents
          WHERE ((doc_id % 1000000000) * 2654435761) % 10000 <
                CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2500
-                         WHEN 'zh' THEN 1000 ELSE -1 END""",
-    "q83_pack_shards" ->
+                         WHEN 'zh' THEN 1000 ELSE -1 END"""),
+    QuerySpec("q83_pack_shards", q83_pack_shards,
       s"""SELECT doc_id, lang, n_tokens,
                 CAST(coalesce(sum(n_tokens) OVER (
                   PARTITION BY lang ORDER BY doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 1000
                   AS BIGINT) AS shard_id
-         FROM (SELECT doc_id, lang, $tokCountSql AS n_tokens FROM documents)""",
-    "q86_tpch_q8" -> {
+         FROM (SELECT doc_id, lang, $tokCountSql AS n_tokens FROM documents)"""),
+    QuerySpec("q86_tpch_q8", q86_tpch_q8, {
       val rev = centsSql("l_extendedprice*(1-l_discount)")
       s"""SELECT CAST(date_part('year', o_orderdate) AS BIGINT) AS o_year,
                 CAST(sum(CASE WHEN n2.n_name = 'NATION_1' THEN $rev ELSE 0 END) AS BIGINT) AS nation_rev_c,
@@ -6611,8 +6252,8 @@ object Queries {
            AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
          GROUP BY 1"""
-    },
-    "q87_tpch_q9" ->
+    }),
+    QuerySpec("q87_tpch_q9", q87_tpch_q9,
       s"""SELECT n_name AS nation,
                 CAST(date_part('year', o_orderdate) AS BIGINT) AS o_year,
                 CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}
@@ -6621,16 +6262,16 @@ object Queries {
          WHERE l_partkey = p_partkey AND l_suppkey = s_suppkey
            AND l_orderkey = o_orderkey AND s_nationkey = n_nationkey
            AND p_name LIKE '%bolt%'
-         GROUP BY 1, 2""",
-    "q88_tpch_q11" ->
+         GROUP BY 1, 2"""),
+    QuerySpec("q88_tpch_q11", q88_tpch_q11,
       s"""WITH v AS (
            SELECT l_partkey, CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT) AS val_c
            FROM lineitem, supplier
            WHERE l_suppkey = s_suppkey AND s_nationkey = 3
            GROUP BY l_partkey)
          SELECT l_partkey, val_c FROM v
-         WHERE val_c > (SELECT sum(val_c) // 500 FROM v)""",
-    "q89_tpch_q12" ->
+         WHERE val_c > (SELECT sum(val_c) // 500 FROM v)"""),
+    QuerySpec("q89_tpch_q12", q89_tpch_q12,
       """SELECT l_returnflag,
                 CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                               THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -6641,8 +6282,8 @@ object Queries {
            AND l_shipdate > o_orderdate + INTERVAL 60 DAY
            AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY l_returnflag""",
-    "q90_tpch_q20" ->
+         GROUP BY l_returnflag"""),
+    QuerySpec("q90_tpch_q20", q90_tpch_q20,
       s"""WITH lw AS (
            SELECT l_partkey, l_suppkey, ${centsSql("l_quantity")} AS q_c
            FROM lineitem
@@ -6658,34 +6299,34 @@ object Queries {
          WHERE s_nationkey = 5 AND s_suppkey = ps.l_suppkey
            AND ps.l_partkey = tot.l_partkey
            AND tot.n_sup >= 2 AND ps.sq_c * 2 > tot.tq_c
-         GROUP BY s_suppkey, s_name""",
-    "q92_stream_enrich" ->
+         GROUP BY s_suppkey, s_name"""),
+    QuerySpec("q92_stream_enrich", q92_stream_enrich,
       s"""SELECT c_mktsegment, count(*) AS n,
                 CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_value_c
          FROM events JOIN customer ON user_id = c_custkey
-         GROUP BY c_mktsegment""",
-    "q120_stream_antijoin" ->
+         GROUP BY c_mktsegment""", streaming = true),
+    QuerySpec("q120_stream_antijoin", q120_stream_antijoin,
       s"""SELECT user_id, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_value_c
          FROM events e
          WHERE NOT EXISTS
            (SELECT 1 FROM customer
             WHERE c_custkey % 3 = 0 AND c_custkey = e.user_id)
-         GROUP BY user_id""",
+         GROUP BY user_id""", streaming = true),
     // the oracle reads the SOURCE table: the XML round-trip must be the
     // identity on rows
-    "q121_xml_roundtrip" ->
+    QuerySpec("q121_xml_roundtrip", q121_xml_roundtrip,
       s"""SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(${centsSql("c_acctbal")}) AS BIGINT) AS sum_acctbal_c,
                 min(c_custkey) AS min_key, max(c_custkey) AS max_key
-         FROM customer GROUP BY c_mktsegment""",
+         FROM customer GROUP BY c_mktsegment"""),
     // recall contract honored == empty violation set (q95/q96 pattern)
-    "q122_ann_recall" ->
+    QuerySpec("q122_ann_recall", q122_ann_recall,
       """SELECT CAST(NULL AS BIGINT) AS query_id, CAST(NULL AS DOUBLE) AS recall
-         WHERE FALSE""",
+         WHERE FALSE"""),
     // exact fixed-point idf, tf·idf in HUGEINT (the decimal rule), top
     // term per doc by (score desc, token asc)
-    "q123_tfidf" ->
+    QuerySpec("q123_tfidf", q123_tfidf,
       """WITH tk AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS token
            FROM documents),
@@ -6703,19 +6344,19 @@ object Queries {
          FROM (SELECT doc_id, token, score,
                       row_number() OVER (PARTITION BY doc_id
                                          ORDER BY score DESC, token) AS rn
-               FROM scored) WHERE rn = 1""",
+               FROM scored) WHERE rn = 1"""),
     // top-25 quality docs per source, ties doc_id asc (quality formula
     // bit-parity proven by q24)
-    "q124_source_cap" ->
+    QuerySpec("q124_source_cap", q124_source_cap,
       s"""SELECT source, doc_id, quality FROM (
            SELECT source, doc_id, $qualitySql AS quality,
                   row_number() OVER (PARTITION BY source
                                      ORDER BY $qualitySql DESC, doc_id) AS rn
-           FROM documents) WHERE rn <= 25""",
+           FROM documents) WHERE rn <= 25"""),
     // native session_window merges INCLUSIVELY at the gap boundary
     // (pinned by OperatorsSpec), so the new-session flag is diff > gap —
     // identical to q34's custom rule; end = last ts + gap
-    "q125_session_window" ->
+    QuerySpec("q125_session_window", q125_session_window,
       """WITH x AS (
            SELECT user_id, ts, event_id,
                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
@@ -6734,12 +6375,12 @@ object Queries {
          SELECT user_id, min(ts) AS s_start,
                 max(ts) + INTERVAL 30 MINUTE AS s_end,
                 CAST(count(*) AS BIGINT) AS n_events
-         FROM z GROUP BY user_id, sid""",
+         FROM z GROUP BY user_id, sid"""),
     // q125's inclusive-gap session chain + the append-mode emission
     // population: sessions whose µs end (last ts + gap) sits at-or-below
     // the ms-floored final watermark × 1000 — the INCLUSIVE <= pinned by
     // StreamingSpec (vs q127's strict < timeout rule)
-    "q135_stream_session_window" ->
+    QuerySpec("q135_stream_session_window", q135_stream_session_window,
       """WITH x AS (
            SELECT user_id, ts, event_id,
                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
@@ -6765,18 +6406,18 @@ object Queries {
                 FROM events)
          SELECT user_id, s_start, s_end, n_events
          FROM se CROSS JOIN wm
-         WHERE epoch_us(s_last) + 1800000000 <= wm.w_us""",
+         WHERE epoch_us(s_last) + 1800000000 <= wm.w_us""", streaming = true),
     // vocab = tokens in >= 10% of docs; n_oov counts occurrences (with
     // multiplicity) outside it; survivors pass n_oov*50 <= n_tokens
-    "q136_oov_filter" -> oovOracleSql,
+    QuerySpec("q136_oov_filter", q136_oov_filter, oovOracleSql),
     // the streaming at-ingest form computes the SAME relation (static
     // vocab, stateless per-batch filter), so it shares q136's oracle —
     // which also pins the Spark-side regexp_count formulation against
     // the explode-join arithmetic
-    "q139_stream_oov_filter" -> oovOracleSql,
+    QuerySpec("q139_stream_oov_filter", q139_stream_oov_filter, oovOracleSql, streaming = true),
     // exclusive per-lang prefix sums + exact cross-multiplied systematic
     // boundaries: keep iff (k*(cum+w)) // tot > (k*cum) // tot, k=25
-    "q140_pps_sample" ->
+    QuerySpec("q140_pps_sample", q140_pps_sample,
       s"""WITH d AS (
             SELECT doc_id, lang, $tokCountSql AS n_tokens FROM documents),
           c AS (
@@ -6786,17 +6427,17 @@ object Queries {
                    sum(n_tokens) OVER (PARTITION BY lang) AS tot
             FROM d)
           SELECT doc_id, lang, n_tokens FROM c
-          WHERE (25 * (cum + n_tokens)) // tot > (25 * cum) // tot""",
+          WHERE (25 * (cum + n_tokens)) // tot > (25 * cum) // tot"""),
     // deterministic span corruption: identical (doc_id, span) mix, span
     // width 3, 1-in-5 masked; string_agg(ORDER BY i) skips NULLs exactly
     // like Spark's array_join over a transform that yields them
-    "q141_span_corrupt" -> spanCorruptOracleSql,
+    QuerySpec("q141_span_corrupt", q141_span_corrupt, spanCorruptOracleSql),
     // streaming at-ingest variant of q141 — per-row deterministic map, so
     // the batch oracle is the authority (the q139/q120 pattern)
-    "q143_stream_span_corrupt" -> spanCorruptOracleSql,
+    QuerySpec("q143_stream_span_corrupt", q143_stream_span_corrupt, spanCorruptOracleSql, streaming = true),
     // exact cross-multiplied total-variation drift per source; sums cast
     // back to BIGINT (DuckDB widens to HUGEINT)
-    "q142_unigram_drift" ->
+    QuerySpec("q142_unigram_drift", q142_unigram_drift,
       """WITH tk AS (
            SELECT source AS g, unnest(string_split(text, ' ')) AS tok
            FROM documents),
@@ -6818,10 +6459,10 @@ object Queries {
                 t_g AS n_group, t_all AS n_total,
                 (500 * (main + t_g * (t_all - present))) // (t_g * t_all)
                   AS tv_permille
-         FROM agg""",
+         FROM agg"""),
     // identical (count DESC, token ASC) vocabulary rank; position order
     // restored via ordered string_agg on both sides
-    "q144_vocab_encode" ->
+    QuerySpec("q144_vocab_encode", q144_vocab_encode,
       """WITH tk AS (
            SELECT doc_id,
                   unnest(string_split(text, ' ')) AS tok,
@@ -6833,10 +6474,10 @@ object Queries {
            FROM cnt)
          SELECT doc_id, count(*) AS n_tokens,
                 string_agg(CAST(tid AS VARCHAR), ' ' ORDER BY pos) AS ids
-         FROM tk JOIN vocab USING (tok) GROUP BY doc_id""",
+         FROM tk JOIN vocab USING (tok) GROUP BY doc_id"""),
     // the oracle states overlap directly as an inequality join — tiny at
     // verify SF; the Spark side is the grid-bucketed rewrite
-    "q145_interval_overlap" ->
+    QuerySpec("q145_interval_overlap", q145_interval_overlap,
       """WITH a AS (
            SELECT event_id AS a_id,
                   CAST(floor(epoch(ts)) AS BIGINT) AS s_a,
@@ -6849,11 +6490,11 @@ object Queries {
            FROM events WHERE event_type = 'purchase')
          SELECT a_id, count(*) AS n_overlap, min(b_id) AS first_b
          FROM a JOIN b ON s_a <= e_b AND s_b <= e_a
-         GROUP BY a_id""",
+         GROUP BY a_id"""),
     // same near-dup overlay (copies at doc_id + 2^40 with a df-2 pairing
     // token), same df cap, same pair accumulation, same squared
     // cross-multiplied threshold — integer-exact in both engines
-    "q147_cosine_pairs" ->
+    QuerySpec("q147_cosine_pairs", q147_cosine_pairs,
       """WITH aug AS (
            SELECT doc_id,
                   text || ' pt' || CAST(doc_id AS VARCHAR) AS text
@@ -6886,18 +6527,18 @@ object Queries {
          FROM pairs
          JOIN norms na ON na.id = id_a
          JOIN norms nb ON nb.id = id_b
-         WHERE 1000 * dot * dot >= 900 * na.n2 * nb.n2""",
+         WHERE 1000 * dot * dot >= 900 * na.n2 * nb.n2"""),
     // final CDC state = per-user argmax by (ts, event_id) — equal to the
     // merged stream state because upsertLatest orders by value, not batch
-    "q148_stream_cdc_merge" -> s"""
+    QuerySpec("q148_stream_cdc_merge", q148_stream_cdc_merge, s"""
       SELECT user_id, event_id, ts, ${centsSql("value")} AS value_c
       FROM (SELECT *, row_number() OVER (
               PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
             FROM events)
-      WHERE rn = 1""",
+      WHERE rn = 1""", streaming = true),
     // same √count quotas (floor(sqrt()) is bit-identical IEEE in both
     // engines below 2^52), same multiplicative id-mix rank
-    "q149_temperature_sample" ->
+    QuerySpec("q149_temperature_sample", q149_temperature_sample,
       """WITH c AS (SELECT lang, count(*) AS c FROM documents GROUP BY 1),
          q AS (SELECT lang, CAST(floor(sqrt(c)) AS BIGINT) AS isq FROM c),
          tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
@@ -6914,10 +6555,10 @@ object Queries {
            FROM documents)
          SELECT doc_id, lang, CAST(samp_rank AS BIGINT) AS samp_rank
          FROM r JOIN quota USING (lang)
-         WHERE samp_rank <= quota""",
+         WHERE samp_rank <= quota"""),
     // direct-comparison diff of the same deterministic mutation; agrees
     // with Spark's hash-compressed form except on ~2^-64 collisions
-    "q150_table_diff" -> s"""
+    QuerySpec("q150_table_diff", q150_table_diff, s"""
       WITH a AS (
         SELECT event_id, user_id, ${centsSql("value")} AS value_c FROM events),
       b AS (
@@ -6934,10 +6575,10 @@ object Queries {
                   ELSE 'changed' END AS diff_status
       FROM a FULL OUTER JOIN b ON a.event_id = b.event_id
       WHERE b.event_id IS NULL OR a.event_id IS NULL
-         OR a.user_id <> b.user_id OR a.value_c <> b.value_c""",
+         OR a.user_id <> b.user_id OR a.value_c <> b.value_c"""),
     // recursive-CTE replay of the level-synchronous BFS: UNION (not ALL)
     // dedups (id, hop) states so paths never explode; min(hop) per id
-    "q151_bfs_hops" ->
+    QuerySpec("q151_bfs_hops", q151_bfs_hops,
       """WITH RECURSIVE
          raw AS (
            SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
@@ -6955,10 +6596,10 @@ object Queries {
            FROM walk w JOIN adj ON adj.src = w.id
            WHERE w.hops < 3)
          SELECT id, CAST(min(hops) AS BIGINT) AS hops
-         FROM walk GROUP BY id""",
+         FROM walk GROUP BY id"""),
     // collation-insensitive groups restated via lower(); same re-casing
     // identical rational-BM25 arithmetic in HUGEINT; same floor division
-    "q174_bm25" -> {
+    QuerySpec("q174_bm25", q174_bm25, {
       val terms = Seq("dup", "vector", "merge")
       def h(e: String) = s"CAST(($e) AS HUGEINT)"
       val dfs = terms.zipWithIndex.map { case (w, i) =>
@@ -6981,9 +6622,9 @@ object Queries {
           SELECT doc_id, $sc AS score
           FROM d, st
           ORDER BY score DESC, doc_id LIMIT 10"""
-    },
+    }),
     // the identical recursion (DuckDB's // is Spark's DIV on BIGINTs)
-    "q175_recursive_cte" ->
+    QuerySpec("q175_recursive_cte", q175_recursive_cte,
       """WITH RECURSIVE h(ck, depth) AS (
            SELECT CAST(1 AS BIGINT), CAST(0 AS BIGINT)
            UNION ALL
@@ -6991,10 +6632,10 @@ object Queries {
            FROM customer c JOIN h ON c.c_custkey // 2 = h.ck)
          SELECT depth, count(*) AS n_nodes,
                 min(ck) AS min_key, max(ck) AS max_key
-         FROM h GROUP BY depth""",
+         FROM h GROUP BY depth"""),
     // id-oriented a<b<c enumeration — a DIFFERENT triangle algorithm
     // than the engine's degree-oriented wedges; counts must agree
-    "q176_triangles" ->
+    QuerySpec("q176_triangles", q176_triangles,
       """WITH li AS (SELECT l_orderkey, l_suppkey FROM lineitem),
          pairs AS (
            SELECT DISTINCT a.l_orderkey AS ok,
@@ -7013,9 +6654,9 @@ object Queries {
          m AS (SELECT a AS id FROM tri
                UNION ALL SELECT b FROM tri
                UNION ALL SELECT c FROM tri)
-         SELECT id AS s_suppkey, count(*) AS n_tri FROM m GROUP BY 1""",
+         SELECT id AS s_suppkey, count(*) AS n_tri FROM m GROUP BY 1"""),
     // identical cross-multiplied PMI ratio in HUGEINT; same floor div
-    "q177_pmi_bigrams" ->
+    QuerySpec("q177_pmi_bigrams", q177_pmi_bigrams,
       """WITH toks AS (
            SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
          uc AS (
@@ -7038,9 +6679,9 @@ object Queries {
                         * CAST(u2.c AS HUGEINT)) AS BIGINT) AS score_ppm
          FROM bc JOIN uc u1 ON bc.w1 = u1.w JOIN uc u2 ON bc.w2 = u2.w, st
          WHERE n_pair >= 5
-         ORDER BY score_ppm DESC, w1, w2 LIMIT 20""",
+         ORDER BY score_ppm DESC, w1, w2 LIMIT 20"""),
     // the SCAN formulation: per-doc list arithmetic, 1-based -> 0-based
-    "q178_phrase_search" ->
+    QuerySpec("q178_phrase_search", q178_phrase_search,
       """WITH d AS (
            SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
          h AS (
@@ -7050,20 +6691,20 @@ object Queries {
            FROM d)
          SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_hits,
                 CAST(hits[1] - 1 AS BIGINT) AS first_pos
-         FROM h WHERE len(hits) > 0""",
+         FROM h WHERE len(hits) > 0"""),
     // identity on the source slice: zone pruning must not change rows
-    "q179_zonemap_prune" ->
+    QuerySpec("q179_zonemap_prune", q179_zonemap_prune,
       """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity
          FROM lineitem
          WHERE l_shipdate BETWEEN TIMESTAMP '1997-01-01 00:00:00'
-                              AND TIMESTAMP '1997-06-30 23:59:59'""",
+                              AND TIMESTAMP '1997-06-30 23:59:59'"""),
     // tape algebra replayed from the construction rule: txn 2 appended
     // exactly the %3 == 1 slice, so the diff is that slice as only_b
-    "q180_txn_diff" ->
+    QuerySpec("q180_txn_diff", q180_txn_diff,
       """SELECT o_orderkey, 'only_b' AS diff_status
-         FROM orders WHERE o_orderkey % 3 = 1""",
+         FROM orders WHERE o_orderkey % 3 = 1"""),
     // same user-keyed pairing and integer floor credit split
-    "q181_attribution" ->
+    QuerySpec("q181_attribution", q181_attribution,
       """WITH p AS (
            SELECT event_id AS pe, user_id, ts AS pts
            FROM events WHERE event_type = 'purchase'),
@@ -7078,9 +6719,9 @@ object Queries {
          SELECT ce AS click_id, count(*) AS n_purchases,
                 CAST(sum(1000000 // n_touch) AS BIGINT) AS credit_ppm
          FROM pair JOIN n USING (pe)
-         GROUP BY 1""",
+         GROUP BY 1"""),
     // identical cross-multiplied chi-square cell terms in HUGEINT
-    "q182_chi2_assoc" ->
+    QuerySpec("q182_chi2_assoc", q182_chi2_assoc,
       """WITH cells AS (
            SELECT lang, source, count(*) AS n_obs
            FROM documents GROUP BY 1, 2),
@@ -7098,13 +6739,13 @@ object Queries {
                          - CAST(r_tot AS HUGEINT) * CAST(c_tot AS HUGEINT)))
                      // (CAST(r_tot AS HUGEINT) * CAST(c_tot AS HUGEINT)
                         * CAST(n_tot AS HUGEINT)) AS BIGINT) AS contrib_ppm
-         FROM m""",
+         FROM m"""),
     // the contract holds: the violations relation is EMPTY (q122 shape)
-    "q183_minhash_error" ->
+    QuerySpec("q183_minhash_error", q183_minhash_error,
       """SELECT CAST(NULL AS BIGINT) AS id_a, CAST(NULL AS BIGINT) AS id_b
-         WHERE FALSE""",
+         WHERE FALSE"""),
     // dominance stated directly: NOT EXISTS a strictly-better point
-    "q184_skyline" -> s"""
+    QuerySpec("q184_skyline", q184_skyline, s"""
       WITH pts AS (
         SELECT ${centsSql("p_retailprice")} AS price_c,
                CAST(p_size AS BIGINT) AS size,
@@ -7116,9 +6757,9 @@ object Queries {
       WHERE NOT EXISTS (
         SELECT 1 FROM pts q
         WHERE q.price_c <= p.price_c AND q.size >= p.size
-          AND (q.price_c < p.price_c OR q.size > p.size))""",
+          AND (q.price_c < p.price_c OR q.size > p.size))"""),
     // same values-sized cumulative-count rank, same integer floor
-    "q185_rank_normalize" -> s"""
+    QuerySpec("q185_rank_normalize", q185_rank_normalize, s"""
       WITH v AS (
         SELECT o_orderkey, ${centsSql("o_totalprice")} AS price_c FROM orders),
       st AS (SELECT count(*) AS n FROM v),
@@ -7132,10 +6773,10 @@ object Queries {
       SELECT o_orderkey, v.price_c,
              CAST(smaller * 1000000 // (n - 1) AS BIGINT) AS pr_ppm
       FROM v JOIN cum ON v.price_c = cum.price_c, st
-      WHERE o_orderkey <= 1000""",
+      WHERE o_orderkey <= 1000"""),
     // identical sufficient statistics; negative slopes via sign/abs so
     // truncating div and flooring // agree on nonnegative operands
-    "q186_regression_slope" -> s"""
+    QuerySpec("q186_regression_slope", q186_regression_slope, s"""
       WITH a AS (
         SELECT l_returnflag, count(*) AS n,
                CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sx,
@@ -7157,9 +6798,9 @@ object Queries {
                        THEN -((CAST(1000000 AS HUGEINT) * (-num)) // den)
                        ELSE (CAST(1000000 AS HUGEINT) * num) // den
                   END AS BIGINT) AS slope_ppm
-      FROM d""",
+      FROM d"""),
     // identical basket/pair supports and HUGEINT ppm scores
-    "q187_assoc_rules" ->
+    QuerySpec("q187_assoc_rules", q187_assoc_rules,
       """WITH items AS (
            SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          supp AS (SELECT pk, count(*) AS supp FROM items GROUP BY 1),
@@ -7181,9 +6822,9 @@ object Queries {
                   AS BIGINT) AS lift_ppm
          FROM dir JOIN supp sa ON dir.ante = sa.pk
                   JOIN supp sb ON dir.cons = sb.pk, nb
-         ORDER BY lift_ppm DESC, ante, cons LIMIT 25""",
+         ORDER BY lift_ppm DESC, ante, cons LIMIT 25"""),
     // the cascade restated as correlated deletions per table
-    "q188_gdpr_cascade" ->
+    QuerySpec("q188_gdpr_cascade", q188_gdpr_cascade,
       """WITH del_c AS (SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0),
          del_o AS (SELECT o_orderkey FROM orders
                    WHERE o_custkey IN (SELECT c_custkey FROM del_c)),
@@ -7200,25 +6841,25 @@ object Queries {
          UNION ALL
          SELECT 'lineitem', (SELECT count(*) FROM del_l),
                 (SELECT count(*) FROM lineitem)
-                  - (SELECT count(*) FROM del_l)""",
+                  - (SELECT count(*) FROM del_l)"""),
     // the final ledger per user IS the batch aggregate
-    "q189_stream_running_totals" -> s"""
+    QuerySpec("q189_stream_running_totals", q189_stream_running_totals, s"""
       SELECT user_id, count(*) AS n_events,
              CAST(sum(${centsSql("value")}) AS BIGINT) AS value_c
-      FROM events GROUP BY 1""",
+      FROM events GROUP BY 1""", streaming = true),
     // single-trigger tape: within-watermark dedup = distinct keys
-    "q190_stream_dedup_within" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
+    QuerySpec("q190_stream_dedup_within", q190_stream_dedup_within,
+      "SELECT DISTINCT user_id, event_type FROM events", streaming = true),
     // live users' ledgers over their ENTIRE history (seed + stream)
-    "q193_stream_warm_start" -> s"""
+    QuerySpec("q193_stream_warm_start", q193_stream_warm_start, s"""
       SELECT user_id, count(*) AS n_events,
              CAST(sum(${centsSql("value")}) AS BIGINT) AS value_c
       FROM events
       WHERE user_id IN (SELECT DISTINCT user_id FROM events
                         WHERE event_id % 2 = 1)
-      GROUP BY 1""",
+      GROUP BY 1""", streaming = true),
     // the sequential merge restated as lag + correlated EXISTS
-    "q194_cogroup_convert" ->
+    QuerySpec("q194_cogroup_convert", q194_cogroup_convert,
       """WITH p AS (
            SELECT user_id, event_id, ts,
                   lag(ts) OVER (PARTITION BY user_id
@@ -7232,27 +6873,27 @@ object Queries {
                          AND c.ts < p.ts
                          AND (p.prev_ts IS NULL OR c.ts > p.prev_ts))
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-         FROM p GROUP BY 1""",
+         FROM p GROUP BY 1"""),
     // the repair converges: the post-repair diff is EMPTY
-    "q195_repair_roundtrip" ->
+    QuerySpec("q195_repair_roundtrip", q195_repair_roundtrip,
       """SELECT CAST(NULL AS BIGINT) AS event_id,
                 CAST(NULL AS VARCHAR) AS diff_status
-         WHERE FALSE""",
+         WHERE FALSE"""),
     // both Bloom guarantees hold: the violations relation is EMPTY
-    "q196_bloom_fpr" ->
+    QuerySpec("q196_bloom_fpr", q196_bloom_fpr,
       """SELECT CAST(NULL AS BIGINT) AS n_false_neg,
                 CAST(NULL AS BIGINT) AS n_false_pos,
                 CAST(NULL AS BIGINT) AS n_non_member
-         WHERE FALSE""",
+         WHERE FALSE"""),
     // the oracle recomputes the view FROM SCRATCH; the engine maintains
     // it with delta joins - the algebra must agree exactly
-    "q197_join_ivm" ->
+    QuerySpec("q197_join_ivm", q197_join_ivm,
       """SELECT o_orderpriority, count(*) AS n,
                 CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         GROUP BY 1""",
+         GROUP BY 1"""),
     // SQL:2011 IGNORE NULLS frame semantics, same (ts, event_id) ties
-    "q198_forward_fill" -> s"""
+    QuerySpec("q198_forward_fill", q198_forward_fill, s"""
       WITH r AS (
         SELECT event_id, user_id, ts,
                CASE WHEN event_id % 5 = 0 THEN NULL
@@ -7264,9 +6905,9 @@ object Queries {
              last_value(reading IGNORE NULLS) OVER (
                PARTITION BY user_id ORDER BY ts, event_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
-      FROM r""",
+      FROM r"""),
     // identical microsecond hold-time weighting in HUGEINT
-    "q199_time_weighted_avg" -> s"""
+    QuerySpec("q199_time_weighted_avg", q199_time_weighted_avg, s"""
       WITH r AS (
         SELECT user_id, ${centsSql("value")} AS value_c,
                epoch_us(lead(ts) OVER (PARTITION BY user_id
@@ -7277,18 +6918,18 @@ object Queries {
              CAST(sum(CAST(value_c AS HUGEINT) * CAST(dt AS HUGEINT))
                   // CAST(sum(dt) AS HUGEINT) AS BIGINT) AS twa_c
       FROM r WHERE dt IS NOT NULL
-      GROUP BY 1 HAVING sum(dt) > 0""",
+      GROUP BY 1 HAVING sum(dt) > 0"""),
     // the 4-way expansion stated explicitly: every event joins the 4
     // hop-aligned starts covering it (15-min grid is epoch-aligned in
     // both engines)
-    "q201_sliding_window" ->
+    QuerySpec("q201_sliding_window", q201_sliding_window,
       """SELECT time_bucket(INTERVAL 15 MINUTE, ts) - to_minutes(15 * k)
                 AS w_start,
               event_type, count(*) AS n
          FROM events, (SELECT unnest(range(0, 4)) AS k)
-         GROUP BY 1, 2""",
+         GROUP BY 1, 2"""),
     // same first-purchase-day arrivals + days-sized prefix sum
-    "q202_cumulative_ndv" ->
+    QuerySpec("q202_cumulative_ndv", q202_cumulative_ndv,
       """WITH fd AS (
            SELECT user_id, min(date_trunc('day', ts)) AS first_day
            FROM events WHERE event_type = 'purchase' GROUP BY 1),
@@ -7297,9 +6938,9 @@ object Queries {
                 CAST(sum(n_new) OVER (ORDER BY day
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                   AS BIGINT) AS n_cum_users
-         FROM ar""",
+         FROM ar"""),
     // purchase-day cohorts; both engines truncate weeks to Monday
-    "q203_cohort_retention" ->
+    QuerySpec("q203_cohort_retention", q203_cohort_retention,
       """WITH ev AS (
            SELECT DISTINCT user_id, date_trunc('week', ts) AS week
            FROM events),
@@ -7308,9 +6949,9 @@ object Queries {
          SELECT cohort_day, week,
                 CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_active
          FROM ev JOIN c USING (user_id)
-         GROUP BY 1, 2""",
+         GROUP BY 1, 2"""),
     // identical cross-multiplied CDF gap; ties break to smallest value
-    "q204_ks_drift" -> s"""
+    QuerySpec("q204_ks_drift", q204_ks_drift, s"""
       WITH v AS (
         SELECT ${centsSql("o_totalprice")} AS v,
                CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END AS is_a
@@ -7338,9 +6979,9 @@ object Queries {
       FROM cum, tot
       ORDER BY abs(CAST(cuma AS HUGEINT) * CAST(nb AS HUGEINT)
                    - CAST(cumb AS HUGEINT) * CAST(na AS HUGEINT)) DESC, v
-      LIMIT 1""",
+      LIMIT 1"""),
     // same bit packing and popcount
-    "q205_bitmask_profile" ->
+    QuerySpec("q205_bitmask_profile", q205_bitmask_profile,
       """WITH m AS (
            SELECT o_custkey,
                   CAST(bit_or(CAST(1 AS BIGINT)
@@ -7349,10 +6990,10 @@ object Queries {
            FROM orders GROUP BY 1)
          SELECT mask, CAST(bit_count(mask) AS BIGINT) AS n_priorities,
                 count(*) AS n_customers
-         FROM m GROUP BY 1""",
+         FROM m GROUP BY 1"""),
     // brute force over the same population: any pair the prefix filter
     // misses (wrong bound) or fabricates (wrong verify) breaks the hash
-    "q206_set_similarity_join" ->
+    QuerySpec("q206_set_similarity_join", q206_set_similarity_join,
       """WITH sets AS (
            SELECT doc_id, list_distinct(string_split(text, ' ')) AS s
            FROM documents WHERE doc_id < 200)
@@ -7362,9 +7003,9 @@ object Queries {
                      - len(list_intersect(a.s, b.s)) AS BIGINT) AS u
          FROM sets a JOIN sets b ON a.doc_id < b.doc_id
          WHERE len(list_intersect(a.s, b.s)) * 3
-                 >= (len(a.s) + len(b.s)) * 1""",
+                 >= (len(a.s) + len(b.s)) * 1"""),
     // same change-point filter and validity lead, same (ts, id) ties
-    "q207_scd2_intervals" -> s"""
+    QuerySpec("q207_scd2_intervals", q207_scd2_intervals, s"""
       WITH r AS (
         SELECT user_id, event_id, ts, ${centsSql("value")} AS value_c,
                lag(${centsSql("value")}) OVER (PARTITION BY user_id
@@ -7377,9 +7018,9 @@ object Queries {
              lead(ts) OVER (PARTITION BY user_id
                ORDER BY ts, event_id) AS valid_to,
              value_c
-      FROM ch""",
+      FROM ch"""),
     // same per-value weight aggregation and half-total selection rule
-    "q208_weighted_median" -> s"""
+    QuerySpec("q208_weighted_median", q208_weighted_median, s"""
       WITH per AS (
         SELECT l_returnflag, ${centsSql("l_extendedprice")} AS v,
                CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
@@ -7393,17 +7034,17 @@ object Queries {
                  AS BIGINT) AS totw
         FROM per)
       SELECT l_returnflag, CAST(min(v) AS BIGINT) AS weighted_median_c
-      FROM c WHERE cumw * 2 >= totw GROUP BY 1""",
+      FROM c WHERE cumw * 2 >= totw GROUP BY 1"""),
     // the recovered gaps are exactly the dropped multiples of 7
-    "q209_id_gaps" ->
+    QuerySpec("q209_id_gaps", q209_id_gaps,
       """WITH e AS (SELECT event_id FROM events WHERE event_id % 7 <> 0),
          x AS (SELECT event_id,
                       lead(event_id) OVER (ORDER BY event_id) AS nxt
                FROM e)
          SELECT event_id + 1 AS gap_start, nxt - 1 AS gap_end
-         FROM x WHERE nxt > event_id + 1""",
+         FROM x WHERE nxt > event_id + 1"""),
     // the classic day - row_number() island key, identical both sides
-    "q210_activity_streaks" ->
+    QuerySpec("q210_activity_streaks", q210_activity_streaks,
       """WITH d AS (
            SELECT DISTINCT user_id,
                   CAST(date_trunc('day', ts) AS DATE) AS day
@@ -7415,9 +7056,9 @@ object Queries {
            FROM d)
          SELECT user_id, CAST(min(day) AS TIMESTAMP) AS streak_start,
                 count(*) AS streak_days
-         FROM i GROUP BY user_id, island""",
+         FROM i GROUP BY user_id, island"""),
     // DuckDB runs the same SQL:2003 bag semantics natively
-    "q211_bag_set_ops" ->
+    QuerySpec("q211_bag_set_ops", q211_bag_set_ops,
       """WITH a AS (SELECT o_orderpriority FROM orders WHERE o_custkey % 3 = 0),
          b AS (SELECT o_orderpriority FROM orders WHERE o_custkey % 3 = 1),
          ia AS (SELECT o_orderpriority, count(*) AS n_i
@@ -7431,9 +7072,9 @@ object Queries {
                 CAST(coalesce(n_i, 0) AS BIGINT) AS n_intersect_all,
                 CAST(coalesce(n_e, 0) AS BIGINT) AS n_except_all
          FROM ia FULL OUTER JOIN ea
-           ON ia.o_orderpriority = ea.o_orderpriority""",
+           ON ia.o_orderpriority = ea.o_orderpriority"""),
     // same frequency ranking (ties by token) and exact ppm curve
-    "q212_vocab_coverage" ->
+    QuerySpec("q212_vocab_coverage", q212_vocab_coverage,
       """WITH c AS (
            SELECT w, count(*) AS c
            FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
@@ -7449,17 +7090,17 @@ object Queries {
          SELECT rank, w, CAST(c AS BIGINT) AS c,
                 CAST((CAST(cum AS HUGEINT) * 1000000)
                      // CAST(t AS HUGEINT) AS BIGINT) AS cum_ppm
-         FROM r, t WHERE rank <= 30""",
+         FROM r, t WHERE rank <= 30"""),
     // the same union with the missing columns stated as NULLs
-    "q213_union_drift" -> s"""
+    QuerySpec("q213_union_drift", q213_union_drift, s"""
       SELECT o_orderkey, o_orderstatus, CAST(NULL AS BIGINT) AS price_c
       FROM orders WHERE o_orderkey % 2 = 0
       UNION ALL
       SELECT o_orderkey, CAST(NULL AS VARCHAR), ${centsSql("o_totalprice")}
-      FROM orders WHERE o_orderkey % 2 = 1""",
+      FROM orders WHERE o_orderkey % 2 = 1"""),
     // the oracle pays the O(n^2) per-user pair count the distributed
     // merge-sort form avoids; same Lehmer arrival permutation
-    "q214_disorder_metric" ->
+    QuerySpec("q214_disorder_metric", q214_disorder_metric,
       """WITH e AS (
            SELECT user_id, event_id, ts,
                   (event_id * 48271) % 2147483647 AS arrival
@@ -7471,9 +7112,9 @@ object Queries {
            ON a.user_id = b.user_id
           AND a.arrival < b.arrival
           AND (a.ts > b.ts OR (a.ts = b.ts AND a.event_id > b.event_id))
-         GROUP BY 1""",
+         GROUP BY 1"""),
     // open/close replayed as arg-ordered first/last window picks
-    "q215_ohlc_candles" -> s"""
+    QuerySpec("q215_ohlc_candles", q215_ohlc_candles, s"""
       WITH r AS (
         SELECT date_trunc('day', ts) AS day, event_type, ts, event_id,
                ${centsSql("value")} AS v
@@ -7490,9 +7131,9 @@ object Queries {
              CAST(min(v) AS BIGINT) AS low_c,
              CAST(min(close_c) AS BIGINT) AS close_c,
              count(*) AS n
-      FROM w GROUP BY 1, 2""",
+      FROM w GROUP BY 1, 2"""),
     // same signed-ppm rule with the sign factored out of the floor
-    "q216_wow_growth" ->
+    QuerySpec("q216_wow_growth", q216_wow_growth,
       """WITH wk AS (
            SELECT event_type, date_trunc('week', ts) AS week,
                   count(*) AS n
@@ -7508,9 +7149,9 @@ object Queries {
                        THEN ((n - prev_n) * 1000000) // prev_n
                      ELSE -(((prev_n - n) * 1000000) // prev_n)
                   END AS BIGINT) AS growth_ppm
-         FROM g""",
+         FROM g"""),
     // same 7-day coverage expansion + distinct count per report day
-    "q217_rolling_wau" ->
+    QuerySpec("q217_rolling_wau", q217_rolling_wau,
       """WITH a AS (
            SELECT DISTINCT user_id,
                   CAST(date_trunc('day', ts) AS DATE) AS day
@@ -7520,9 +7161,9 @@ object Queries {
            FROM a, (SELECT unnest(range(0, 7)) AS k))
          SELECT CAST(report_day AS TIMESTAMP) AS report_day,
                 CAST(count(DISTINCT user_id) AS BIGINT) AS wau
-         FROM x GROUP BY 1""",
+         FROM x GROUP BY 1"""),
     // the same null-on-hazard semantics stated with CASE guards
-    "q218_try_arithmetic" ->
+    QuerySpec("q218_try_arithmetic", q218_try_arithmetic,
       """SELECT o_orderkey,
                 CASE WHEN o_orderkey % 10 = 0 THEN NULL
                      ELSE CAST(o_custkey AS DOUBLE) / (o_orderkey % 10)
@@ -7532,9 +7173,9 @@ object Queries {
                      ELSE NULL END AS safe_add,
                 CAST(NULL AS BIGINT) AS safe_cast,
                 o_orderkey AS good_cast
-         FROM orders""",
+         FROM orders"""),
     // same sufficient statistics; r^2 needs no sqrt so it stays exact
-    "q219_r_squared" -> s"""
+    QuerySpec("q219_r_squared", q219_r_squared, s"""
       WITH a AS (
         SELECT l_returnflag, count(*) AS n,
                CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sx,
@@ -7561,22 +7202,22 @@ object Queries {
              CAST(CASE WHEN dx = 0 OR dy = 0 THEN NULL
                   ELSE (CAST(1000000 AS HUGEINT) * num * num) // (dx * dy)
                END AS BIGINT) AS r2_ppm
-      FROM d""",
+      FROM d"""),
     // the whole stream->landing->cluster->skip-read chain must be the
     // identity on the source slice
-    "q220_stream_lakehouse_sink" -> s"""
+    QuerySpec("q220_stream_lakehouse_sink", q220_stream_lakehouse_sink, s"""
       SELECT event_id, user_id, ${centsSql("value")} AS value_c
       FROM events
       WHERE ts BETWEEN TIMESTAMP '2024-01-10 00:00:00'
-                   AND TIMESTAMP '2024-01-12 23:59:59'""",
+                   AND TIMESTAMP '2024-01-12 23:59:59'""", streaming = true),
     // the single-reducer window the engine's two-phase form avoids
-    "q221_global_row_number" -> s"""
+    QuerySpec("q221_global_row_number", q221_global_row_number, s"""
       SELECT o_orderkey, ${centsSql("o_totalprice")} AS price_c,
              CAST(row_number() OVER (ORDER BY ${centsSql("o_totalprice")},
                o_orderkey) AS BIGINT) AS rn
-      FROM orders""",
+      FROM orders"""),
     // most recent click per purchase, discarded when staler than 1h
-    "q222_asof_tolerance" ->
+    QuerySpec("q222_asof_tolerance", q222_asof_tolerance,
       """WITH p AS (
            SELECT event_id AS purchase_id, user_id, ts AS pts
            FROM events WHERE event_type = 'purchase'),
@@ -7595,9 +7236,9 @@ object Queries {
                      THEN click_id END AS click_id,
                 CASE WHEN cts >= pts - INTERVAL 1 HOUR
                      THEN cts END AS click_ts
-         FROM m""",
+         FROM m"""),
     // SQL:2008 WITH TIES semantics via rank()
-    "q223_top_k_ties" -> s"""
+    QuerySpec("q223_top_k_ties", q223_top_k_ties, s"""
       WITH r AS (
         SELECT o_orderpriority, ${centsSql("o_totalprice")} AS price_c,
                CAST(rank() OVER (PARTITION BY o_orderpriority
@@ -7605,9 +7246,9 @@ object Queries {
         FROM orders)
       SELECT o_orderpriority, rk, price_c, count(*) AS n_tied
       FROM r WHERE rk <= 2
-      GROUP BY 1, 2, 3""",
+      GROUP BY 1, 2, 3"""),
     // identical duplicate-aware rank-sum identity in HUGEINT
-    "q224_gini" -> s"""
+    QuerySpec("q224_gini", q224_gini, s"""
       WITH per AS (
         SELECT c_nationkey, ${centsSql("o_totalprice")} AS v,
                count(*) AS c
@@ -7628,9 +7269,9 @@ object Queries {
       SELECT c_nationkey, n,
              CAST(((ranksum - (CAST(n AS HUGEINT) + 1) * sx) * 1000000)
                   // (CAST(n AS HUGEINT) * sx) AS BIGINT) AS gini_ppm
-      FROM agg""",
+      FROM agg"""),
     // same two-level fold; the ratio floors once at the end
-    "q225_hhi" -> s"""
+    QuerySpec("q225_hhi", q225_hhi, s"""
       WITH rev AS (
         SELECT s_nationkey, s_suppkey,
                CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT) AS rev
@@ -7641,9 +7282,9 @@ object Queries {
                    * sum(CAST(rev AS HUGEINT) * CAST(rev AS HUGEINT)))
                   // (CAST(sum(rev) AS HUGEINT)
                      * CAST(sum(rev) AS HUGEINT)) AS BIGINT) AS hhi_ppm
-      FROM rev GROUP BY 1""",
+      FROM rev GROUP BY 1"""),
     // header-vs-lines discrepancy, top-20 by |diff| (ties by key)
-    "q226_order_reconciliation" -> s"""
+    QuerySpec("q226_order_reconciliation", q226_order_reconciliation, s"""
       WITH l AS (
         SELECT l_orderkey,
                CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT) AS lines_c
@@ -7653,9 +7294,9 @@ object Queries {
              abs(${centsSql("o_totalprice")} - coalesce(lines_c, 0))
                AS abs_diff_c
       FROM orders LEFT JOIN l ON o_orderkey = l_orderkey
-      ORDER BY abs_diff_c DESC, o_orderkey LIMIT 20""",
+      ORDER BY abs_diff_c DESC, o_orderkey LIMIT 20"""),
     // same confusion-matrix reduction; sign factored out of the floor
-    "q227_cohens_kappa" -> {
+    QuerySpec("q227_cohens_kappa", q227_cohens_kappa, {
       val scoreCols = TextAnalysis.langMarkers.map { case (l, _) =>
         s"${langScoreSql(l)} AS s_$l"
       }.mkString(", ")
@@ -7684,9 +7325,9 @@ object Queries {
                            // (CAST(n AS HUGEINT) * CAST(n AS HUGEINT) - p)
                    END AS BIGINT) AS kappa_ppm
           FROM nd, p"""
-    },
+    }),
     // same per-class tp/pred/true fold with NULL-guarded ratios
-    "q228_class_prf" -> {
+    QuerySpec("q228_class_prf", q228_class_prf, {
       val scoreCols = TextAnalysis.langMarkers.map { case (l, _) =>
         s"${langScoreSql(l)} AS s_$l"
       }.mkString(", ")
@@ -7712,9 +7353,9 @@ object Queries {
                    END AS BIGINT) AS recall_ppm
           FROM a FULL OUTER JOIN pr ON a.cls = pr.cls
           LEFT JOIN tp ON coalesce(a.cls, pr.cls) = tp.cls"""
-    },
+    }),
     // same generated spine; isodow Monday=1 in both engines
-    "q229_calendar_spine" ->
+    QuerySpec("q229_calendar_spine", q229_calendar_spine,
       """WITH d AS (
            SELECT CAST(date_trunc('day', ts) AS DATE) AS day FROM events),
          b AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
@@ -7727,9 +7368,9 @@ object Queries {
                 CAST(date_trunc('week', spine.day) AS TIMESTAMP)
                   AS week_start,
                 coalesce(n_events, 0) AS n_events
-         FROM spine LEFT JOIN daily ON spine.day = daily.day""",
+         FROM spine LEFT JOIN daily ON spine.day = daily.day"""),
     // identical signed deltas and stacked running windows
-    "q230_max_drawdown" -> s"""
+    QuerySpec("q230_max_drawdown", q230_max_drawdown, s"""
       WITH r AS (
         SELECT user_id, ts, event_id,
                CASE WHEN event_type = 'purchase' THEN -1 ELSE 1 END
@@ -7748,13 +7389,13 @@ object Queries {
       SELECT user_id,
              CAST(max(peak - bal) AS BIGINT) AS max_drawdown_c,
              CAST(max(peak) AS BIGINT) AS peak_c
-      FROM p GROUP BY 1""",
+      FROM p GROUP BY 1"""),
     // the prefix filter has EXACT recall, so the production path's output
     // equals the full containment relation — the oracle states it as the
     // posting-list join (only pairs with >= 1 shared shingle can pass the
     // gate, since i >= ceil(0.6*na) >= 1), with the same cross-multiplied
     // integer threshold
-    "q231_containment_join" ->
+    QuerySpec("q231_containment_join", q231_containment_join,
       """WITH sh AS (
            SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
@@ -7770,20 +7411,20 @@ object Queries {
          sz AS (SELECT doc_id, CAST(len(s) AS BIGINT) AS na FROM sh)
          SELECT inter.id_a, inter.id_b, inter.i, sz.na
          FROM inter JOIN sz ON sz.doc_id = inter.id_a
-         WHERE inter.i * 5 >= sz.na * 3""",
+         WHERE inter.i * 5 >= sz.na * 3"""),
     // the maxDf cap's recall contract holds: capped pairs carry exact
     // measures and every lost pair is explained by the cap — the
     // violations relation is EMPTY
-    "q232_containment_cap" ->
+    QuerySpec("q232_containment_cap", q232_containment_cap,
       """SELECT CAST(NULL AS BIGINT) AS id_a,
                 CAST(NULL AS BIGINT) AS id_b,
                 CAST(NULL AS VARCHAR) AS violation
-         WHERE FALSE""",
+         WHERE FALSE"""),
     // the fan-out probe's analytic candidate count, df stats, and maxDf
     // recommendation, re-derived from scratch: same shingles, same
     // rarest-first (df, tok) rank order, same prefix arithmetic, same
     // ladder (interpolated from the ONE Scala constant both engines use)
-    "q233_fanout_probe" -> {
+    QuerySpec("q233_fanout_probe", q233_fanout_probe, {
       val ladderSql = graft.operators.Dedup.MaxDfLadder.mkString(", ")
       val perDoc = graft.operators.Dedup.DefaultCandidatesPerDoc
       // text IS NOT NULL up front: Spark's explode(shingles(NULL))
@@ -7840,9 +7481,9 @@ object Queries {
                 ELSE COALESCE((SELECT max(cap) FROM cum
                                WHERE cands <= greatest(tot.n_docs, 1)), 1)
            END AS rec_tight
-         FROM tot""" },
+         FROM tot""" }),
     // every column recomputed independently; the one-pass form must match
-    "q200_profile_table" -> {
+    QuerySpec("q200_profile_table", q200_profile_table, {
       val liCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
         "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
         "l_tax", "l_returnflag", "l_linestatus", "l_shipdate")
@@ -7853,9 +7494,9 @@ object Queries {
                CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct
             FROM lineitem"""
       }.mkString("\nUNION ALL\n")
-    },
+    }),
     // the same metrics aggregated from scratch
-    "q191_observe_metrics" -> s"""
+    QuerySpec("q191_observe_metrics", q191_observe_metrics, s"""
       WITH a AS (
         SELECT count(*) AS n_rows,
                CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50
@@ -7866,10 +7507,10 @@ object Queries {
       SELECT 'n_rows' AS metric, n_rows AS value FROM a
       UNION ALL SELECT 'n_bad_qty', n_bad_qty FROM a
       UNION ALL SELECT 'sum_price_c', sum_price_c FROM a
-      UNION ALL SELECT 'max_orderkey', max_orderkey FROM a""",
+      UNION ALL SELECT 'max_orderkey', max_orderkey FROM a"""),
     // the recurrence unrolled: h1 = degree, a1 = sum h1, h2 = sum a1,
     // a2 = sum h2 - all exact integers
-    "q192_hits" ->
+    QuerySpec("q192_hits", q192_hits,
       """WITH ed AS (
            SELECT o_custkey AS c, l_suppkey AS sp
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -7883,17 +7524,17 @@ object Queries {
                 FROM ed JOIN h2 USING (c) GROUP BY 1)
          SELECT sp AS s_suppkey, CAST(a2 AS BIGINT) AS auth_score
          FROM a2
-         ORDER BY auth_score DESC, s_suppkey LIMIT 20""",
+         ORDER BY auth_score DESC, s_suppkey LIMIT 20"""),
     // DuckDB's ordered string_agg is the same SQL:2016 aggregate
-    "q170_listagg" ->
+    QuerySpec("q170_listagg", q170_listagg,
       """SELECT o_orderstatus,
                 string_agg(CAST(o_orderkey AS VARCHAR), ','
                            ORDER BY o_orderkey) AS keys,
                 count(*) AS n
          FROM orders WHERE o_orderkey <= 300
-         GROUP BY o_orderstatus""",
+         GROUP BY o_orderstatus"""),
     // the reshape stated engine-independently as a UNION ALL
-    "q171_unpivot" -> s"""
+    QuerySpec("q171_unpivot", q171_unpivot, s"""
       WITH w AS (
         SELECT c_nationkey, count(*) AS n_cust,
                CAST(sum(${centsSql("c_acctbal")}) AS BIGINT) AS sum_bal_c,
@@ -7903,24 +7544,24 @@ object Queries {
       UNION ALL
       SELECT c_nationkey, 'sum_bal_c', sum_bal_c FROM w
       UNION ALL
-      SELECT c_nationkey, 'max_bal_c', max_bal_c FROM w""",
+      SELECT c_nationkey, 'max_bal_c', max_bal_c FROM w"""),
     // same cents-banded classes; l = distinct sensitive values
-    "q172_l_diversity" -> s"""
+    QuerySpec("q172_l_diversity", q172_l_diversity, s"""
       SELECT c_nationkey,
              (${centsSql("c_acctbal")} + 100000) // 100000 AS bal_band,
              count(*) AS n,
              CAST(count(DISTINCT c_mktsegment) AS BIGINT) AS l
       FROM customer
       GROUP BY 1, 2
-      HAVING count(DISTINCT c_mktsegment) < 4""",
+      HAVING count(DISTINCT c_mktsegment) < 4"""),
     // host/lang rebuilt directly from the construction inputs
-    "q173_domain_stats" ->
+    QuerySpec("q173_domain_stats", q173_domain_stats,
       """SELECT source || '.example.com' AS host,
                 count(*) AS n_docs,
                 CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-         FROM documents GROUP BY 1""",
+         FROM documents GROUP BY 1"""),
     // same integer rule battery: split/list_distinct/replace arithmetic
-    "q168_gopher_quality" -> s"""
+    QuerySpec("q168_gopher_quality", q168_gopher_quality, s"""
       WITH st AS (
         SELECT source,
                $tokCountSql AS n,
@@ -7936,9 +7577,9 @@ object Queries {
              CAST(sum(CASE WHEN NOT (n < 30) AND NOT (nd*100 < n*45)
                             AND NOT (sumlen*2 > n*9) AND NOT (stop*20 < n)
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-      FROM st GROUP BY source""",
+      FROM st GROUP BY source"""),
     // max of count*strlen(bigram) — the same tie-independent product
-    "q169_top_bigram" ->
+    QuerySpec("q169_top_bigram", q169_top_bigram,
       """WITH toks AS (
            SELECT doc_id, source, CAST(strlen(text) AS BIGINT) AS nc,
                   string_split(text, ' ') AS tk
@@ -7959,17 +7600,17 @@ object Queries {
                 CAST(sum(CASE WHEN covered*20 > nc*3 THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_repetitive,
                 CAST(max((covered*1000000)//nc) AS BIGINT) AS max_cov_ppm
-         FROM top GROUP BY source""",
-    "q167_collation" ->
+         FROM top GROUP BY source"""),
+    QuerySpec("q167_collation", q167_collation,
       """WITH d AS (
            SELECT CASE WHEN doc_id % 2 = 0 THEN upper(lang) ELSE lang END
                     AS lang_cased
            FROM documents)
          SELECT lower(lang_cased) AS lang, count(*) AS n_docs,
                 CAST(count(DISTINCT lang_cased) AS BIGINT) AS n_casings
-         FROM d GROUP BY 1""",
+         FROM d GROUP BY 1"""),
     // DuckDB runs the identical LATERAL shape natively
-    "q166_lateral_topk" ->
+    QuerySpec("q166_lateral_topk", q166_lateral_topk,
       """SELECT c.c_custkey, o.o_orderkey, o.price_c
          FROM customer c
          JOIN LATERAL (
@@ -7979,17 +7620,17 @@ object Queries {
            WHERE o_custkey = c.c_custkey
            ORDER BY o_totalprice DESC, o_orderkey
            LIMIT 2) o ON TRUE
-         WHERE c.c_custkey <= 50""",
+         WHERE c.c_custkey <= 50"""),
     // DuckDB's JSON extraction replays the variant_get field access
-    "q165_variant" ->
+    QuerySpec("q165_variant", q165_variant,
       """SELECT event_type, count(*) AS n,
               CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
                 AS BIGINT) AS sum_k,
               CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT))
                 AS BIGINT) AS max_k
-         FROM events GROUP BY 1""",
+         FROM events GROUP BY 1"""),
     // identical time-interval RANGE frame semantics in both engines
-    "q163_time_range_frame" -> s"""
+    QuerySpec("q163_time_range_frame", q163_time_range_frame, s"""
       WITH ev AS (
         SELECT event_id, user_id, ts, ${centsSql("value")} AS v FROM events)
       SELECT event_id, user_id,
@@ -7997,36 +7638,36 @@ object Queries {
              count(*) OVER w AS hour_n
       FROM ev
       WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                   RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""",
+                   RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"""),
     // IS NOT DISTINCT FROM = Spark's <=>; the null bucket matches itself
     // quadratically, real keys 1:1
-    "q164_nullsafe_join" ->
+    QuerySpec("q164_nullsafe_join", q164_nullsafe_join,
       """WITH o AS (
            SELECT CASE WHEN o_orderkey % 997 = 0 THEN NULL
                        ELSE o_orderkey END AS k
            FROM orders)
          SELECT a.k IS NULL AS is_null_bucket, count(*) AS n_matches
          FROM o a JOIN o b ON a.k IS NOT DISTINCT FROM b.k
-         GROUP BY 1""",
+         GROUP BY 1"""),
     // the oracle states the pruned star join from the source table;
     // isodow 1 = Monday (Spark dayofweek: Sunday=1, Monday=2)
-    "q162_dynamic_pruning" -> s"""
+    QuerySpec("q162_dynamic_pruning", q162_dynamic_pruning, s"""
       SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS d, count(*) AS n,
              CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_v
       FROM events
       WHERE isodow(CAST(ts AS DATE)) = 1
-      GROUP BY 1""",
+      GROUP BY 1"""),
     // identical (doc_id, epoch) mix; overflow: (1e9 + 3*131)*2654435761
     // < 2^63
-    "q161_epoch_order" ->
+    QuerySpec("q161_epoch_order", q161_epoch_order,
       """SELECT doc_id,
               CAST(unnest(generate_series(1, 3)) AS BIGINT) AS epoch,
               ((doc_id % 1000000000
                 + CAST(unnest(generate_series(1, 3)) AS BIGINT) * 131)
                 * 2654435761) % 1000000007 AS order_key
-         FROM documents""",
+         FROM documents"""),
     // q138's winnowing pair chain + the cross-language restriction
-    "q160_bitext_candidates" ->
+    QuerySpec("q160_bitext_candidates", q160_bitext_candidates,
       """WITH g AS (
            SELECT doc_id,
              list_transform(range(1, greatest(len(text)-7, 1)+1),
@@ -8054,15 +7695,15 @@ object Queries {
          FROM pairs
          JOIN documents da ON da.doc_id = id_a
          JOIN documents db ON db.doc_id = id_b
-         WHERE da.lang <> db.lang""",
+         WHERE da.lang <> db.lang"""),
     // identical quasi-identifier banding and k threshold
-    "q159_k_anonymity" ->
+    QuerySpec("q159_k_anonymity", q159_k_anonymity,
       """SELECT lang, source, n_chars // 100 AS len_band, count(*) AS n
          FROM documents
-         GROUP BY 1, 2, 3 HAVING count(*) < 5""",
+         GROUP BY 1, 2, 3 HAVING count(*) < 5"""),
     // same power-of-two decay: 2^20 // (1 << age), zero past 20 days —
     // exact integers, no float exponentials
-    "q158_time_decay" -> s"""
+    QuerySpec("q158_time_decay", q158_time_decay, s"""
       WITH ev AS (
         SELECT user_id, CAST(ts AS DATE) AS d, ${centsSql("value")} AS v
         FROM events),
@@ -8077,10 +7718,10 @@ object Queries {
              CAST(sum(v * wt) AS BIGINT) AS decayed_c,
              CAST(sum(CASE WHEN wt > 0 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_in_horizon
-      FROM w GROUP BY 1""",
+      FROM w GROUP BY 1"""),
     // same k-th-order-statistic thresholds (k = 1 + (n-1)p//100, exact
     // cents, no interpolation) and the same clamp arithmetic
-    "q157_winsorize" -> s"""
+    QuerySpec("q157_winsorize", q157_winsorize, s"""
       WITH ev AS (
         SELECT event_type, event_id, ${centsSql("value")} AS v FROM events),
       c AS (SELECT event_type, count(*) AS n FROM ev GROUP BY 1),
@@ -8098,10 +7739,10 @@ object Queries {
              CAST(sum(greatest(least(v, p_hi), p_lo)) AS BIGINT) AS sum_wins,
              CAST(sum(CASE WHEN v < p_lo OR v > p_hi THEN 1 ELSE 0 END)
                AS BIGINT) AS n_clipped
-      FROM ev JOIN th USING (event_type) GROUP BY 1""",
+      FROM ev JOIN th USING (event_type) GROUP BY 1"""),
     // complete-mode stream equals the batch agg (q38 contract); top 3 by
     // (n DESC, user_id) replayed with row_number
-    "q156_stream_window_topk" ->
+    QuerySpec("q156_stream_window_topk", q156_stream_window_topk,
       """WITH c AS (
            SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS w_start,
                   event_type, count(*) AS n
@@ -8110,11 +7751,11 @@ object Queries {
            SELECT w_start, event_type, n,
                   row_number() OVER (PARTITION BY w_start
                     ORDER BY n DESC, event_type) AS rn
-           FROM c) WHERE rn <= 3""",
+           FROM c) WHERE rn <= 3""", streaming = true),
     // same sqrt quotas over a 3/2-corpus budget; every lang emits exactly
     // quota rows: full repeats (quota // c) + the first (quota % c) docs
     // by mix rank once more
-    "q154_epoch_repeat" ->
+    QuerySpec("q154_epoch_repeat", q154_epoch_repeat,
       """WITH c AS (SELECT lang, count(*) AS c FROM documents GROUP BY 1),
          q AS (SELECT lang, c, CAST(floor(sqrt(c)) AS BIGINT) AS isq FROM c),
          tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
@@ -8136,17 +7777,17 @@ object Queries {
            FROM r JOIN quota ON r.lang = quota.lang)
          SELECT doc_id, lang, CAST(unnest(generate_series(1, eps)) AS BIGINT)
                   AS epoch
-         FROM p WHERE eps >= 1""",
+         FROM p WHERE eps >= 1"""),
     // violations-only contract (q96 pattern): the gate passes when the
     // sketch honors its error bound, i.e. both sides are empty
-    "q153_stream_window_ndv" ->
+    QuerySpec("q153_stream_window_ndv", q153_stream_window_ndv,
       """SELECT CAST(NULL AS TIMESTAMP) AS w_start,
               CAST(NULL AS BIGINT) AS exact_ndv,
               CAST(NULL AS BIGINT) AS approx_ndv
-         WHERE FALSE""",
+         WHERE FALSE""", streaming = true),
     // one SELECT per declared constraint, names matching the Scala
     // Constraint.name strings exactly
-    "q152_validate" ->
+    QuerySpec("q152_validate", q152_validate,
       """SELECT 'not_null(l_orderkey)' AS check_name,
               CAST(sum(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_violations
@@ -8173,18 +7814,18 @@ object Queries {
          UNION ALL
          SELECT 'fk(l_partkey)', CAST(count(*) AS BIGINT)
          FROM lineitem WHERE l_partkey IS NOT NULL
-           AND l_partkey NOT IN (SELECT p_partkey FROM part)""",
+           AND l_partkey NOT IN (SELECT p_partkey FROM part)"""),
     // gen-1 rows (even ids) carry no n_chars; mergeSchema null-fills
-    "q146_schema_evolution" ->
+    QuerySpec("q146_schema_evolution", q146_schema_evolution,
       """SELECT lang, count(*) AS n_docs,
               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
                 AS n_v2,
               CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END)
                 AS BIGINT) AS sum_chars
-         FROM documents GROUP BY lang""",
+         FROM documents GROUP BY lang"""),
     // winnowing (k=8, w=16): per-gram q25 rolling hash, window minima,
     // distinct per doc — bit-identical integer arithmetic both engines
-    "q137_winnowing" ->
+    QuerySpec("q137_winnowing", q137_winnowing,
       """WITH g AS (
            SELECT doc_id,
              list_transform(range(1, greatest(len(text)-7, 1)+1),
@@ -8199,9 +7840,9 @@ object Queries {
              list_distinct(list_transform(range(1, greatest(len(gh)-15, 1)+1),
                j -> list_min(gh[CAST(j AS INT):CAST(j+15 AS INT)]))) AS fps
            FROM g)
-         SELECT doc_id, unnest(fps) AS fp FROM w""",
+         SELECT doc_id, unnest(fps) AS fp FROM w"""),
     // q137's extraction + df<=50 prune + bucket self-join + n_shared>=3
-    "q138_winnowing_pairs" ->
+    QuerySpec("q138_winnowing_pairs", q138_winnowing_pairs,
       """WITH g AS (
            SELECT doc_id,
              list_transform(range(1, greatest(len(text)-7, 1)+1),
@@ -8223,58 +7864,58 @@ object Queries {
                 CAST(count(*) AS BIGINT) AS n_shared
          FROM pr a JOIN pr b ON a.fp = b.fp AND a.doc_id < b.doc_id
          GROUP BY 1, 2
-         HAVING count(*) >= 3""",
-    "q93_bpeish_tokens" -> {
+         HAVING count(*) >= 3"""),
+    QuerySpec("q93_bpeish_tokens", q93_bpeish_tokens, {
       val aug = "text || ' v' || CAST(doc_id % 100 AS VARCHAR) || '.x!'"
       s"""SELECT doc_id,
                 CAST(length($aug) - length(replace($aug, ' ', '')) + 1 AS BIGINT) AS n_ws,
                 CAST(len(regexp_extract_all($aug, '${TextAnalysis.BpeishPattern}')) AS BIGINT) AS n_bpe
          FROM documents"""
-    },
-    "q91_group_median" ->
+    }),
+    QuerySpec("q91_group_median", q91_group_median,
       s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
                 quantile_cont(${centsSql("o_totalprice")}, 0.25) AS p25_c,
                 quantile_cont(${centsSql("o_totalprice")}, 0.5) AS median_c,
                 quantile_cont(${centsSql("o_totalprice")}, 0.75) AS p75_c
-         FROM orders GROUP BY o_orderpriority""",
-    "q84_ngram_topk" ->
+         FROM orders GROUP BY o_orderpriority"""),
+    QuerySpec("q84_ngram_topk", q84_ngram_topk,
       """SELECT gram, CAST(count(*) AS BIGINT) AS df FROM (
            SELECT unnest(list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1),
                                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
              ELSE [text] END)) AS gram
            FROM (SELECT text, string_split(text, ' ') AS toks FROM documents))
-         GROUP BY gram ORDER BY df DESC, gram LIMIT 20""",
-    "q85_inverted_index" ->
+         GROUP BY gram ORDER BY df DESC, gram LIMIT 20"""),
+    QuerySpec("q85_inverted_index", q85_inverted_index,
       """SELECT token, CAST(count(*) AS BIGINT) AS df,
                 array_to_string(list_sort(list(doc_id)), ',') AS postings
          FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token
                FROM documents)
          GROUP BY token
-         HAVING count(*) <= (SELECT count(*) * 78 // 100 FROM documents)""",
-    "q94_zorder_roundtrip" ->
+         HAVING count(*) <= (SELECT count(*) * 78 // 100 FROM documents)"""),
+    QuerySpec("q94_zorder_roundtrip", q94_zorder_roundtrip,
       """SELECT l_orderkey, l_partkey, l_quantity FROM lineitem
-         WHERE l_orderkey BETWEEN 100 AND 700 AND l_partkey BETWEEN 50 AND 150""",
+         WHERE l_orderkey BETWEEN 100 AND 700 AND l_partkey BETWEEN 50 AND 150"""),
     // the oracle reads the SOURCE: the partitioned write + pruned read
     // must be the identity on the lang='en' slice
-    "q133_partitioned_write" ->
-      "SELECT doc_id, lang, source, n_chars FROM documents WHERE lang = 'en'",
+    QuerySpec("q133_partitioned_write", q133_partitioned_write,
+      "SELECT doc_id, lang, source, n_chars FROM documents WHERE lang = 'en'"),
     // the corruption rule IS the expected outcome
-    "q134_json_permissive" ->
+    QuerySpec("q134_json_permissive", q134_json_permissive,
       """SELECT o_orderkey,
                 CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END AS k_val,
                 CAST(CASE WHEN o_orderkey % 7 = 0 THEN 1 ELSE 0 END AS BIGINT)
                   AS is_corrupt
-         FROM orders""",
-    "q95_sketch_quantiles" ->
+         FROM orders"""),
+    QuerySpec("q95_sketch_quantiles", q95_sketch_quantiles,
       """SELECT CAST(NULL AS VARCHAR) AS lang, CAST(NULL AS BIGINT) AS q_idx,
                 CAST(NULL AS DOUBLE) AS approx
-         WHERE FALSE""",
-    "q96_hll_ndv" ->
+         WHERE FALSE"""),
+    QuerySpec("q96_hll_ndv", q96_hll_ndv,
       """SELECT CAST(NULL AS VARCHAR) AS l_returnflag,
                 CAST(NULL AS BIGINT) AS exact_ndv, CAST(NULL AS BIGINT) AS approx_ndv
-         WHERE FALSE""",
-    "q97_corpus_pipeline" ->
+         WHERE FALSE"""),
+    QuerySpec("q97_corpus_pipeline", q97_corpus_pipeline,
       s"""WITH scored AS (
            SELECT doc_id, lang, text, $tokCountSql AS n_tokens,
                   $qualitySql AS quality
@@ -8290,19 +7931,19 @@ object Queries {
                   PARTITION BY lang ORDER BY doc_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 1000
                   AS BIGINT) AS shard_id
-         FROM dedup""",
+         FROM dedup"""),
     // Closure replay: same star edges, reachability as a recursive CTE
     // (UNION-dedup bounds the state), component = min reachable id.
-    "q98_dup_clusters" ->
+    QuerySpec("q98_dup_clusters", q98_dup_clusters,
       s"""WITH RECURSIVE $dupClosureCtesSql
          SELECT id AS doc_id, CAST(component AS BIGINT) AS component,
                 CAST(CASE WHEN component = id THEN 1 ELSE 0 END AS BIGINT)
                   AS is_canonical
-         FROM comp""",
+         FROM comp"""),
     // Same mixture math declaratively: totals per weighted lang, binding
     // stratum by t/w (double ratio, lang tie-break — same IEEE compare
     // as the operator), integer cross-multiplied keep predicate.
-    "q99_mixture_sample" ->
+    QuerySpec("q99_mixture_sample", q99_mixture_sample,
       s"""WITH toks AS (
            SELECT doc_id, lang, $tokCountSql AS n_tokens,
                   ((doc_id % 1000000000) * 2654435761) % 10000 AS bucket
@@ -8318,10 +7959,10 @@ object Queries {
          SELECT d.doc_id, d.lang, d.n_tokens, d.bucket
          FROM toks d JOIN tw ON tw.lang = d.lang CROSS JOIN m
          WHERE d.bucket * CAST(m.wstar AS HUGEINT) * tw.t
-               < CAST(10000 AS HUGEINT) * tw.wt * m.tstar""",
+               < CAST(10000 AS HUGEINT) * tw.wt * m.tstar"""),
     // Per-user hourly spine via generate_series (inclusive, like Spark's
     // sequence); IGNORE NULLS last_value = the forward fill.
-    "q100_ts_gapfill" ->
+    QuerySpec("q100_ts_gapfill", q100_ts_gapfill,
       s"""WITH e AS (
            SELECT user_id, date_trunc('hour', ts) AS h, value
            FROM events WHERE user_id < 40),
@@ -8341,25 +7982,25 @@ object Queries {
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
                   AS BIGINT) AS sum_value_c
          FROM spine s LEFT JOIN hourly hr
-           ON hr.user_id = s.user_id AND hr.h = s.h""",
+           ON hr.user_id = s.user_id AND hr.h = s.h"""),
     // The bloom prune is result-transparent (exact join removes false
     // positives), so the oracle is simply the unpruned join.
-    "q101_bloom_join" ->
+    QuerySpec("q101_bloom_join", q101_bloom_join,
       s"""SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT)
                   AS revenue_c
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          WHERE o_orderpriority = '1-URGENT'
-         GROUP BY l_returnflag""",
+         GROUP BY l_returnflag"""),
     // pivot∘unpivot = identity on non-empty cells = the plain GROUP BY
-    "q102_pivot_unpivot" ->
+    QuerySpec("q102_pivot_unpivot", q102_pivot_unpivot,
       s"""SELECT l_returnflag, l_linestatus,
                 CAST(sum(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_c
          FROM lineitem WHERE l_linestatus IN ('F', 'O')
-         GROUP BY l_returnflag, l_linestatus""",
+         GROUP BY l_returnflag, l_linestatus"""),
     // Same dimension-parallel expansion via lateral unnest over indexes;
     // 2^-20 fixed-point quantization is exact on both sides.
-    "q103_label_centroids" ->
+    QuerySpec("q103_label_centroids", q103_label_centroids,
       """WITH ex AS (
            SELECT label, u.i AS dim, e.embedding[u.i + 1] AS v
            FROM embeddings e, unnest(range(len(e.embedding))) AS u(i))
@@ -8369,42 +8010,42 @@ object Queries {
                 CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1048576) AS BIGINT))
                   AS DOUBLE) / count(*) / 1048576.0 AS mean
-         FROM ex GROUP BY label, dim""",
-    "q104_exact_k_sample" ->
+         FROM ex GROUP BY label, dim"""),
+    QuerySpec("q104_exact_k_sample", q104_exact_k_sample,
       """SELECT doc_id, lang FROM (
            SELECT doc_id, lang,
                   row_number() OVER (PARTITION BY lang
                     ORDER BY ((doc_id % 1000000000) * 2654435761) % 1000000007,
                              doc_id) AS rn
-           FROM documents) WHERE rn <= 20""",
+           FROM documents) WHERE rn <= 20"""),
     // From-scratch recompute: the algebraic merge must equal this exactly.
-    "q105_incremental_agg" ->
+    QuerySpec("q105_incremental_agg", q105_incremental_agg,
       s"""SELECT l_returnflag, l_linestatus,
                 CAST(sum(${centsSql("l_quantity")}) AS BIGINT) AS q_c_sum,
                 CAST(count(*) AS BIGINT) AS q_c_cnt,
                 CAST(min(${centsSql("l_quantity")}) AS BIGINT) AS q_c_min,
                 CAST(max(${centsSql("l_quantity")}) AS BIGINT) AS q_c_max,
                 CAST(sum(${centsSql("l_quantity")}) AS DOUBLE) / count(*) AS q_c_mean
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
+         FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
     // Salting must be result-invisible: oracle is the plain join.
-    "q106_salted_join" ->
+    QuerySpec("q106_salted_join", q106_salted_join,
       s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT)
                   AS revenue_c
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          WHERE o_orderpriority = '1-URGENT'
-         GROUP BY o_orderpriority""",
+         GROUP BY o_orderpriority"""),
     // Bucketing is a physical-layout property; values = the plain join.
-    "q107_bucketed_join" ->
+    QuerySpec("q107_bucketed_join", q107_bucketed_join,
       s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
                 CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT)
                   AS revenue_c
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderpriority""",
+         GROUP BY o_orderpriority"""),
     // Centroids via the q103 fixed-point math (bit-identical doubles),
     // assignment by the same sequential-fold cosine as the knn oracle,
     // ties to the lowest label.
-    "q108_centroid_assign" -> {
+    QuerySpec("q108_centroid_assign", q108_centroid_assign, {
       val dot = dotSql("ev", "cv"); val nc = dotSql("cv", "cv")
       s"""WITH ex AS (
            SELECT label, u.i AS dim, e.embedding[u.i + 1] AS v
@@ -8428,10 +8069,10 @@ object Queries {
          SELECT CAST(label AS BIGINT) AS label,
                 CAST(c_label AS BIGINT) AS assigned,
                 CAST(count(*) AS BIGINT) AS n
-         FROM best GROUP BY label, c_label""" },
+         FROM best GROUP BY label, c_label""" }),
     // q98's closure + q97's quality formula; best-per-cluster by
     // (quality DESC, doc_id).
-    "q109_canonical_pick" ->
+    QuerySpec("q109_canonical_pick", q109_canonical_pick,
       s"""WITH RECURSIVE $dupClosureCtesSql,
          scored AS (
            SELECT doc_id, lang, $qualitySql AS quality
@@ -8441,11 +8082,11 @@ object Queries {
                   row_number() OVER (PARTITION BY c.component
                     ORDER BY s.quality DESC, s.doc_id) AS rn
            FROM comp c JOIN scored s ON s.doc_id = c.id)
-         WHERE rn = 1""",
+         WHERE rn = 1"""),
     // Brute-force all-pairs over the vocabulary — sound as an oracle
     // because the vocab is tiny; the operator's blocking must find the
     // exact same set.
-    "q110_fuzzy_join" ->
+    QuerySpec("q110_fuzzy_join", q110_fuzzy_join,
       """WITH v AS (
            SELECT DISTINCT unnest(string_split(text, ' ')) AS w
            FROM documents),
@@ -8453,8 +8094,8 @@ object Queries {
          SELECT a.w AS word_a, b.w AS word_b,
                 CAST(levenshtein(a.w, b.w) AS BIGINT) AS dist
          FROM v2 a, v2 b
-         WHERE a.w < b.w AND levenshtein(a.w, b.w) <= 2""",
-    "q111_funnel" ->
+         WHERE a.w < b.w AND levenshtein(a.w, b.w) <= 2"""),
+    QuerySpec("q111_funnel", q111_funnel,
       """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
                   WHERE event_type = 'view' GROUP BY user_id),
          c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
@@ -8467,16 +8108,16 @@ object Queries {
                GROUP BY e.user_id)
          SELECT CAST((SELECT count(*) FROM v) AS BIGINT) AS n_view,
                 CAST((SELECT count(*) FROM c) AS BIGINT) AS n_click,
-                CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase""",
-    "q112_heavy_hitters" ->
+                CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase"""),
+    QuerySpec("q112_heavy_hitters", q112_heavy_hitters,
       """SELECT CAST(NULL AS VARCHAR) AS lang, CAST(NULL AS VARCHAR) AS kind,
                 CAST(NULL AS VARCHAR) AS item, CAST(NULL AS BIGINT) AS got,
                 CAST(NULL AS BIGINT) AS want
-         WHERE FALSE""",
-    "q113_pagerank" -> pageRankOracleSql(iterations = 3, scale = 1L << 20),
+         WHERE FALSE"""),
+    QuerySpec("q113_pagerank", q113_pagerank, pageRankOracleSql(iterations = 3, scale = 1L << 20)),
     // Same dirty-text derivation, RE2 patterns with 'g' (= Java
     // replaceAll); counts via regexp_extract_all length.
-    "q114_pii_scrub" -> {
+    QuerySpec("q114_pii_scrub", q114_pii_scrub, {
       val email = graft.operators.TextAnalysis.EmailPattern
       val phone = graft.operators.TextAnalysis.PhonePattern
       val ip = graft.operators.TextAnalysis.IpPattern
@@ -8501,10 +8142,10 @@ object Queries {
                   '$email', '<EMAIL>', 'g'),
                   '$phone', '<PHONE>', 'g'),
                   '$ip', '<IP>', 'g') AS clean
-         FROM dirty""" },
+         FROM dirty""" }),
     // q84's gram construction (distinct per doc), per-source df, >30%
     // integer cross-multiplied threshold, count(b.gram) = non-null.
-    "q115_boilerplate" ->
+    QuerySpec("q115_boilerplate", q115_boilerplate,
       """WITH g AS (
            SELECT doc_id, source, unnest(list_distinct(CASE WHEN len(toks) >= 3
              THEN list_transform(range(1, len(toks)-1),
@@ -8521,10 +8162,10 @@ object Queries {
          SELECT g.doc_id, g.source, CAST(count(*) AS BIGINT) AS n_grams,
                 CAST(count(b.gram) AS BIGINT) AS n_boiler
          FROM g LEFT JOIN b ON b.source = g.source AND b.gram = g.gram
-         GROUP BY g.doc_id, g.source""",
+         GROUP BY g.doc_id, g.source"""),
     // Same stride-aligned window arithmetic (positions 1 + 10·i, i in
     // 0..(len-40)//10), distinct per doc, df ≥ 2 = duplicated.
-    "q117_window_dedup" ->
+    QuerySpec("q117_window_dedup", q117_window_dedup,
       """WITH w AS (
            SELECT DISTINCT doc_id, substr(text, 1 + 10 * CAST(u.i AS INTEGER), 40) AS w
            FROM documents, unnest(range((length(text) - 40) // 10 + 1)) AS u(i)
@@ -8535,10 +8176,10 @@ object Queries {
          SELECT d.doc_id,
                 CAST(coalesce(per.n_windows, 0) AS BIGINT) AS n_windows,
                 CAST(coalesce(per.n_dup, 0) AS BIGINT) AS n_dup
-         FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""",
+         FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id"""),
     // Identical chunk-count / start / length integer arithmetic over
     // string_split tokens; list_slice's inclusive end = start + len - 1.
-    "q118_chunking" ->
+    QuerySpec("q118_chunking", q118_chunking,
       """WITH x AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
          c AS (SELECT doc_id, toks,
                       CAST(u.i AS BIGINT) AS chunk_id,
@@ -8549,10 +8190,10 @@ object Queries {
          SELECT doc_id, chunk_id,
                 array_to_string(list_slice(toks, st, st + l - 1), ' ') AS chunk,
                 CAST(l AS BIGINT) AS n_tokens
-         FROM c""",
+         FROM c"""),
     // q103's 2^-20 fixed point, then nonnegative-only floor division:
     // sign(v)·((|v|·127) // max) — identical in DuckDB and Spark.
-    "q119_int8_quantize" ->
+    QuerySpec("q119_int8_quantize", q119_int8_quantize,
       """WITH ex AS (
            SELECT vec_id, u.i AS dim,
                   CAST(round(CAST(e.embedding[u.i + 1] AS DOUBLE) * 1048576)
@@ -8564,10 +8205,10 @@ object Queries {
                      ELSE CAST(sign(v) AS BIGINT) * ((abs(v) * 127) // m)
                 END AS q8,
                 CAST(m AS BIGINT) AS max_q
-         FROM ex JOIN mx ON mx.vec_id = ex.vec_id""",
+         FROM ex JOIN mx ON mx.vec_id = ex.vec_id"""),
     // Cumulative-histogram thresholds (smallest value whose cumulative
     // count crosses ¼ / ¾ of the stratum), band predicate on values.
-    "q116_band_filter" ->
+    QuerySpec("q116_band_filter", q116_band_filter,
       """WITH h AS (SELECT lang, n_chars, count(*) AS c
                   FROM documents GROUP BY lang, n_chars),
          cum AS (SELECT lang, n_chars,
@@ -8580,8 +8221,8 @@ object Queries {
                 FROM cum GROUP BY lang)
          SELECT doc_id, d.lang, n_chars
          FROM documents d JOIN th ON th.lang = d.lang
-         WHERE n_chars > th.lo AND n_chars <= th.hi""",
-    "q68_repetition" ->
+         WHERE n_chars > th.lo AND n_chars <= th.hi"""),
+    QuerySpec("q68_repetition", q68_repetition,
       """WITH x AS (
            SELECT doc_id,
              CAST(CASE WHEN len(toks) >= 3 THEN len(toks) - 2 ELSE 1 END AS BIGINT) AS n_grams,
@@ -8591,12 +8232,12 @@ object Queries {
            FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents))
          SELECT doc_id, n_grams, n_distinct,
                 CAST(n_grams - n_distinct AS DOUBLE) / CAST(n_grams AS DOUBLE) AS rep_frac
-         FROM x""",
-    "q32_events_window" ->
+         FROM x"""),
+    QuerySpec("q32_events_window", q32_events_window,
       s"""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, event_type, count(*) AS n,
          CAST(sum(${centsSql("value")}) AS BIGINT) AS sum_value_c
-         FROM events GROUP BY 1, 2""",
-    "q33_asof_join" ->
+         FROM events GROUP BY 1, 2"""),
+    QuerySpec("q33_asof_join", q33_asof_join,
       """WITH m AS (
            SELECT e.event_id, max(o.o_orderdate) AS asof_date
            FROM events e JOIN orders o
@@ -8607,8 +8248,8 @@ object Queries {
          FROM events e
          JOIN m ON m.event_id = e.event_id
          JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate = m.asof_date
-         GROUP BY e.event_id, e.user_id, m.asof_date""",
-    "q34_sessionize" ->
+         GROUP BY e.event_id, e.user_id, m.asof_date"""),
+    QuerySpec("q34_sessionize", q34_sessionize,
       """WITH x AS (
            SELECT user_id, ts,
                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts
@@ -8617,47 +8258,47 @@ object Queries {
                 CAST(sum(CASE WHEN pts IS NULL
                               OR (epoch_us(ts) - epoch_us(pts)) > 1800000000
                               THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions
-         FROM x GROUP BY user_id""",
-    "q35_multimodal" ->
+         FROM x GROUP BY user_id"""),
+    QuerySpec("q35_multimodal", q35_multimodal,
       """SELECT CAST(doc_id AS BIGINT) AS media_id,
          CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
          CAST(CASE WHEN doc_id % 2 = 0 THEN 33 ELSE 23 END AS BIGINT) AS n_bytes,
          CAST(1 + doc_id % 1024 AS INTEGER) AS width,
          CAST(1 + (doc_id*7) % 768 AS INTEGER) AS height,
-         3 AS channels FROM documents""",
-    "q36_json" ->
+         3 AS channels FROM documents"""),
+    QuerySpec("q36_json", q36_json,
       """SELECT event_type, count(*) AS n,
          CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
          max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-         FROM events GROUP BY event_type""",
-    "q37_txn_visibility" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0",
+         FROM events GROUP BY event_type"""),
+    QuerySpec("q37_txn_visibility", q37_txn_visibility,
+      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0"),
     // the t1 snapshot: %3==0 only (t2's %3==1 slice is committed in the
     // CURRENT state but not as of t1 — a read() here would see both)
-    "q126_txn_timetravel" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0",
+    QuerySpec("q126_txn_timetravel", q126_txn_timetravel,
+      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0"),
     // compaction preserves foldCommitted exactly: current snapshot =
     // subsumed (%4=0) ∪ straddler (%4=1) ∪ live (%4=2) slices with the
     // abort (%4=3) invisible; the straddler's as-of snapshot = base +
     // its own slice — both read from the COMPACTED tape after a cold
     // reopen, both stated declaratively here
-    "q234_txn_compaction" ->
+    QuerySpec("q234_txn_compaction", q234_txn_compaction,
       """SELECT o_orderkey, o_custkey, o_totalprice, 'now' AS snap
          FROM orders WHERE o_orderkey % 4 IN (0, 1, 2)
          UNION ALL
          SELECT o_orderkey, o_custkey, o_totalprice, 'asof_straddler' AS snap
-         FROM orders WHERE o_orderkey % 4 IN (0, 1)""",
+         FROM orders WHERE o_orderkey % 4 IN (0, 1)"""),
     // retention compaction keeps time travel alive INSIDE the retained
     // window: current snapshot = all three slices; the as-of snapshot
     // of the txn committed BETWEEN the two retained checkpoints = the
     // pre-window slice (via the older checkpoint base) + its own —
     // both read from the retention-compacted tape after a cold reopen
-    "q236_txn_retention" ->
+    QuerySpec("q236_txn_retention", q236_txn_retention,
       """SELECT o_orderkey, o_custkey, o_totalprice, 'now' AS snap
          FROM orders WHERE o_orderkey % 3 IN (0, 1, 2)
          UNION ALL
          SELECT o_orderkey, o_custkey, o_totalprice, 'asof_in_window' AS snap
-         FROM orders WHERE o_orderkey % 3 IN (0, 1)""",
+         FROM orders WHERE o_orderkey % 3 IN (0, 1)"""),
     // the three-trigger watermark replay (see q237's scaladoc; rules
     // pinned by WmProbeSpec): the late file's drop watermark = ms-
     // floored max BULK ts - 120h (trigger 1's eviction wm — the value
@@ -8665,7 +8306,7 @@ object Queries {
     // WINDOW END <= that wm (window-end rule, not raw ts); final
     // watermark = ms-floored GLOBAL max ts - 120h (late rows still
     // advance it); a window emits iff its end <= the final wm, once
-    "q237_stream_watermark_eviction" ->
+    QuerySpec("q237_stream_watermark_eviction", q237_stream_watermark_eviction,
       """WITH mx AS (SELECT max(ts) AS m FROM events),
          bulk AS (SELECT e.ts, e.event_type FROM events e, mx
                WHERE e.ts <= mx.m - INTERVAL 5 DAY AND e.event_id % 5 <> 0
@@ -8690,13 +8331,13 @@ object Queries {
                 CAST(count(*) AS BIGINT) AS n
          FROM surv, wmfin
          WHERE (epoch_us(date_trunc('hour', ts)) // 1000) + 3600000 <= wmfin.w
-         GROUP BY 1, 2""",
+         GROUP BY 1, 2""", streaming = true),
     // sessionize's straggler/divergence boundary (see the q238 scaladoc
     // for the per-batch rules being replayed; gap = 30 min = 1.8e9 us,
     // lateness = 120 h = 4.32e8 ms; timeouts use q127's ceil-ms strict-<
     // arithmetic). Slice predicates mirror sessionStragglerStreamDir;
     // the guard band (cutoff, cutoff+1h] is off the tape on both sides.
-    "q238_stream_session_straggler" ->
+    QuerySpec("q238_stream_session_straggler", q238_stream_session_straggler,
       """WITH par AS (SELECT max(ts) - INTERVAL 5 DAY AS c,
                   max(ts) - INTERVAL 5 DAY - INTERVAL 119 HOUR AS lo,
                   max(ts) - INTERVAL 5 DAY + INTERVAL 1 HOUR AS hi
@@ -8822,77 +8463,77 @@ object Queries {
          SELECT s.user_id, s.s_start, s.s_end, s.n_events
          FROM tls s JOIN tllast l ON s.user_id = l.user_id, wmf
          WHERE s.sid < l.msid
-            OR ((epoch_us(s.s_end) + 1800000000 + 999) // 1000) < wmf.w""",
+            OR ((epoch_us(s.s_end) + 1800000000 + 999) // 1000) < wmf.w""", streaming = true),
     // file compaction is a pure layout rewrite: the full relation —
     // including the partition column round-tripped through directory
     // names — must equal the source table exactly
-    "q235_file_compaction" ->
+    QuerySpec("q235_file_compaction", q235_file_compaction,
       s"""SELECT event_id, user_id, event_type,
-            ${centsSql("value")} AS v FROM events""",
-    "q38_stream_window" ->
+            ${centsSql("value")} AS v FROM events"""),
+    QuerySpec("q38_stream_window", q38_stream_window,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS w_start, event_type,
-         count(*) AS n FROM events GROUP BY 1, 2""",
-    "q39_union" ->
+         count(*) AS n FROM events GROUP BY 1, 2""", streaming = true),
+    QuerySpec("q39_union", q39_union,
       """SELECT src, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k FROM (
            SELECT c_custkey AS k, 'cust' AS src FROM customer
            UNION ALL
            SELECT s_suppkey AS k, 'supp' AS src FROM supplier)
-         GROUP BY src""",
-    "q40_cube" ->
+         GROUP BY src"""),
+    QuerySpec("q40_cube", q40_cube,
       s"""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
          CAST(sum(${centsSql("o_totalprice")}) AS BIGINT) AS sum_price_c
-         FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)""",
-    "q41_grouping_sets" ->
+         FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)"""),
+    QuerySpec("q41_grouping_sets", q41_grouping_sets,
       """SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    "q42_subqueries" ->
+         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())"""),
+    QuerySpec("q42_subqueries", q42_subqueries,
       """SELECT c_custkey,
            (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders
          FROM customer c
          WHERE EXISTS (SELECT 1 FROM orders o
-                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)""",
-    "q43_outer_joins" ->
+                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)"""),
+    QuerySpec("q43_outer_joins", q43_outer_joins,
       s"""SELECT c_mktsegment, count(*) AS n_rows, count(o_orderkey) AS n_orders,
          coalesce(CAST(sum(${centsSql("o_totalprice")}) AS BIGINT), 0) AS sum_price_c
          FROM customer c LEFT JOIN
            (SELECT * FROM orders WHERE o_totalprice > 150000) o
            ON c.c_custkey = o.o_custkey
-         GROUP BY c_mktsegment""",
-    "q44_conditional_agg" ->
+         GROUP BY c_mktsegment"""),
+    QuerySpec("q44_conditional_agg", q44_conditional_agg,
       s"""SELECT l_returnflag,
          CAST(sum(CASE WHEN l_quantity < 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_small,
          CAST(sum(CASE WHEN l_quantity >= 40 THEN 1 ELSE 0 END) AS BIGINT) AS n_large,
          CAST(sum(CASE WHEN l_discount > 0.05 THEN ${centsSql("l_extendedprice")} ELSE 0 END) AS BIGINT) AS disc_price_c
-         FROM lineitem GROUP BY l_returnflag""",
+         FROM lineitem GROUP BY l_returnflag"""),
     // Products in HUGEINT (sums already widen there) — n·Σx² overflows
     // BIGINT from sf0.1 up; exact integer → double rounds identically
     // to Spark's decimal(38,0) path.
-    "q45_variance" ->
+    QuerySpec("q45_variance", q45_variance,
       """SELECT o_orderpriority, n,
            CAST(CAST(n AS HUGEINT)*sxx - sx*sx AS DOUBLE) / (n*(n-1)) AS var_price
          FROM (SELECT o_orderpriority, count(*) AS n,
                  sum(CAST(round(o_totalprice) AS BIGINT)) AS sx,
                  sum(CAST(round(o_totalprice) AS BIGINT) * CAST(round(o_totalprice) AS BIGINT)) AS sxx
-               FROM orders GROUP BY o_orderpriority)""",
-    "q46_range_join" ->
+               FROM orders GROUP BY o_orderpriority)"""),
+    QuerySpec("q46_range_join", q46_range_join,
       s"""SELECT p_brand, count(*) AS n,
          CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT) AS sum_price_c
          FROM lineitem l JOIN part p
            ON l.l_partkey = p.p_partkey
           AND l.l_quantity >= p.p_size - 5 AND l.l_quantity <= p.p_size + 5
-         GROUP BY p_brand""",
-    "q48_count_distinct" ->
+         GROUP BY p_brand"""),
+    QuerySpec("q48_count_distinct", q48_count_distinct,
       """SELECT l_returnflag,
          count(DISTINCT l_partkey) AS nd_part,
          count(DISTINCT (l_suppkey, l_partkey)) AS nd_supp_part,
          count(*) AS n
-         FROM lineitem GROUP BY l_returnflag""",
-    "q49_edit_distance" ->
+         FROM lineitem GROUP BY l_returnflag"""),
+    QuerySpec("q49_edit_distance", q49_edit_distance,
       """SELECT p_partkey,
          CAST(levenshtein(p_brand, p_type) AS BIGINT) AS dist_bt,
          CAST(levenshtein(p_name, 'standard polished tin') AS BIGINT) AS dist_std
-         FROM part""",
-    "q50_window_funcs" ->
+         FROM part"""),
+    QuerySpec("q50_window_funcs", q50_window_funcs,
       """SELECT o_orderkey, o_orderpriority,
          rank() OVER w AS rnk,
          dense_rank() OVER w AS drnk,
@@ -8901,8 +8542,8 @@ object Queries {
          lead(o_orderkey, 1) OVER w AS next_key
          FROM orders WHERE o_orderkey <= 2000
          WINDOW w AS (PARTITION BY o_orderpriority
-                      ORDER BY o_totalprice DESC, o_orderkey)""",
-    "q51_tpch_q1" ->
+                      ORDER BY o_totalprice DESC, o_orderkey)"""),
+    QuerySpec("q51_tpch_q1", q51_tpch_q1,
       s"""SELECT l_returnflag, l_linestatus,
          CAST(sum(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_c,
          CAST(sum(${centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_price_c,
@@ -8912,8 +8553,8 @@ object Queries {
          CAST(sum(${centsSql("l_quantity")}) AS DOUBLE)/100/count(*) AS avg_qty,
          CAST(sum(${centsSql("l_extendedprice")}) AS DOUBLE)/100/count(*) AS avg_price
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q52_tpch_q3" ->
+         GROUP BY l_returnflag, l_linestatus"""),
+    QuerySpec("q52_tpch_q3", q52_tpch_q3,
       s"""SELECT l_orderkey, o_orderdate,
          CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT) AS revenue_c
          FROM customer, orders, lineitem
@@ -8922,8 +8563,8 @@ object Queries {
            AND o_orderdate < TIMESTAMP '1997-03-15 00:00:00'
            AND l_shipdate > TIMESTAMP '1997-03-15 00:00:00'
          GROUP BY l_orderkey, o_orderdate
-         ORDER BY revenue_c DESC, l_orderkey LIMIT 10""",
-    "q53_tpch_q5" ->
+         ORDER BY revenue_c DESC, l_orderkey LIMIT 10"""),
+    QuerySpec("q53_tpch_q5", q53_tpch_q5,
       s"""SELECT n_name,
          CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT) AS revenue_c
          FROM customer, orders, lineitem, supplier, nation, region
@@ -8933,14 +8574,14 @@ object Queries {
            AND r_name = 'ASIA'
            AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY n_name""",
-    "q54_tpch_q6" ->
+         GROUP BY n_name"""),
+    QuerySpec("q54_tpch_q6", q54_tpch_q6,
       s"""SELECT coalesce(CAST(sum(${centsSql("l_extendedprice*l_discount")}) AS BIGINT), 0) AS revenue_c
          FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-           AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""",
-    "q55_tpch_q10" ->
+           AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"""),
+    QuerySpec("q55_tpch_q10", q55_tpch_q10,
       s"""SELECT c_custkey, c_name, n_name,
          CAST(sum(${centsSql("l_extendedprice*(1-l_discount)")}) AS BIGINT) AS revenue_c,
          count(*) AS n_items
@@ -8950,24 +8591,24 @@ object Queries {
            AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
            AND l_returnflag = 'R' AND c_nationkey = n_nationkey
          GROUP BY c_custkey, c_name, n_name
-         ORDER BY revenue_c DESC, c_custkey LIMIT 20""",
-    "q56_topk_custom" ->
+         ORDER BY revenue_c DESC, c_custkey LIMIT 20"""),
+    QuerySpec("q56_topk_custom", q56_topk_custom,
       """SELECT o_custkey, o_orderkey, o_totalprice FROM (
            SELECT o_custkey, o_orderkey, o_totalprice,
                   row_number() OVER (PARTITION BY o_custkey
                     ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders) WHERE rn <= 3""",
-    "q57_frames" ->
+           FROM orders) WHERE rn <= 3"""),
+    QuerySpec("q57_frames", q57_frames,
       """SELECT CAST(doc_id AS BIGINT) AS media_id,
          CAST(unnest(range(0, length(text), 7)) AS BIGINT) AS frame_no,
          CAST(length(text) AS BIGINT) AS n_bytes
-         FROM documents""",
-    "q58_explode" ->
+         FROM documents"""),
+    QuerySpec("q58_explode", q58_explode,
       """SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos, toks[u.i] AS token
          FROM (SELECT doc_id, string_split(text, ' ') AS toks
                FROM documents WHERE doc_id < 50) d,
-              unnest(range(1, len(toks)+1)) AS u(i)""",
-    "q59_running_sum" ->
+              unnest(range(1, len(toks)+1)) AS u(i)"""),
+    QuerySpec("q59_running_sum", q59_running_sum,
       s"""SELECT o_custkey, o_orderkey,
          CAST(sum(${centsSql("o_totalprice")}) OVER (
            PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -8975,16 +8616,16 @@ object Queries {
          CAST(max(${centsSql("o_totalprice")}) OVER (
            PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
            ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT) AS max3_c
-         FROM orders WHERE o_custkey < 300""",
-    "q60_array_funcs" ->
+         FROM orders WHERE o_custkey < 300"""),
+    QuerySpec("q60_array_funcs", q60_array_funcs,
       """SELECT vec_id,
          CAST(len(embedding) AS BIGINT) AS dim,
          CAST(embedding[1] AS DOUBLE) AS first_v,
          CAST(list_min(embedding) AS DOUBLE) AS min_v,
          CAST(list_max(embedding) AS DOUBLE) AS max_v,
          CAST(list_sort(embedding)[3] AS DOUBLE) AS third_smallest
-         FROM embeddings WHERE vec_id < 256""",
-    "q47_full_outer" ->
+         FROM embeddings WHERE vec_id < 256"""),
+    QuerySpec("q47_full_outer", q47_full_outer,
       s"""SELECT k,
          coalesce(${centsSql("c_acctbal")}, -1) AS acctbal_c,
          coalesce(n_ord, 0) AS n_ord
@@ -8992,5 +8633,34 @@ object Queries {
          FULL OUTER JOIN
            (SELECT o_custkey AS k, count(*) AS n_ord FROM orders
             WHERE o_custkey >= 50 GROUP BY o_custkey) b
-         USING (k)""")
+         USING (k)"""))
+
+  /** What is wrong with a registry, one line per problem:
+    *   - a repeated name (a later row would silently shadow the earlier
+    *     one in [[all]]);
+    *   - two names sharing a numeric prefix (the bench's compact stdout
+    *     line keys by it, "q52_tpch_q3" -> "q52", so they would collide
+    *     into one JSON key with last-writer-wins timings);
+    *   - a stream-named row not marked `streaming` (one honest naming
+    *     accident away from mixing the bench's two stabilization
+    *     policies — tag it or rename it).
+    */
+  private[graft] def registryProblems(rows: Seq[QuerySpec]): Seq[String] = {
+    val names = rows.map(_.name)
+    val dupes = names.diff(names.distinct).distinct
+      .map(n => s"query name registered twice: $n")
+    val prefixes = names.distinct.groupBy(_.takeWhile(_ != '_'))
+      .collect { case (p, ns) if ns.size > 1 =>
+        s"numeric prefix $p shared by ${ns.sorted.mkString(", ")}" }
+    val untagged = rows.collect { case q if q.name.contains("stream") && !q.streaming =>
+      s"stream-named query not marked streaming: ${q.name}" }
+    dupes ++ prefixes.toSeq.sorted ++ untagged
+  }
+  require(registryProblems(specs).isEmpty,
+    s"query registry: ${registryProblems(specs).mkString("; ")}")
+
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+  val oracle: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
+  val streamingQueries: Set[String] = specs.filter(_.streaming).map(_.name).toSet
 }

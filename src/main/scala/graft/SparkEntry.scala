@@ -11,10 +11,11 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
   /** The streaming-tagged subset of [[queries]] — the bench keys its
     * stream-median / no-challenge-rerun policy off this registry, never
-    * off a name substring (see [[Queries.streamingQueries]]).
+    * off a name substring (see [[Queries.QuerySpec]]).
     */
   def streamingQueries: Set[String] = Queries.streamingQueries
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Every query has one: a [[Queries.QuerySpec]]
+    * row cannot be written without it. */
   def oracleSql: Map[String, String] = Queries.oracle
 }

@@ -26,7 +26,7 @@ object StreamFloorProbe {
 
     // tape: the same event volume as q62, cut into nFiles segments so
     // the run holds nFiles triggers instead of one
-    val tape = s"/tmp/graft-floorprobe-${ProcessHandle.current().pid()}"
+    val tape = graft.core.Scratch.scratch("floorprobe")
     graft.core.Catalog.table(s, sfDir, "events")
       .repartition(nFiles).write.mode("overwrite").parquet(tape)
 

@@ -203,11 +203,9 @@ object StreamWriteProbe {
               (col("value") * 100).cast("long")).as[(Long, Long)]).toDF()
       }
 
-      // pidScratch registers the checkpoint dir with the repo's scratch
-      // reaper (shutdown hook + dead-pid startup sweep) — per-run
-      // streaming checkpoints are garbage the moment the probe exits
-      val ckpt = graft.Queries.pidScratch(
-        s"/tmp/graft-writeprobe-ckpt-${ProcessHandle.current().pid()}-$copies")
+      // under the process's scratch root (exit hook + dead-pid reaper):
+      // per-run streaming checkpoints are garbage the moment the probe exits
+      val ckpt = graft.core.Scratch.scratch(s"writeprobe-ckpt-$copies")
       val t0 = System.nanoTime()
       val q = piped.writeStream.format("noop")
         .option("checkpointLocation", ckpt)

@@ -19,11 +19,12 @@ package graft
   */
 object WriteAudit {
   /** The audited set: every batch query whose operator under test IS a
-    * write (PlanAudit.writePathQueries) plus the streaming lakehouse
-    * sink q220 (planless, write-path by construction). q162 is
-    * excluded deliberately: its day-partitioned fact layout is STAGED
-    * input plumbing (Bench stages it in warmup; the query is the DPP
-    * read), so it has no per-run write to audit.
+    * write — constructing its DataFrame performs scratch deletes and
+    * parquet/table writes before returning the read-back plan — plus the
+    * streaming lakehouse sink q220 (planless, write-path by
+    * construction). q162 is excluded deliberately: its day-partitioned
+    * fact layout is STAGED input plumbing (Bench stages it in warmup;
+    * the query is the DPP read), so it has no per-run write to audit.
     */
   val audited: Seq[String] = Seq(
     "q94_zorder_roundtrip", "q107_bucketed_join", "q121_xml_roundtrip",
@@ -58,18 +59,13 @@ object WriteAudit {
       }
     })
 
-    val pid = ProcessHandle.current().pid().toString
-    // a query's scratch dirs self-identify: graft[-_]q<NUM>[-_]…<pid>…
-    // (q94 → graft_q94_zorder_<pid>_…, q220 → graft-q220-<pid>-…,
-    // q107 → graft_q107_li_<pid>_… / graft_q107_ord_<pid>_…)
+    // a query's scratch dirs are the children of this process's scratch
+    // root tagged with its numeric prefix (q94 → q94-zorder-<slug>,
+    // q220 → q220-<slug>, q107 → q107-li-<slug> / q107-ord-<slug>)
     def scratchDirsFor(qtok: String): Seq[java.nio.file.Path] = {
       import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get("/tmp"))) {
-        _.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.contains(pid) && n.matches(s"graft[-_]$qtok\\b.*|graft[-_]${qtok}[-_].*")
-        }.toList
+      scala.util.Using.resource(java.nio.file.Files.list(graft.core.Scratch.root)) {
+        _.iterator().asScala.filter(_.getFileName.toString.startsWith(s"$qtok-")).toList
       }
     }
     def walkStats(dirs: Seq[java.nio.file.Path]): (Long, Long) = {

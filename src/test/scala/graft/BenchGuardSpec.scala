@@ -45,14 +45,13 @@ class BenchGuardSpec extends AnyFunSuite {
     // The preamble must drive those paths over a throwaway table without
     // touching testdata and must not leave scratch behind for the pass.
     val spark = SharedSpark.spark
+    val scratch = java.nio.file.Paths.get(graft.core.Scratch.scratch("bench-warm"))
     Bench.warmEnginePaths(spark)
-    val leftover = new java.io.File("/tmp").listFiles()
-      .filter(_.getName.startsWith(
-        s"graft-bench-warm-${ProcessHandle.current().pid()}"))
-    assert(leftover.isEmpty, s"warmup scratch left behind: ${leftover.toSeq}")
+    assert(!java.nio.file.Files.exists(scratch), s"warmup scratch left behind: $scratch")
     // idempotent: the bench calls it once, but a retry path must not trip
     // over the deleted dir
     Bench.warmEnginePaths(spark)
+    assert(!java.nio.file.Files.exists(scratch), s"warmup scratch left behind: $scratch")
   }
 
   test("spikeBlocks detects adjacent 2x runs the 3x trigger misses (r12 hand adjudication)") {
@@ -365,14 +364,14 @@ class BenchGuardSpec extends AnyFunSuite {
   test("streaming policy keys off the explicit registry, not a name substring (r13 verdict #7)") {
     val reg = Queries.streamingQueries
     // the registry names only live queries, and today covers exactly the
-    // stream-named surface (the consistency the bench tripwire enforces)
+    // stream-named surface (the consistency Queries.registryProblems enforces)
     assert(reg.subsetOf(Queries.all.keySet))
     assert(Queries.all.keySet.filter(_.contains("stream")) == reg)
     // the HOSTILE-NAME case: membership is set membership — a streaming
     // query named without "stream" would still get the stream policy
     // once registered, and a batch query named WITH "stream" trips the
-    // bench's fail-loud guard instead of silently mixing policies
-    // (Bench.main: require(unTagged.isEmpty)). Replicate the guard's
+    // registry's fail-loud check instead of silently mixing policies
+    // (QueryRegistrySpec feeds it such a row). Replicate the check's
     // predicate here against a hostile name:
     val hostileBatch = "q999_streaming_lookalike_batch"
     assert(hostileBatch.contains("stream") && !reg(hostileBatch),
