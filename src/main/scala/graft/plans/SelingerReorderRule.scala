@@ -49,58 +49,99 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
 
   private val MaxEdges = 12 // DP is exponential; the reference caps at ~10
+  // DP runs one invocation may spend following its own answers (see
+  // reorder); over every batch query and the generated 4–12-relation
+  // graphs a chain repeated within four runs, in cycles of length two
+  private val MaxDpRuns = 8
 
-  /** Marks joins this rule already settled — keyed by the CONTENT of the
-    * subtree it settled (canonicalized hash), not a bare boolean. The
-    * rule is injected via `injectOptimizerRule`, which places it in the
-    * operator-optimization FIXED-POINT batch: it can fire before other
-    * rules (multi-iteration filter pushdown, collapsed projects) have
-    * finished reshaping the chain's inputs. A boolean tag would lock in
-    * that early decision forever (withNewChildren COPIES tags onto the
-    * rebuilt node), silently suppressing the histogram-driven reorder
-    * exactly when the late-arriving filter would have changed it. The
-    * hash tag re-arms automatically: a tagged join whose subtree was
-    * since rebuilt hashes differently and re-enters the DP; an untouched
-    * one skips. Convergence holds because the DP is a deterministic
-    * function of (relations, conjuncts, stats) — once the rest of the
-    * batch stops changing the subtree, one final DP run reproduces its
-    * own output and settles on the matching hash.
+  /** Marks the spine joins of a chain this rule already settled, keyed by
+    * the CONTENT of each join's subtree (canonicalized hash), not a bare
+    * boolean. The rule is injected via `injectOptimizerRule`, which places
+    * it in the operator-optimization FIXED-POINT batches: it can fire
+    * before other rules (multi-iteration filter pushdown, collapsed
+    * projects) have finished reshaping the chain's inputs. A boolean tag
+    * would lock in that early decision forever (withNewChildren COPIES
+    * tags onto the rebuilt node), silently suppressing the
+    * histogram-driven reorder exactly when the late-arriving filter would
+    * have changed it. The hash tag re-arms automatically: a tagged join
+    * whose subtree has changed since hashes differently and re-enters the
+    * DP; an untouched one skips.
+    *
+    * Why the batch converges: the rule's answer depends only on the
+    * query, not on the order the previous iteration left the joins in.
+    * Relations are named by a position-free key ([[relationKey]]), so the
+    * DP breaks cost ties the same way whatever the current order. The one
+    * input a rebuild does change is which way each condition reads, and
+    * the reference's cardinality model is sensitive to that; so reorder
+    * follows the DP's own answers until they repeat and takes the fixed
+    * point, or a fixed member of the cycle, which the rebuilt tree leads
+    * straight back to. A chain whose left-deep spine already has that
+    * order is settled, not rebuilt — looking through the attribute-only
+    * Projects that column pruning keeps re-inserting between the joins —
+    * so once the rest of the batch stops changing the leaves, the rule
+    * stops changing the plan. Settling on whole-tree equality instead
+    * rebuilt every chain on every iteration (pruning re-adds its Projects
+    * after each rebuild), and position-derived names with one DP run per
+    * iteration let the order flip back and forth until the batch hit its
+    * iteration cap.
     */
-  private val OrderedTag = TreeNodeTag[Int]("graft.selinger.ordered")
+  private[graft] val OrderedTag = TreeNodeTag[Int]("graft.selinger.ordered")
 
   private def settled(j: Join): Boolean =
     j.getTagValue(OrderedTag).contains(j.canonicalized.hashCode)
 
+  private def settle(j: Join): Unit =
+    j.setTagValue(OrderedTag, j.canonicalized.hashCode)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case j @ Join(_, _, Inner, _, _) if !settled(j) =>
-      // The SPINE joins the DP constructed are tagged at construction
-      // (inside reorder), so the fixed-point batch converges without
-      // re-deriving them. Tagging every Join in the returned subtree
-      // here (the old out.foreach) also tagged chains NESTED INSIDE the
-      // flattened leaves — e.g. an inner-join chain under an Aggregate
-      // subquery — permanently suppressing THEIR reordering even though
-      // the DP treated them as opaque leaves. An ineligible join (None)
-      // stays untagged and eligible for later iterations.
+      // Only the SPINE joins of a chain are tagged (at construction, or
+      // when the chain settles in place), so transformDown does not re-plan
+      // a spine's prefixes as chains of their own. Chains NESTED INSIDE
+      // the flattened leaves — e.g. an inner-join chain under an Aggregate
+      // subquery — stay untagged and get their own DP. An ineligible join
+      // (None) stays untagged and eligible for later iterations.
       reorder(j).getOrElse(j)
   }
 
-  /** Flatten a tree of unhinted inner joins into (relations, conjunctive
-    * conditions), looking through the attribute-only Projects that column
-    * pruning interleaves between joins (the rebuilt tree restores the
-    * final output order, and pruning re-runs in the same fixed-point
-    * batch).
+  /** An unhinted inner join, seen through the attribute-only Project that
+    * column pruning interleaves between joins.
     */
-  private def flatten(p: LogicalPlan): (Seq[LogicalPlan], Seq[Expression]) =
-    p match {
-      case Join(l, r, Inner, cond, JoinHint.NONE) =>
-        val (lr, lc) = flatten(l)
-        val (rr, rc) = flatten(r)
-        (lr ++ rr, lc ++ rc ++ cond.toSeq.flatMap(splitConjunctivePredicates))
+  private object ChainJoin {
+    def unapply(p: LogicalPlan): Option[Join] = p match {
+      case j @ Join(_, _, Inner, _, JoinHint.NONE) => Some(j)
       case Project(projectList, j @ Join(_, _, Inner, _, JoinHint.NONE))
-          if projectList.forall(_.isInstanceOf[Attribute]) =>
-        flatten(j)
-      case other => (Seq(other), Seq.empty)
+          if projectList.forall(_.isInstanceOf[Attribute]) => Some(j)
+      case _ => None
     }
+  }
+
+  /** Flatten a tree of unhinted inner joins into (relations in DFS order,
+    * conjunctive conditions, the spine joins), looking through the
+    * attribute-only Projects that column pruning interleaves between joins
+    * (the rebuilt tree restores the final output order, and pruning re-runs
+    * in the same fixed-point batch).
+    */
+  private def flatten(p: LogicalPlan): (Seq[LogicalPlan], Seq[Expression], Seq[Join]) =
+    p match {
+      case ChainJoin(j) =>
+        val (lr, lc, lj) = flatten(j.left)
+        val (rr, rc, rj) = flatten(j.right)
+        (lr ++ rr, lc ++ rc ++ j.condition.toSeq.flatMap(splitConjunctivePredicates),
+          j +: (lj ++ rj))
+      case other => (Seq(other), Seq.empty, Seq.empty)
+    }
+
+  /** A name for a chain relation that does not depend on where the
+    * relation sits in the current tree: the smallest exprId in the output
+    * of its peeled base relation (the leaf's own output if the base has
+    * none). Distinct relations of one plan never share an attribute.
+    */
+  private def relationKey(rel: LogicalPlan): Long = {
+    val base = peel(rel)._1.output
+    (if (base.nonEmpty) base else rel.output).map(_.exprId.id).minOption
+      .getOrElse(Long.MaxValue)
+  }
 
   /** Strip the Filter/Project stack off a join input, returning the base
     * relation and the filter conjuncts above it (projection doesn't change
@@ -173,11 +214,13 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def reorder(root: Join): Option[LogicalPlan] = {
-    val (rels, conds) = flatten(root)
+    val (rels, conds, spineJoins) = flatten(root)
     if (rels.size < 3 || rels.size > MaxEdges + 1) return None
 
+    // zero-padded so the DP's string order is the key order; the stable
+    // sort falls back to position only if two keys were ever equal
     val names: Map[LogicalPlan, String] =
-      rels.zipWithIndex.map { case (r, i) => r -> s"r$i" }.toMap
+      rels.sortBy(relationKey).zipWithIndex.map { case (r, i) => r -> f"r$i%02d" }.toMap
     def relOf(a: Attribute): Option[LogicalPlan] =
       rels.find(_.outputSet.contains(a))
 
@@ -269,9 +312,57 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
     // ndv-aware m:n refinement (see NdvAwareJoinOptimizer): column
     // ranges come from registered stats' pass-1 min/max
     val ndvOf = (t: String, f: String) => stats.get(t).flatMap(_.estimateNdv(f))
-    val order = new NdvAwareJoinOptimizer(joinEdges, ndvOf)
-      .orderJoins(stats, filterSel, isPkey)
-    if (order.isEmpty) return None
+    def dp(edges: Set[JoinEdge]): Vector[JoinEdge] =
+      new NdvAwareJoinOptimizer(edges.toVector, ndvOf).orderJoins(stats, filterSel, isPkey)
+
+    /** The left-deep leaf order an edge order builds, and per edge after
+      * the first the relation it brings in (None: both its tables are
+      * already placed, so it becomes a Filter over the tree).
+      */
+    def placement(order: Vector[JoinEdge]): Option[(Vector[String], Vector[Option[String]])] = {
+      var placed = Vector(order.head.leftTable, order.head.rightTable)
+      val newSides = order.tail.map { e =>
+        if (placed.contains(e.leftTable) && placed.contains(e.rightTable)) None
+        else if (placed.contains(e.leftTable) || placed.contains(e.rightTable)) {
+          val newSide = if (placed.contains(e.leftTable)) e.rightTable else e.leftTable
+          placed :+= newSide
+          Some(newSide)
+        } else {
+          // Defensive: the DP only ever extends a plan by an edge sharing
+          // a table with it (computeCostAndCardOfSubplan declines cross
+          // products), so a full-set order is prefix-connected and this
+          // branch is unreachable unless that contract breaks. Decline
+          // rather than build a tree whose condition references an absent
+          // relation.
+          return None
+        }
+      }
+      Some((placed, newSides))
+    }
+
+    // The reference's cardinality model reads an edge's cards before the
+    // DP's orientation swap but its pkey flags after it (JoinOptimizer's
+    // "quirk kept for parity"), so the estimates, and with them the order,
+    // depend on which way each edge is written. An answer writes every
+    // edge the way the DP joined it, and a rebuilt tree hands that to the
+    // next run. Follow that chain here, from the way the conditions read
+    // now, until an edge set repeats: an answer that reproduces its own
+    // input is a fixed point; otherwise the answers since the repeat form
+    // a cycle, and its member with the smallest leaf order by name is the
+    // answer, so entering the cycle at any member picks the same one.
+    val inputs = scala.collection.mutable.ArrayBuffer(joinEdges.toSet)
+    val answers = scala.collection.mutable.ArrayBuffer.empty[Vector[JoinEdge]]
+    var repeatAt = -1
+    while (repeatAt < 0 && answers.size < MaxDpRuns) {
+      val answer = dp(inputs.last)
+      if (answer.isEmpty) return None
+      answers += answer
+      repeatAt = inputs.indexOf(answer.toSet)
+      inputs += answer.toSet
+    }
+    val (order, (leafOrder, newSides)) = answers.drop(math.max(repeatAt, 0))
+      .map(o => o -> placement(o).getOrElse(return None))
+      .minBy { case (o, (leaves, _)) => (leaves.mkString(","), o.mkString(",")) }
 
     // fold the order back into a left-deep Join tree
     val attrFor: Map[JoinEdge, Map[String, Attribute]] =
@@ -295,53 +386,41 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
     def leafOf(tbl: String): LogicalPlan =
       residual(byName(tbl)).foldLeft(byName(tbl))((p, f) => Filter(f, p))
 
-    // tag each constructed spine join as settled HERE — and only these,
-    // never joins living inside the opaque leaf subtrees
-    def mkJoin(l: LogicalPlan, r: LogicalPlan, c: Expression): LogicalPlan = {
-      val j = Join(l, r, Inner, Some(c), JoinHint.NONE)
-      j.setTagValue(OrderedTag, j.canonicalized.hashCode)
-      j
-    }
-    var joined: Set[String] = Set(order.head.leftTable, order.head.rightTable)
-    var tree: LogicalPlan = mkJoin(leafOf(order.head.leftTable),
-      leafOf(order.head.rightTable), cond(order.head))
-    order.tail.foreach { e =>
-      if (joined(e.leftTable) && joined(e.rightTable)) {
-        tree = Filter(cond(e), tree)
-      } else if (joined(e.leftTable) || joined(e.rightTable)) {
-        val newSide = if (joined(e.leftTable)) e.rightTable else e.leftTable
-        tree = mkJoin(tree, leafOf(newSide), cond(e))
-        joined += newSide
-      } else {
-        // Defensive: the DP only ever extends a plan by an edge sharing a
-        // table with it (computeCostAndCardOfSubplan declines cross
-        // products), so a full-set order is prefix-connected and this
-        // branch is unreachable unless that contract breaks. Decline
-        // rather than build a tree whose condition references an absent
-        // relation.
-        return None
-      }
-    }
     // A relation touched by NO join edge (`FROM a, b, c WHERE a.k = b.k`
     // leaves c edgeless) never gets placed; rebuilding would silently drop
     // it and the restoring Project would reference absent attributes.
     // Decline — Spark keeps the authored cross join.
-    if (joined.size != rels.size) return None
+    if (leafOrder.size != rels.size) return None
 
-    if (tree.canonicalized == root.canonicalized) {
-      // The DP reproduced the authored order: settle the root too, so the
-      // fixed-point batch doesn't re-run the whole DP every iteration on
-      // a join it will never change. The hash tag keeps this safe inside
-      // the fixed-point batch (see OrderedTag): if a later iteration's
-      // pushdown reshapes the subtree, the hash no longer matches and
-      // the DP re-runs with the updated inputs.
-      root.setTagValue(OrderedTag, root.canonicalized.hashCode)
-      None
+    // The current tree already has the DP's order when it is left-deep
+    // (no spine join's right input is itself a chain join) and its leaves
+    // read in that order. Settle it in place: where the conditions sit is
+    // pushdown's business, and rebuilding would only invite column pruning
+    // to re-insert its Projects, changing the hash again. If a later
+    // iteration reshapes a leaf, the hashes no longer match and the DP
+    // re-runs with the updated inputs (see OrderedTag).
+    if (spineJoins.forall(j => ChainJoin.unapply(j.right).isEmpty) &&
+        leafOrder == rels.map(names)) {
+      spineJoins.foreach(settle)
+      return None
+    }
+
+    // tag each constructed spine join as settled HERE — and only these,
+    // never joins living inside the opaque leaf subtrees
+    def mkJoin(l: LogicalPlan, r: LogicalPlan, c: Expression): LogicalPlan = {
+      val j = Join(l, r, Inner, Some(c), JoinHint.NONE)
+      settle(j)
+      j
+    }
+    val tree = order.tail.zip(newSides).foldLeft(mkJoin(leafOf(order.head.leftTable),
+        leafOf(order.head.rightTable), cond(order.head))) {
+      case (t, (e, Some(newSide))) => mkJoin(t, leafOf(newSide), cond(e))
+      case (t, (e, None)) => Filter(cond(e), t)
     }
     // Reordering permutes the join output's attribute order; restore the
     // original order for parents that are position-sensitive (same move
     // as Catalyst's CostBasedJoinReorder).
-    else if (tree.output == root.output) Some(tree)
+    if (tree.output == root.output) Some(tree)
     else Some(Project(root.output, tree))
   }
 }

@@ -1,13 +1,17 @@
 package graft
 
 import graft.plans.SelingerJoinReorder
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the Catalyst-integrated Selinger reorder rule: the DP must
   * pull a big fact table out of the outermost-left position of a badly
-  * written join chain, leave results semantically identical, and keep
-  * non-eligible plans untouched.
+  * written join chain, leave results semantically identical, keep
+  * non-eligible plans untouched, and settle inside the optimizer's
+  * fixed-point batches.
   */
 class SelingerRuleSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -286,6 +290,18 @@ class SelingerRuleSpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
+  /** The engine session with full stats registered for every table, as
+    * Verify, Bench and PlanAudit plan.
+    */
+  private lazy val statsSession = {
+    val s2 = SharedSpark.sparkWithExtensions
+    graft.core.Catalog.tableNames.foreach { t =>
+      graft.stats.StatsRegistry.register(graft.core.Catalog.table(s2, dir, t),
+        graft.core.Catalog.stats(s2, dir, t), full = true)
+    }
+    s2
+  }
+
   // Leaf order of the optimized plan, by first output column, under the
   // engine session with full stats registered. PLANS.md records exchange
   // counts, not order, so a change in where or how the rule runs (e.g.
@@ -313,8 +329,8 @@ class SelingerRuleSpec extends AnyFunSuite {
     "q79_tpch_q16" -> Seq("l_orderkey", "s_suppkey", "p_partkey"),
     "q80_tpch_q21" -> Seq("s_suppkey", "l_orderkey", "l_orderkey", "o_orderkey",
       "l_orderkey"),
-    "q86_tpch_q8" -> Seq("p_partkey", "l_orderkey", "s_suppkey", "o_orderkey",
-      "c_custkey", "n_nationkey", "r_regionkey", "n_nationkey"),
+    "q86_tpch_q8" -> Seq("p_partkey", "l_orderkey", "o_orderkey", "c_custkey",
+      "n_nationkey", "r_regionkey", "s_suppkey", "n_nationkey"),
     "q87_tpch_q9" -> Seq("s_suppkey", "n_nationkey", "l_orderkey", "p_partkey",
       "o_orderkey"),
     "q88_tpch_q11" -> Seq("l_orderkey", "s_suppkey", "l_orderkey", "s_suppkey"),
@@ -322,17 +338,116 @@ class SelingerRuleSpec extends AnyFunSuite {
     "q90_tpch_q20" -> Seq("s_suppkey", "l_orderkey", "l_orderkey"))
 
   test("chosen join order is pinned for q05 and the TPC-H-block queries") {
-    val s2 = SharedSpark.sparkWithExtensions
-    graft.core.Catalog.tableNames.foreach { t =>
-      graft.stats.StatsRegistry.register(graft.core.Catalog.table(s2, dir, t),
-        graft.core.Catalog.stats(s2, dir, t), full = true)
-    }
+    val s2 = statsSession
     assert(pinnedOrders.keySet ==
       SparkEntry.queries.keySet.filter(_.contains("_tpch_")) + "q05_join_opt")
-    pinnedOrders.foreach { case (n, expected) =>
+    // every moved query in one failure message, not just the first
+    val moved = pinnedOrders.toSeq.sortBy(_._1).flatMap { case (n, expected) =>
       val leaves = joinChainLeaves(
         SparkEntry.queries(n)(s2, dir).queryExecution.optimizedPlan)
-      assert(leaves == expected, s"$n join order changed")
+      if (leaves == expected) None else Some(s"$n: $expected -> $leaves")
     }
+    assert(moved.isEmpty, s"join order changed:\n${moved.mkString("\n")}")
+  }
+
+  // The rule runs inside Catalyst's fixed-point batches, so it must
+  // settle: its answer may depend only on the query (relations,
+  // conjuncts, stats), never on the order the previous iteration left the
+  // joins in, and a chain that already has that order must be left
+  // alone. A rule that keeps rewriting runs each batch to its cap.
+
+  test("every batch query's reorder rule settles below the optimizer's iteration cap") {
+    val cap = statsSession.conf.get("spark.sql.optimizer.maxIterations").toInt
+    val unsettled = Queries.specs.filterNot(_.streaming).map(_.name).sorted
+      .filterNot(PlanAudit.planlessQueries).flatMap { n =>
+        val qe = SparkEntry.queries(n)(statsSession, dir).queryExecution
+        qe.optimizedPlan
+        val runs = qe.tracker.rules.get(SelingerJoinReorder.ruleName)
+          .map(_.numInvocations).getOrElse(0L)
+        if (runs >= cap) Some(s"$n: $runs") else None
+      }
+    assert(unsettled.isEmpty,
+      s"SelingerJoinReorder ran $cap or more times (never settled) in: $unsettled")
+  }
+
+  /** One relation of a join graph: every column renamed `<alias>__<col>`
+    * so the optimized plan's leaves say which relation they are, with an
+    * optional integer range filter.
+    */
+  private def rel(alias: String, table: String,
+      filter: Option[(String, Long, Long)] = None): (String, DataFrame) = {
+    val base = graft.core.Catalog.table(statsSession, dir, table)
+    val df = base.select(base.columns.map(c => col(c).as(s"${alias}__$c")).toIndexedSeq: _*)
+    alias -> filter.fold(df) { case (c, lo, hi) => df.where(col(s"${alias}__$c").between(lo, hi)) }
+  }
+
+  /** Inner-join `rels` in the listed order; each relation joins the ones
+    * before it through every edge that reaches them.
+    */
+  private def chain(rels: Seq[(String, DataFrame)],
+      edges: Seq[(String, String, String, String)]): DataFrame = {
+    def c(a: String, f: String) = col(s"${a}__$f")
+    rels.tail.foldLeft((rels.head._2, Set(rels.head._1))) { case ((acc, joined), (a, df)) =>
+      val on = edges.collect {
+        case (l, lc, r, rc) if (l == a && joined(r)) || (r == a && joined(l)) => c(l, lc) === c(r, rc)
+      }
+      (acc.join(df, on.reduce(_ && _)), joined + a)
+    }._1.groupBy().count()
+  }
+
+  /** Aliases of the top join chain's leaves, left to right. */
+  private def chainOrder(p: LogicalPlan): Seq[String] = {
+    def leaves(q: LogicalPlan): Seq[LogicalPlan] = q match {
+      case Join(l, r, Inner, _, _) => leaves(l) ++ leaves(r)
+      case Project(_, j: Join) => leaves(j)
+      case other => Seq(other)
+    }
+    leaves(p.collectFirst { case j: Join => j }.get)
+      .map(_.output.head.name.takeWhile(_ != '_'))
+  }
+
+  /** The plan with the rule's settled marks removed, so applying the rule
+    * runs the DP again instead of skipping on a mark.
+    */
+  private def unmarked(p: LogicalPlan): LogicalPlan = {
+    val copy = p.clone()
+    copy.foreach(_.unsetTagValue(SelingerJoinReorder.OrderedTag))
+    copy
+  }
+
+  // The two-`part` self-join (lineitem, part, part, supplier) and TPC-H
+  // Q9's five relations, each with two authored relation orders.
+  private def shapes: Seq[(String, Seq[Seq[(String, DataFrame)]], Seq[(String, String, String, String)])] = {
+    val (p1, l1, s1, p2) = (rel("p1", "part", Some(("p_size", 26L, 48L))), rel("l1", "lineitem"),
+      rel("s1", "supplier", Some(("s_nationkey", 4L, 14L))), rel("p2", "part", Some(("p_size", 9L, 38L))))
+    val (l, p, s, o, n) = (rel("l", "lineitem"), rel("p", "part", Some(("p_size", 1L, 10L))),
+      rel("s", "supplier"), rel("o", "orders"), rel("n", "nation"))
+    Seq(
+      ("two-part self-join", Seq(Seq(p1, l1, s1, p2), Seq(s1, l1, p2, p1)),
+        Seq(("p1", "p_partkey", "l1", "l_partkey"), ("l1", "l_suppkey", "s1", "s_suppkey"),
+          ("l1", "l_partkey", "p2", "p_partkey"))),
+      ("TPC-H Q9", Seq(Seq(l, p, s, o, n), Seq(n, s, l, o, p)),
+        Seq(("l", "l_partkey", "p", "p_partkey"), ("l", "l_suppkey", "s", "s_suppkey"),
+          ("l", "l_orderkey", "o", "o_orderkey"), ("s", "s_nationkey", "n", "n_nationkey"))))
+  }
+
+  test("chosen leaf order does not depend on the authored relation order") {
+    val differing = shapes.flatMap { case (shape, authorings, edges) =>
+      val orders = authorings.map(rs => chainOrder(chain(rs, edges).queryExecution.optimizedPlan))
+      if (orders.distinct.size == 1) None else Some(s"$shape: $orders")
+    }
+    assert(differing.isEmpty, s"authorings chose different orders:\n${differing.mkString("\n")}")
+  }
+
+  test("the optimized plan is a fixed point of the rule") {
+    val rewritten = shapes.flatMap { case (shape, authorings, edges) =>
+      authorings.flatMap { rs =>
+        val plan = unmarked(chain(rs, edges).queryExecution.optimizedPlan)
+        val again = SelingerJoinReorder(plan)
+        if (again == plan) None
+        else Some(s"$shape authored ${rs.map(_._1)}: ${chainOrder(plan)} -> ${chainOrder(again)}")
+      }
+    }
+    assert(rewritten.isEmpty, s"the rule rewrote its own output:\n${rewritten.mkString("\n")}")
   }
 }
