@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Catalog
+import graft.core.{Catalog, ParquetFooter}
 import graft.core.Scratch.{deleteRecursively, dirSlug, scratch}
 import graft.exec.Executor
 import graft.operators._
@@ -699,7 +699,7 @@ object Queries {
     path
   }
 
-  private def eventsStreamDir(s: SparkSession, dir: String): String = {
+  private[graft] def eventsStreamDir(s: SparkSession, dir: String): String = {
     val streamDir = scratch("stream-src", dir)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$streamDir/_SUCCESS")))
       t(s, dir, "events").repartition(4).write.mode("overwrite").parquet(streamDir)
@@ -1216,7 +1216,7 @@ object Queries {
       .mkString("(?:^| )(?:", "|", ")(?= |$)")
     // stream side: documents consumed incrementally, filtered per batch
     val streamDir = docsStreamDir(s, dir)
-    val schema = s.read.parquet(streamDir).schema
+    val schema = ParquetFooter.schema(s, streamDir)
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(streamDir)
     val nTok = TextAnalysis.tokenCount(col("text"))
@@ -1276,7 +1276,7 @@ object Queries {
        SELECT doc_id, n_tokens, n_oov
        FROM st WHERE n_oov * 50 <= n_tokens"""
 
-  private def docsStreamDir(s: SparkSession, dir: String): String = {
+  private[graft] def docsStreamDir(s: SparkSession, dir: String): String = {
     val streamDir = scratch("docstream-src", dir)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$streamDir/_SUCCESS")))
       t(s, dir, "documents").repartition(4).write.mode("overwrite").parquet(streamDir)
@@ -2791,7 +2791,7 @@ object Queries {
   def q143_stream_span_corrupt(s0: SparkSession, dir: String): DataFrame = {
     val s = streamSession(s0)
     val streamDir = docsStreamDir(s, dir)
-    val schema = s.read.parquet(streamDir).schema
+    val schema = ParquetFooter.schema(s, streamDir)
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(streamDir)
     val pairs = TextAnalysis.spanCorrupt(stream, "doc_id", "text",

@@ -217,12 +217,13 @@ object Streams {
     */
   def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    // Schema comes from the existing files; an empty directory would
-    // surface as Spark's generic UNABLE_TO_INFER_SCHEMA — name the
-    // actual problem instead (a stream over a dir with no data yet
-    // needs an explicit schema, which this convenience reader is not).
+    // Schema comes from the existing files, read from one footer on the
+    // driver (no inference job); an empty directory would surface as
+    // Spark's generic UNABLE_TO_INFER_SCHEMA — name the actual problem
+    // instead (a stream over a dir with no data yet needs an explicit
+    // schema, which this convenience reader is not).
     val schema =
-      try spark.read.parquet(dir).schema
+      try graft.core.ParquetFooter.schema(spark, dir)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" =>

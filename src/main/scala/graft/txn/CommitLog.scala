@@ -1,10 +1,19 @@
 package graft.txn
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.ParquetFooter
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Transaction layer with the observable semantics of the reference's
   * TransactionManager + LogManager contract
@@ -24,7 +33,12 @@ import scala.jdk.CollectionConverters._
   * into reads), and recovery = re-deriving the committed set from the log.
   * This is the standard commit-log-over-immutable-files design used by
   * large-scale table formats, and it scales: the log carries only
-  * metadata, data moves through distributed parquet writes.
+  * metadata. A batch whose rows already sit in driver memory (a local
+  * relation, e.g. `createDataFrame` of a row list) is written on the
+  * driver as one parquet file through Spark's own parquet writer; every
+  * other batch, and every checkpoint, moves through a distributed
+  * `df.write.parquet`. Reads take the table schema from one parquet
+  * footer on the driver, so building a read plan starts no Spark job.
   */
 object LogRecord {
   val Begin = "BEGIN"
@@ -507,13 +521,66 @@ final class TxnTable(spark: SparkSession, val dir: String,
 
   /** Insert a batch of rows under `txn`. The parquet write completes (is
     * durable) before the UPDATE record is appended — write-ahead in the
-    * only sense an append-only store needs.
+    * only sense an append-only store needs. A batch that is already in
+    * driver memory (its optimized plan is a local relation) is written on
+    * the driver as one file, `part-00000<ext>`, without a Spark job; any
+    * other batch goes through `df.write.parquet`, distributed like the
+    * plan that computes it. Either way an existing batch dir fails the
+    * insert, and a failed write logs no UPDATE.
     */
   def insert(txn: Long, df: DataFrame): Unit = {
     batchSeq += 1
     val batch = s"batch-$txn-$batchSeq"
-    df.write.mode("errorifexists").parquet(root.resolve(batch).toString)
+    val path = root.resolve(batch)
+    // Only a plan whose every leaf is a local relation can fold into one
+    // (ConvertToLocalRelation); any other plan is left for `df.write` to
+    // optimize, once.
+    val analyzed = df.queryExecution.analyzed
+    val inMemory = analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+    (if (inMemory) df.queryExecution.optimizedPlan else analyzed) match {
+      case local: LocalRelation if !local.isStreaming =>
+        writeOnDriver(path, df.schema.fieldNames.toSeq, local)
+      case _ => df.write.mode("errorifexists").parquet(path.toString)
+    }
     log.logUpdate(txn, batch)
+  }
+
+  /** The rows of `local` as one parquet file in the new directory `dir`,
+    * written on the driver. The writer is the one a Spark write task
+    * uses — `ParquetFileFormat.prepareWrite` with the session's write
+    * confs (codec, timestamp type, datetime rebase) — so the file and its
+    * footer, Spark's row metadata included, match what `df.write.parquet`
+    * leaves. The schema is the plan's output under the DataFrame's column
+    * names, as the write command takes it, and goes through the same
+    * schema checks first. The directory is created exclusively
+    * (errorifexists) and removed again if the write fails. It carries no
+    * `_SUCCESS` marker: the UPDATE record is what publishes a batch.
+    */
+  private def writeOnDriver(dir: Path, names: Seq[String], local: LocalRelation): Unit = {
+    val schema = StructType(local.output.zip(names).map { case (a, name) =>
+      StructField(name, a.dataType, a.nullable, a.metadata) })
+    val format = new ParquetFileFormat()
+    DataSource.validateSchema(format.toString, schema, spark.sessionState.conf)
+    GraftSqlBridge.checkColumnNameDuplication(schema.fieldNames.toSeq,
+      spark.sessionState.conf.caseSensitiveAnalysis)
+    DataSourceUtils.verifySchema(format, schema)
+    DataSourceUtils.checkFieldNames(format, schema)
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = format.prepareWrite(spark, job, Map.empty, schema)
+      val task = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+      Files.createDirectories(root)
+      Files.createDirectory(dir)
+      try {
+        val file = dir.resolve("part-00000" + factory.getFileExtension(task))
+        val writer = factory.newInstance(file.toString, schema, task)
+        try local.data.foreach(writer.write) finally writer.close()
+      } catch {
+        case NonFatal(e) =>
+          deleteTree(dir)
+          throw e
+      }
+    }
   }
 
   /** Committed-visible snapshot: checkpoint base (if any) + batches of
@@ -525,7 +592,11 @@ final class TxnTable(spark: SparkSession, val dir: String,
     * by construction: every insert targets the same logical table. The
     * earlier per-batch `unionByName` chain built an O(#batches)-deep plan
     * tree — thousands of small txns between checkpoints meant driver-side
-    * planning blowup for a plan the scan expresses natively.)
+    * planning blowup for a plan the scan expresses natively.) The scan is
+    * given the schema of the first dir, read from its parquet footer on the
+    * driver ([[ParquetFooter.schema]]) — what Spark's inference job would
+    * answer — so building the DataFrame starts no Spark job; only its
+    * action does.
     */
   def read(asTxn: Option[Long] = None): DataFrame = {
     val (base, committed, batchMap) = log.committedState
@@ -539,9 +610,7 @@ final class TxnTable(spark: SparkSession, val dir: String,
         batchMap.values.flatten.toVector ++ own.filterNot(batchMap.values.flatten.toSet)
       case None => batchMap.values.flatten.toVector
     }
-    val dirs = base.toVector ++ visible
-    if (dirs.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(dirs.map(b => root.resolve(b).toString): _*)
+    scan(base.toVector ++ visible)
   }
 
   /** Time-travel read: the committed snapshot as of `txn`'s commit —
@@ -550,10 +619,13 @@ final class TxnTable(spark: SparkSession, val dir: String,
     */
   def readAsOf(txn: Long): DataFrame = {
     val (base, _, batchMap) = log.committedStateAsOf(txn)
-    val dirs = base.toVector ++ batchMap.values.flatten.toVector
-    if (dirs.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(dirs.map(b => root.resolve(b).toString): _*)
+    scan(base.toVector ++ batchMap.values.flatten.toVector)
   }
+
+  private def scan(dirs: Vector[String]): DataFrame =
+    if (dirs.isEmpty) spark.emptyDataFrame
+    else spark.read.schema(ParquetFooter.schema(spark, root.resolve(dirs.head).toString))
+      .parquet(dirs.map(b => root.resolve(b).toString): _*)
 
   // All UPDATE records of t from the full durable tape (committedState
   // hides uncommitted ones). Durable, not in-memory: own writes must be
@@ -608,14 +680,15 @@ final class TxnTable(spark: SparkSession, val dir: String,
             && !live(n))
           .toVector
       }
-    dead.foreach { n =>
-      scala.util.Using.resource(Files.walk(root.resolve(n))) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
-    }
+    dead.foreach(n => deleteTree(root.resolve(n)))
     (dropped, dead.size)
   }
+
+  private def deleteTree(dir: Path): Unit =
+    scala.util.Using.resource(Files.walk(dir)) { w =>
+      w.sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(Files.delete)
+    }
 
   /** Simulate a crash: all in-memory state gone. */
   def crash(): Unit = { log.reset(); txns.reset() }

@@ -23,4 +23,11 @@ object GraftSqlBridge {
     */
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.DataFrame].queryExecution.analyzed
+
+  /** The check a file write runs on its output column names: a name
+    * repeated (ignoring case unless `caseSensitive`) fails with
+    * COLUMN_ALREADY_EXISTS.
+    */
+  def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
+    util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
 }

@@ -31,6 +31,12 @@ class StreamingSpec extends AnyFunSuite {
     val streamDir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     events.repartition(4).write.mode("overwrite").parquet(streamDir)
     val stream = Streams.eventsStream(spark, streamDir, maxFilesPerTrigger = 1)
+    // stream schemas come from one footer: a relation given that schema
+    // reports what Spark's inference does, here and on the query layer's
+    // events and documents dirs
+    for (d <- Seq(streamDir, Queries.eventsStreamDir(spark, dir), Queries.docsStreamDir(spark, dir)))
+      assert(spark.read.schema(graft.core.ParquetFooter.schema(spark, d)).parquet(d).schema ==
+        spark.read.parquet(d).schema)
     val out = Streams.windowedCounts(stream, "1 hour", "30 minutes")
     // complete mode: finite source, want every window including unfinalized
     val got = Streams.runToCompletion(spark,
@@ -470,6 +476,14 @@ class StreamingSpec extends AnyFunSuite {
       Streams.eventsStream(spark, dir)
     }
     assert(e.getMessage.contains("no parquet files"))
+  }
+
+  test("eventsStream over a missing directory fails with Spark's PATH_NOT_FOUND") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-missing-stream").resolve("absent").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Streams.eventsStream(spark, dir)
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND")
   }
 
   test("sessionize: out-of-order in-horizon event merges without regressing the interval") {

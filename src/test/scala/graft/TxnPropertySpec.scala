@@ -1,9 +1,17 @@
 package graft
 
-import graft.txn.TxnTable
+import graft.core.ParquetFooter
+import graft.txn.{LogRecord, TxnTable}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.Prop.propBoolean
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Randomized-tape fuzz for the transaction layer: on ANY interleaving
   * of begin/insert/commit/abort/checkpoint/crash+recover, the
@@ -127,4 +135,70 @@ object TxnPropertySpec extends Properties("TxnTape") {
       }
       visibleOk && asOfOk && compactedOk
     }
+
+  // Every type family a batch can carry, each column nullable.
+  private val allTypes = StructType.fromDDL("l BIGINT, i INT, d DOUBLE, m DECIMAL(12,2), " +
+    "s STRING, b BOOLEAN, dt DATE, ts TIMESTAMP, a ARRAY<INT>")
+
+  private def orNull(g: Gen[Any]): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 4 -> g)
+
+  // Dates and timestamps stay inside 1900-2100, where the Java and the
+  // proleptic calendars agree, so rows read back equal the input.
+  private val rowGen: Gen[Row] = for {
+    l <- orNull(Gen.choose(Long.MinValue, Long.MaxValue))
+    i <- orNull(Gen.choose(Int.MinValue, Int.MaxValue))
+    d <- orNull(Gen.choose(-1e12, 1e12))
+    m <- orNull(Gen.choose(-9999999999L, 9999999999L).map(java.math.BigDecimal.valueOf(_, 2)))
+    str <- orNull(Gen.asciiPrintableStr.map(_.take(12)))
+    b <- orNull(Gen.oneOf(true, false))
+    dt <- orNull(Gen.choose(-25567L, 47482L)
+      .map(day => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(day))))
+    ts <- orNull(Gen.choose(-2208988800000000L, 4102444800000000L).map { us =>
+      java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)) })
+    a <- orNull(Gen.listOf(orNull(Gen.choose(-100, 100))).map(_.take(5)))
+  } yield Row(l, i, d, m, str, b, dt, ts, a)
+
+  private def dataFiles(dir: String): Seq[java.nio.file.Path] =
+    scala.util.Using.resource(Files.list(Paths.get(dir)))(_.iterator().asScala
+      .filter(p => !p.getFileName.toString.matches("[._].*")).toSeq.sorted)
+
+  // (parquet message type, Spark row metadata) of one file's footer
+  private def footerSchema(file: java.nio.file.Path): (String, String) =
+    scala.util.Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(file.toString), spark.sessionState.newHadoopConf()))) { r =>
+      val meta = r.getFooter.getFileMetaData
+      (meta.getSchema.toString,
+        meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    }
+
+  private def bag(rows: Seq[Row]): Map[Row, Int] = rows.groupBy(identity).map { case (r, v) => r -> v.size }
+  private def bag(df: DataFrame): Map[Row, Int] = bag(df.collect().toSeq)
+
+  /** The rows inserted once as a driver-local batch and once behind an RDD
+    * (written by Spark tasks) give the same files to every reader.
+    */
+  private def sameAsDistributed(rows: List[Row]): Prop = {
+    val t = new TxnTable(spark, Files.createTempDirectory("graft-txn-driver").toString)
+    val txn = t.txns.startTxn()
+    t.insert(txn, spark.createDataFrame(rows.asJava, allTypes))
+    t.insert(txn, spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), allTypes))
+    val Seq(local, distributed) = t.log.durableRecords().collect {
+      case (LogRecord.Update, _, d) => Paths.get(t.dir, d).toString }
+    val localFiles = dataFiles(local)
+    (localFiles.map(_.getFileName.toString.takeWhile(_ != '.')) == Seq("part-00000")) :| "one file" &&
+      dataFiles(distributed).forall(f => footerSchema(f) == footerSchema(localFiles.head)) :|
+        "footer schema" &&
+      (ParquetFooter.schema(spark, local) == ParquetFooter.schema(spark, distributed)) :|
+        "footer helper" &&
+      (spark.read.parquet(local).schema == spark.read.parquet(distributed).schema) :|
+        "inferred schema" &&
+      (bag(spark.read.parquet(local)) == bag(spark.read.parquet(distributed))) :| "rows" &&
+      (bag(spark.read.parquet(local)) == bag(rows)) :| "rows equal the input"
+  }
+
+  property("a driver-written batch reads like a distributed one") =
+    Prop.forAll(Gen.choose(1, 30).flatMap(Gen.listOfN(_, rowGen)))(sameAsDistributed)
+
+  property("an empty driver-written batch reads like a distributed one") =
+    Prop.forAll(Gen.const(List.empty[Row]))(sameAsDistributed)
 }

@@ -1,9 +1,16 @@
 package graft
 
 import graft.txn.{LogRecord, TxnTable}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{CalendarIntervalType, StructField, StructType}
+import org.apache.spark.unsafe.types.CalendarInterval
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Port of the reference's WAL/transaction contract
   * (`/root/reference/test/unit/log/log_manager_test.cc`): record counts,
@@ -27,6 +34,48 @@ class TxnSpec extends AnyFunSuite {
     val df = t.read()
     if (df.columns.isEmpty) Seq.empty
     else df.collect().map(_.getLong(0)).toSeq.sorted
+  }
+
+  private val idV = StructType.fromDDL("id BIGINT, v STRING")
+
+  /** A batch already in driver memory: its optimized plan is a local relation. */
+  private def localBatch(ids: Range): DataFrame =
+    spark.createDataFrame(ids.map(i => Row(i.toLong, s"v$i")).asJava, idV)
+
+  /** The same rows behind an RDD, so they are written by Spark tasks. */
+  private def distributedBatch(ids: Range): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(ids.map(i => Row(i.toLong, s"v$i")), 2), idV)
+
+  private def batchDirs(t: TxnTable): Seq[String] =
+    scala.util.Using.resource(Files.list(Paths.get(t.dir))) { s =>
+      s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("batch-")).toSeq.sorted
+    }
+
+  /** Runs `body` and counts the Spark jobs it started from this thread
+    * (tagged by a job group, so jobs of other threads do not count). The
+    * listener bus is drained before and after, so every job start posted
+    * by `body` has been seen.
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"txn-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "TxnSpec job count")
+    try {
+      val a = body
+      TestListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   // log_manager_test.cc:197-214 — one txn, two row writes, commit:
@@ -612,6 +661,107 @@ class TxnSpec extends AnyFunSuite {
     val lost = acked.toArray(Array.empty[String]).toSet -- updates.toSet
     assert(lost.isEmpty, s"ACKED records lost from the tape: $lost")
     assert(updates.toSet.size == 50, s"expected 50 updates, got ${updates.size}")
+  }
+
+  test("a driver-local insert and building read() start no Spark job; the read's action starts one") {
+    val t = freshTable()
+    val t1 = t.txns.startTxn()
+    val (_, insertJobs) = jobsOf(t.insert(t1, localBatch(1 to 500)))
+    t.txns.commitTxn(t1)
+    val (df, readJobs) = jobsOf(t.read())
+    val (rows, collectJobs) = jobsOf(df.collect())
+    // (insert, read(), collect) — one assertion, so a failure shows all three
+    assert((insertJobs, readJobs, collectJobs) == ((0, 0, 1)))
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 500L))
+    // a batch that is not in driver memory still goes through Spark tasks
+    val t2 = t.txns.startTxn()
+    val (_, distributedJobs) = jobsOf(t.insert(t2,
+      spark.range(0, 1000).where(col("id") % 2 === 0).selectExpr("id", "cast(id as string) as v")))
+    assert(distributedJobs >= 1)
+    t.txns.commitTxn(t2)
+    assert(t.read().count() == 1000)
+  }
+
+  test("a session parquet codec change reaches the driver-written file") {
+    val key = "spark.sql.parquet.compression.codec"
+    val before = spark.conf.getOption(key)
+    val t = freshTable()
+    val txn = t.txns.startTxn()
+    spark.conf.set(key, "gzip")
+    try t.insert(txn, localBatch(1 to 100))
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val dir = Paths.get(t.dir, batchDirs(t).head)
+    val files = scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq)
+    assert(files == Seq("part-00000.gz.parquet"))
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(dir.resolve(files.head).toString))
+    val codecs = footer.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+    assert(codecs == Set(org.apache.parquet.hadoop.metadata.CompressionCodecName.GZIP))
+  }
+
+  test("an existing batch dir fails the insert and logs no UPDATE, on both write paths") {
+    for (batch <- Seq[Range => DataFrame](localBatch, distributedBatch)) {
+      val t = freshTable()
+      val txn = t.txns.startTxn()
+      // the next insert of txn 1 on a fresh table is batch-1-1
+      val taken = Files.createDirectories(Paths.get(t.dir, s"batch-$txn-1"))
+      Files.write(taken.resolve("keep"), Array[Byte](1))
+      intercept[Exception](t.insert(txn, batch(1 to 10)))
+      assert(t.log.count(LogRecord.Update) == 0)
+      assert(t.log.durableRecords().forall(_._1 != LogRecord.Update))
+      // the dir it did not create is left alone
+      assert(Files.exists(taken.resolve("keep")))
+    }
+  }
+
+  test("an unsupported schema fails before any file is written, on both write paths") {
+    val interval = StructType(Seq(StructField("id", org.apache.spark.sql.types.LongType),
+      StructField("i", CalendarIntervalType)))
+    val rows = Seq(Row(1L, new CalendarInterval(1, 2, 3L)))
+    val dupNames = StructType(Seq(StructField("id", org.apache.spark.sql.types.LongType),
+      StructField("ID", org.apache.spark.sql.types.LongType)))
+    val cases = Seq(
+      // a column type parquet cannot store
+      "UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE" -> Seq(spark.createDataFrame(rows.asJava, interval),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), interval)),
+      // no columns at all
+      "EMPTY_SCHEMA_NOT_SUPPORTED_FOR_DATASOURCE" -> Seq(spark.emptyDataFrame, spark.range(3).select()),
+      // two columns whose names differ only in case
+      "COLUMN_ALREADY_EXISTS" -> Seq(spark.createDataFrame(Seq(Row(1L, 2L)).asJava, dupNames),
+        spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L, 2L)), 2), dupNames),
+        localBatch(1 to 3).select(col("id"), col("id"))))
+    for ((condition, frames) <- cases; df <- frames) {
+      val t = freshTable()
+      val txn = t.txns.startTxn()
+      val e = intercept[org.apache.spark.sql.AnalysisException](t.insert(txn, df))
+      assert(e.getCondition == condition)
+      assert(batchDirs(t).isEmpty, s"a batch dir was left behind: ${batchDirs(t)}")
+      assert(t.log.count(LogRecord.Update) == 0)
+    }
+  }
+
+  test("a failed driver write leaves no batch dir, and later batches number past it") {
+    val t = freshTable()
+    val txn = t.txns.startTxn()
+    t.insert(txn, localBatch(1 to 10)) // batch-1-1
+    // an unknown parquet writer version fails inside the writer, after
+    // the batch dir was created
+    spark.conf.set("parquet.writer.version", "v9")
+    try intercept[IllegalArgumentException](t.insert(txn, localBatch(11 to 20))) // batch-1-2
+    finally spark.conf.unset("parquet.writer.version")
+    assert(batchDirs(t) == Seq(s"batch-$txn-1"))
+    assert(t.log.count(LogRecord.Update) == 1)
+    t.insert(txn, localBatch(21 to 30))
+    assert(batchDirs(t) == Seq(s"batch-$txn-1", s"batch-$txn-3"))
+    t.txns.commitTxn(txn)
+    t.crash()
+    t.recover()
+    val next = t.txns.startTxn()
+    t.insert(next, localBatch(31 to 40))
+    assert(batchDirs(t).last == s"batch-$next-4")
+    t.txns.commitTxn(next)
+    assert(values(t) == ((1L to 10L) ++ (21L to 40L)))
   }
 
   test("tape-lock wait bound is constructor-overridable (legal long-holding peers)") {
