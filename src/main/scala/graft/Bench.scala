@@ -910,18 +910,6 @@ object Bench {
       }
       def fmtRef(v: Double): String =
         "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      // temp + atomic rename, the stats-sidecar discipline: a crash (or
-      // concurrent reader — Bench/Verify/ScaleProbe overlap in driver
-      // rounds) must never leave/observe a torn reference, which the
-      // next pass would read as "no ratios" (review r15)
-      def writeAtomic(path: java.nio.file.Path, content: String): Unit = {
-        val tmp = path.toAbsolutePath.resolveSibling(
-          path.getFileName.toString + s".tmp-${ProcessHandle.current().pid()}")
-        java.nio.file.Files.writeString(tmp, content)
-        java.nio.file.Files.move(tmp, path.toAbsolutePath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
       // one lineage row per refresh ATTEMPT that passed the agreement
       // gates (accepted or ratchet-refused) — the committed drift trace
       // the r15 verdict asked for: repeated quiet-but-slightly-slow
@@ -941,7 +929,10 @@ object Bench {
           java.nio.file.StandardOpenOption.APPEND)
       }
       if (only.isEmpty) try {
-        writeAtomic(java.nio.file.Paths.get("bench_ref_candidate.json"),
+        // atomic: a crash (or a concurrent reader — Bench, Verify and
+        // ScaleProbe may run at once) must never leave/observe a torn
+        // reference, which the next pass would read as "no ratios"
+        graft.core.Scratch.writeAtomic(java.nio.file.Paths.get("bench_ref_candidate.json"),
           refJson("candidate: this pass's effective per-query values") + "\n")
         if (refSfMismatch)
           System.err.println(s"[bench] ref not updated: existing $refPath is " +
@@ -967,7 +958,7 @@ object Bench {
             "ratchet: total > 1.25x best-ever accepted quiet total")
         }
         if (willRefreshRef) {
-          writeAtomic(java.nio.file.Paths.get(refPath),
+          graft.core.Scratch.writeAtomic(java.nio.file.Paths.get(refPath),
             refJson("quiet full-pass effective medians — the committed " +
               "per-query reference (r14 verdict #3)") + "\n")
           appendLineage(accepted = true,

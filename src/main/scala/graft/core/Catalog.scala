@@ -6,135 +6,57 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * TESTDATA layout (`<dir>/<name>.parquet`). The analogue of the
   * reference's trivial catalog (`/root/reference/src/include/optimizer/
   * catalog.h:13-20` — a map table_id → page count), generalized to real
-  * schemas: Spark's file index supplies size/row statistics.
+  * schemas: each table's schema comes from its parquet footer, read on
+  * the driver, and its statistics from [[stats]] and the sidecar.
   */
 object Catalog {
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Per-process parquet SCHEMA cache for the fixture tables (r16
-  // optimization round, guide §1/§6): `spark.read.parquet` without a
-  // schema re-reads parquet footers on the DRIVER on every call —
-  // measured 77 ms/call at sf0.1 vs 8 ms with the schema supplied — and
-  // a bench pass constructs every query 2-3 times, each construction
-  // re-reading 1-4 tables. A production catalog serves schemas from
-  // metadata (the reference's Catalog holds table metadata for exactly
-  // this reason); schema-on-read per query is pure driver overhead at
-  // any scale and grows with footer count at 100 TB. METADATA only —
-  // never rows, never results. Staleness guard: the cached entry is
-  // keyed to a cheap directory stamp (dir mtime + entry count), so a
-  // rewritten fixture (test temp dirs, regenerated tapes) re-infers
-  // instead of serving a stale schema.
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  private def dirStamp(path: String): Long = {
-    val f = new java.io.File(path)
-    val children = f.listFiles()
-    if (children == null) f.lastModified // plain file or missing: mtime alone
-    else {
-      // Fold child (name, mtime, length) into the stamp (ADVICE r16:
-      // dir mtime + entry count alone misses an in-place rewrite of a
-      // part file's CONTENTS — no entry added/removed/renamed — and
-      // rewrites landing in the same mtime tick). Sorted by name so the
-      // stamp is independent of listing order; fixture dirs hold a
-      // handful of entries, so this stays a cheap metadata walk.
-      var h = f.lastModified * 1000003L + children.length
-      children.sortBy(_.getName).foreach { c =>
-        h = h * 1000003L + c.getName.hashCode
-        h = h * 1000003L + c.lastModified
-        h = h * 1000003L + c.length()
-      }
-      h
-    }
-  }
-
-  /** The table's parquet schema, inferred once per (path, dir-stamp) and
-    * then served from process memory. `probe` performs the one-time
-    * inference (the events branch needs a legacy conf live around it).
+  /** `path`'s footer schema ([[ParquetFooter.schema]], no Spark job) with
+    * TIMESTAMP(NANOS) columns read as long (`nanosAsLong`) or refused,
+    * whatever the session's own setting is.
     */
-  private def cachedSchema(path: String)(
-      probe: => org.apache.spark.sql.types.StructType):
-      org.apache.spark.sql.types.StructType = {
-    val stamp = dirStamp(path)
-    val hit = schemaCache.get(path)
-    if (hit != null && hit._1 == stamp) hit._2
-    else {
-      val sch = probe
-      schemaCache.put(path, (stamp, sch))
-      sch
-    }
+  private def footerSchema(spark: SparkSession, path: String,
+      nanosAsLong: Boolean): org.apache.spark.sql.types.StructType = {
+    val conf = spark.sessionState.conf.clone()
+    conf.setConfString(NanosAsLong, nanosAsLong.toString)
+    ParquetFooter.schema(spark, path, conf)
   }
 
+  /** The table's DataFrame, its schema read from the footer on every call.
+    * Every table but events is read with NANOS refused, so a NANOS column
+    * there fails loudly even in a session an events read left with
+    * `nanosAsLong` set.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
-    // generations (Spark 4 rejects it unless read as a raw long) and as
-    // TIMESTAMP(MICROS, NTZ) in others. Normalize BOTH to a session-local
-    // TimestampType column so downstream operators always see the same
-    // schema. The legacy conf must be live while a NANOS generation's
-    // scan plans/executes (task-side schema reconciliation consults it),
-    // so it stays set in that case — INCLUDING on schema-cache hits,
-    // where the probe ran in an earlier call (possibly on a DIFFERENT
-    // session of this SparkContext: conf is per-session, the cache is
-    // per-process); for a MICROS generation it was only a schema probe
-    // and is RESTORED — leaving it set would silently decode NANOS
-    // columns as long in every later parquet read of the session,
-    // defeating the fail-loudly contract those reads rely on.
-    if (name == "events") {
+    if (name != "events")
+      spark.read.schema(footerSchema(spark, path, nanosAsLong = false)).parquet(path)
+    else {
+      // events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
+      // generations (Spark 4 rejects it unless read as a raw long) and as
+      // TIMESTAMP(MICROS, NTZ) in others. Normalize BOTH to a session-local
+      // TimestampType column so downstream operators always see the same
+      // schema. The footer read maps NANOS to long; only then does the
+      // session get the legacy conf, which the scan needs live while it
+      // plans and executes (task-side schema reconciliation consults it).
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val rawSchema = cachedSchema(path) {
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "true")
-        def restore(): Unit = prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-        // restore on ANY failure (missing/corrupt file, absent ts
-        // column): leaking the conf would silently decode NANOS columns
-        // as long in every later parquet read of the session
-        try {
-          val s = spark.read.parquet(path).schema
-          s("ts").dataType match {
-            case LongType => () // NANOS generation: conf stays set
-            case _ => restore()
-          }
-          s
-        } catch { case t: Throwable => restore(); throw t }
-      }
-      rawSchema("ts").dataType match {
-        case LongType => // nanos-as-long generation: nanos -> micros
-          // cache hit may come from another session: (re)set the conf so
-          // THIS session's scan reconciles NANOS as long (idempotent)
-          spark.conf.set(key, "true")
-          spark.read.schema(rawSchema).parquet(path)
+      val sch = footerSchema(spark, path, nanosAsLong = true)
+      sch("ts").dataType match {
+        case LongType => // NANOS generation: nanos -> micros
+          spark.conf.set(NanosAsLong, "true")
+          spark.read.schema(sch).parquet(path)
             .withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case TimestampNTZType => // micros NTZ: same wall-clock
-          spark.read.schema(rawSchema).parquet(path)
+          spark.read.schema(sch).parquet(path)
             .withColumn("ts", col("ts").cast("timestamp"))
-        case _ => spark.read.schema(rawSchema).parquet(path)
+        case _ => spark.read.schema(sch).parquet(path)
       }
-    } else {
-      // Probe with the NANOS legacy conf explicitly CLEAR (ADVICE r16:
-      // the cache is per-process but inference runs under per-session
-      // conf — after an events NANOS probe leaves nanosAsLong=true in
-      // its session, a first-time probe of another table here would
-      // cache a conf-dependent LongType schema and serve it to sessions
-      // without the conf). With the conf clear, a non-events fixture
-      // that ever shipped NANOS timestamps fails the probe LOUDLY
-      // (Spark 4 rejects NANOS without the conf) instead of poisoning
-      // the process-wide cache.
-      val sch = cachedSchema(path) {
-        val key = "spark.sql.legacy.parquet.nanosAsLong"
-        val prev = spark.conf.getOption(key)
-        prev.foreach(_ => spark.conf.unset(key))
-        try spark.read.parquet(path).schema
-        finally prev.foreach(v => spark.conf.set(key, v))
-      }
-      spark.read.schema(sch).parquet(path)
     }
   }
 
@@ -148,10 +70,10 @@ object Catalog {
 
   /** Where built statistics persist ACROSS PROCESSES — the true analogue
     * of the reference's `Catalog.txt` (`test/utils/utils.cc:43-46`): a
-    * fresh driver loads histogram/ndv/row-count stats from this sidecar
-    * instead of re-running the two-pass distributed build (two full
-    * corpus scans per table per process at 100 TB, for statistics that
-    * only change when the data does). Staleness is guarded by the
+    * fresh driver loads histogram/ndv/row-count stats from the sidecar
+    * file `<dir>/stats.jsonl` instead of re-running the two-pass
+    * distributed build (two full corpus scans per table per process at
+    * 100 TB, for statistics that only change when the data does). Staleness is guarded by the
     * per-entry file-set signature ([[graft.stats.StatsRegistry]]) — a
     * regenerated table fails the signature check by name and rebuilds.
     * `GRAFT_STATS_DIR` overrides the default `<cwd>/stats-catalog`;
@@ -171,48 +93,36 @@ object Catalog {
     if (raw.trim == "none") None else Some(raw.trim)
   }
 
-  // one load per process; the sidecar write is guarded so concurrent
-  // builds (statsMany's futures racing a query-path stats() call) never
-  // interleave two Spark overwrites of the same directory
+  // one load per process; save and load of one dir are serialized by the
+  // sidecar lock ([[graft.stats.StatsRegistry.save]])
   private val statsLoaded = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private val statsSaveLock = new Object
 
-  private def ensureStatsLoaded(spark: SparkSession): Unit =
+  private def ensureStatsLoaded(): Unit =
     if (statsLoaded.compareAndSet(false, true)) statsPersistDir.foreach { d =>
-      // under the SAME lock as saveStats: a load racing a concurrent
-      // save (statsMany's futures vs a query-path stats() call) would
-      // read a mid-overwrite sidecar, drop the whole catalog, and the
-      // racing save would then rewrite it with only its own entries —
-      // silently shrinking the persisted set (review r14)
-      statsSaveLock.synchronized {
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(d, "_SUCCESS")))
-          try {
-            val n = graft.stats.StatsRegistry.load(spark, d)
-            System.err.println(s"[stats] loaded $n persisted table-stats " +
-              s"entries from $d (signature-checked lazily on first use)")
-          } catch {
-            // a corrupt sidecar must not take down every query — name it
-            // and fall back to building (the pre-persistence behavior)
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[stats] persisted stats at $d unreadable " +
-                s"($e) — falling back to distributed builds")
-          }
+      try {
+        val n = graft.stats.StatsRegistry.load(d)
+        if (n > 0)
+          System.err.println(s"[stats] loaded $n persisted table-stats " +
+            s"entries from $d (signature-checked lazily on first use)")
+      } catch {
+        // a corrupt sidecar must not take down every query — name it
+        // and fall back to building (the pre-persistence behavior)
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[stats] persisted stats at $d unreadable " +
+            s"($e) — falling back to distributed builds")
       }
     }
 
-  // Cost note (review r14): this rewrites the whole sidecar — one tiny
-  // coalesce(1) job over kilobytes — and runs at most once per table per
-  // process (the statsCache gates rebuilds), with statsMany batching all
-  // its builds into one save. Correctness-first: every completed build
-  // is durable immediately, so a later crash never loses it.
-  private def saveStats(spark: SparkSession): Unit = statsPersistDir.foreach { d =>
-    statsSaveLock.synchronized {
-      try graft.stats.StatsRegistry.save(spark, d)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[stats] persisting stats to $d failed ($e) — " +
-            "this process keeps its in-memory registry; the next process rebuilds")
-      }
+  // Rewrites the whole sidecar file (kilobytes, on the driver) at most
+  // once per table per process (the statsCache gates rebuilds), with
+  // statsMany batching all its builds into one save. Every completed
+  // build is durable immediately, so a later crash never loses it.
+  private def saveStats(): Unit = statsPersistDir.foreach { d =>
+    try graft.stats.StatsRegistry.save(d)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[stats] persisting stats to $d failed ($e) — " +
+          "this process keeps its in-memory registry; the next process rebuilds")
     }
   }
 
@@ -235,7 +145,7 @@ object Catalog {
     val cached = statsCache.get(key)
     if (cached != null && (cached._2 || !withHistograms)) cached._1
     else {
-      ensureStatsLoaded(spark)
+      ensureStatsLoaded()
       val df = table(spark, dir, name)
       // persisted-catalog hit: signature-fresh and at least as complete
       // as requested → zero scans (the whole point of the sidecar)
@@ -253,7 +163,7 @@ object Catalog {
             (oldV, newV) => if (oldV._2 && !newV._2) oldV else newV)
           if (kept._1 eq ts) {
             graft.stats.StatsRegistry.register(df, ts, full = withHistograms)
-            saveStats(spark)
+            saveStats()
           }
           kept._1
       }
@@ -270,7 +180,7 @@ object Catalog {
       c != null && (c._2 || !withHistograms)
     }
     if (missing.nonEmpty) {
-      ensureStatsLoaded(spark)
+      ensureStatsLoaded()
       // build the DataFrames once and reuse them for registration — a
       // second table() per name would repeat the driver-side file
       // listing/footer read (and the events ts-normalization branch)
@@ -296,7 +206,7 @@ object Catalog {
           if (kept._1 eq ts)
             graft.stats.StatsRegistry.register(dfs(n), ts, full = withHistograms)
         }
-        saveStats(spark)
+        saveStats()
       }
     }
     names.map(n => n -> statsCache.get((dir, n))._1).toMap

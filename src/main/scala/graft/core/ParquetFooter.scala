@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Parquet directory schemas answered on the driver from one footer.
@@ -29,7 +30,14 @@ object ParquetFooter {
     * partitioned into subdirectories), goes through Spark's own inference,
     * which then discovers the partitions or raises its named error.
     */
-  def schema(spark: SparkSession, dir: String): StructType = {
+  def schema(spark: SparkSession, dir: String): StructType =
+    schema(spark, dir, spark.sessionState.conf)
+
+  /** [[schema]] with the footer converted under `sqlConf` instead of the
+    * session's conf, e.g. a clone with one parquet type-mapping setting
+    * changed. The fallback inference still runs under the session's conf.
+    */
+  def schema(spark: SparkSession, dir: String, sqlConf: SQLConf): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val path = new Path(dir)
     val fs = path.getFileSystem(conf)
@@ -43,7 +51,7 @@ object ParquetFooter {
         val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
           ParquetMetadataConverter.SKIP_ROW_GROUPS)
         ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          new ParquetToSparkSchemaConverter(sqlConf))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -42,6 +42,24 @@ object Scratch {
     */
   def scratch(tag: String, dir: String = ""): String =
     root.resolve(if (dir.isEmpty) tag else s"$tag-${dirSlug(dir)}").toString
+
+  /** Replaces `path` with `content` in one step: writes a `.tmp-<pid>`
+    * sibling, then moves it over `path` atomically, so a crash or a
+    * concurrent reader never sees a torn file.
+    */
+  def writeAtomic(path: Path, content: String): Unit = {
+    val target = path.toAbsolutePath
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp-$pid")
+    try {
+      Files.writeString(tmp, content)
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case NonFatal(e) =>
+        try Files.deleteIfExists(tmp) catch { case NonFatal(_) => () }
+        throw e
+    }
+  }
 
   /** Deletes the `graft-<pid>` entries of `tmp` whose pid is no longer
     * alive. Only that exact name shape is touched: other entries, and

@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -22,11 +22,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * one context) resolves to one entry.
   *
   * **Persistence** ([[save]]/[[load]]): the registry round-trips through
-  * a tiny JSON sidecar (100 bins × columns × tables — kilobytes), so a
-  * FRESH driver process gets histogram-driven Selinger reordering
-  * without re-running the two-pass distributed build — at 100 TB that
-  * build is two full corpus scans per table per process, which is the
-  * wrong plan for statistics that only change when the data does.
+  * a tiny JSON-lines sidecar file (100 bins × columns × tables —
+  * kilobytes, read and written on the driver), so a FRESH driver process
+  * gets histogram-driven Selinger reordering without re-running the
+  * two-pass distributed build — at 100 TB that build is two full corpus
+  * scans per table per process, which is the wrong plan for statistics
+  * that only change when the data does.
   * Every entry carries a **file-set signature** (sha-256 over the scan's
   * sorted (path, length, mtime) triples — strictly stronger than the
   * stored-row-count check, and it needs no scan to verify); a loaded
@@ -157,18 +158,24 @@ object StatsRegistry {
       columns: Seq[String], hists: Seq[PHist], ranges: Seq[PRange],
       ndvs: Seq[PNdv], version: Option[Long])
 
+  /** The sidecar file inside a stats directory: one JSON [[PStats]] row
+    * per line.
+    */
+  private[graft] val SidecarFile = "stats.jsonl"
+
+  private val LockWaitMs = 30000L
+
   /** Cross-process mutual exclusion for one sidecar directory: an OS
     * `FileLock` on a sibling `<dir>.lock` file, held around both the
-    * save swap and the load read (ADVICE r14: the default
+    * save's read-merge-replace and the load read (the default
     * `<cwd>/stats-catalog` is shared by every graft process launched
-    * from the repo root — Bench, Verify, ScaleProbe overlap in driver
-    * rounds — so an unguarded save could delete the target mid-load of
-    * a peer, and two saves were last-writer-wins). In-JVM re-entry is
-    * serialized by a process-wide monitor first (same-JVM `FileLock`
-    * re-acquisition throws instead of blocking). The wait is a bounded
-    * tryLock poll — same discipline as the txn tape lock — so a wedged
-    * peer is diagnosed by name instead of hanging the caller forever;
-    * `GRAFT_STATS_LOCK_WAIT_MS` overrides the 30 s default.
+    * from the repo root — Bench, Verify and ScaleProbe may run at once —
+    * so two unguarded saves would be last-writer-wins). In-JVM
+    * re-entry is serialized by a per-directory monitor first (same-JVM
+    * `FileLock` re-acquisition throws instead of blocking). The wait is
+    * a bounded tryLock poll — same discipline as the txn tape lock — so
+    * a wedged peer is diagnosed by name after 30 s instead of hanging
+    * the caller forever.
     */
   // per-DIR monitors (review r15): one global monitor would serialize a
   // save to dir X (which may sleep up to the full lock-wait poll behind
@@ -177,30 +184,19 @@ object StatsRegistry {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def withSidecarLock[T](dir: String)(body: => T): T = {
     // normalize BEFORE deriving the lock path: a trailing-slash dir
-    // ("/x/stats/") would otherwise put ".lock" INSIDE the target —
-    // the delete guard then refuses every save of a fresh dir, and the
-    // swap would delete the held lock file out from under a peer
-    // (review r15)
+    // ("/x/stats/") would otherwise put ".lock" INSIDE the target
+    // instead of beside it
     val norm = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
     val monitor =
       jvmSidecarLocks.computeIfAbsent(norm.toString, _ => new Object)
     monitor.synchronized {
       val lockPath = norm.resolveSibling(norm.getFileName.toString + ".lock")
       Option(lockPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      // fails by name like the probe levers — a bare NumberFormatException
-      // from inside every save/load would never point at the env var
-      val waitMs = sys.env.get("GRAFT_STATS_LOCK_WAIT_MS").map { raw =>
-        try raw.trim.toLong
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"GRAFT_STATS_LOCK_WAIT_MS must be an integer (milliseconds), got '$raw'")
-        }
-      }.getOrElse(30000L)
       val ch = java.nio.channels.FileChannel.open(lockPath,
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       try {
-        val deadline = System.nanoTime() + waitMs * 1000000L
+        val deadline = System.nanoTime() + LockWaitMs * 1000000L
         var lock: java.nio.channels.FileLock = null
         while (lock == null) {
           lock = ch.tryLock()
@@ -208,11 +204,10 @@ object StatsRegistry {
             if (System.nanoTime() > deadline)
               throw new IllegalStateException(
                 s"could not acquire the stats sidecar lock $lockPath within " +
-                  s"${waitMs} ms — another graft process is saving/loading this " +
+                  s"$LockWaitMs ms — another graft process is saving/loading this " +
                   "sidecar (or died holding the lock is NOT possible: OS file " +
                   "locks release on process exit, so a long hold means a live " +
-                  "peer mid-save). Raise GRAFT_STATS_LOCK_WAIT_MS or point this " +
-                  "process at a distinct GRAFT_STATS_DIR")
+                  "peer mid-save). Point this process at a distinct GRAFT_STATS_DIR")
             Thread.sleep(100)
           }
         }
@@ -221,21 +216,13 @@ object StatsRegistry {
     }
   }
 
-  /** Raw JSON lines of a sidecar's part files — a driver-side read
-    * (the sidecar is kilobytes). Shared by the load path, the
-    * merge-on-save re-read, and the future-row preservation scan.
-    */
-  private def rawSidecarLines(dir: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(
-      java.nio.file.Files.list(java.nio.file.Paths.get(dir))) {
-      _.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("part-") && n.endsWith(".json")
-        }
-        .flatMap(p => java.nio.file.Files.readAllLines(p).asScala)
-        .filter(_.trim.nonEmpty).toList
+  /** Non-blank lines of `dir`'s sidecar file; none when it is absent. */
+  private def sidecarLines(dir: String): Seq[String] = {
+    val file = java.nio.file.Paths.get(dir, SidecarFile)
+    if (!java.nio.file.Files.exists(file)) Nil
+    else {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(file).asScala.filter(_.trim.nonEmpty).toList
     }
   }
 
@@ -252,20 +239,18 @@ object StatsRegistry {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  private implicit val jsonFormats: org.json4s.Formats = org.json4s.DefaultFormats
+
   /** Current-version sidecar rows, typed (no registry side effects) —
     * shared by [[load]] and [[save]]'s merge-on-save re-read. The
     * version gate runs on the RAW LINES, before typed deserialization
     * (r14 verdict #5, hardened r16): an off-version row must neither be
     * deserialized by name NOR abort the read of its current-version
-    * neighbors — a future row's unknown shape (e.g. null in a
-    * non-nullable field) used to throw out of the whole-directory typed
-    * read, which the merge-on-save fallback then swallowed as "write
-    * this process's entries only", silently dropping every carried
-    * entry. Refused rows are named on stderr.
+    * neighbors (a future row's unknown shape would not fit [[PStats]]).
+    * Refused rows are named on stderr.
     */
-  private def readRows(spark: SparkSession, dir: String): Seq[PStats] = {
-    val (ok, refused) =
-      rawSidecarLines(dir).partition(lineVersion(_).contains(SidecarFormatVersion))
+  private def readRows(dir: String, lines: Seq[String]): Seq[PStats] = {
+    val (ok, refused) = lines.partition(lineVersion(_).contains(SidecarFormatVersion))
     if (refused.nonEmpty) {
       val kinds = refused.map(lineVersion(_).map(_.toString).getOrElse("pre-versioning"))
         .distinct.sorted.mkString(", ")
@@ -275,13 +260,7 @@ object StatsRegistry {
         "pre-current row is superseded; a future row is preserved across " +
         "saves for the newer binary that wrote it)")
     }
-    if (ok.isEmpty) Seq.empty
-    else {
-      val enc = Encoders.product[PStats]
-      spark.read.schema(enc.schema)
-        .json(spark.createDataset(ok)(Encoders.STRING))
-        .as[PStats](enc).collect().toSeq
-    }
+    ok.map(l => org.json4s.jackson.JsonMethods.parse(l).extract[PStats])
   }
 
   // local file: paths whose files are all gone are dead entries (scratch
@@ -298,49 +277,37 @@ object StatsRegistry {
     }
 
   /** Persist every registered entry that has a signature (single-file
-    * relations — the only kind the registry keys) to `dir` as a JSON
-    * dataset. Entries whose local file set no longer exists are dropped
-    * (dead scratch paths must not accumulate in the sidecar). Returns
-    * the number of entries written.
+    * relations — the only kind the registry keys) to `<dir>/stats.jsonl`,
+    * one JSON row per line, written on the driver. Entries whose local
+    * file set no longer exists are dropped (dead scratch paths must not
+    * accumulate in the sidecar). Returns the number of entries written.
     *
-    * The write lands in a temp sibling dir first and swaps in via
-    * rename, so a reader never observes a half-written catalog (a
-    * direct `mode("overwrite")` deletes the target before writing —
-    * review r14). The crash window between delete and rename leaves no
-    * `_SUCCESS` at the target, which loaders already treat as "no
-    * sidecar" and rebuild.
+    * The file is replaced atomically ([[graft.core.Scratch.writeAtomic]]),
+    * so a reader never observes a half-written catalog. Nothing else in
+    * `dir` is read, written or deleted: a misconfigured `GRAFT_STATS_DIR`
+    * (pointed at testdata, an output dir, …) gains one file and loses
+    * none. A plain file AT `dir` refuses by name.
     *
-    * Three hardenings (ADVICE r14 + r14 verdict #5):
-    *  - **delete guard**: the swap recursively deletes the target, so a
-    *    misconfigured `GRAFT_STATS_DIR` (pointed at testdata, an output
-    *    dir, …) would be silently destroyed on the first build.
-    *    Deletion now requires the target to be empty or to carry a
-    *    prior sidecar's markers (`_SUCCESS` / `part-*.json`); anything
-    *    else refuses by name without touching it.
-    *  - **cross-process lock**: save and load both run under
-    *    [[withSidecarLock]], so a peer process can neither observe the
-    *    delete-to-rename window nor interleave its own swap.
-    *  - **merge-on-save**: under the lock, a prior sidecar's
-    *    current-version entries for keys this process never built are
-    *    re-read and carried forward (still [[keyAlive]]-GC'd), so two
-    *    processes saving different tables to one dir both survive —
-    *    the last-writer-wins data loss is gone. On a key conflict the
-    *    in-memory entry wins (it is the fresher build); an entry a
-    *    LOADER dropped as stale may be re-carried from disk here, which
-    *    is harmless — its signature still fails verification for every
-    *    later reader until a rebuild overwrites it. Rows with a FUTURE
-    *    format version are preserved verbatim as raw JSON lines
-    *    (ADVICE r15: a mixed-version deployment's newer entries must
-    *    survive an older binary's save); pre-current rows are dropped —
-    *    rebuild is the safe direction for superseded formats.
+    * Under [[withSidecarLock]] the save also merges: the prior file's
+    * current-version entries for keys this process never built are
+    * carried forward (still [[keyAlive]]-GC'd), so two processes saving
+    * different tables to one dir both survive. On a key conflict the
+    * in-memory entry wins (it is the fresher build); an entry a LOADER
+    * dropped as stale may be re-carried from disk here, which is
+    * harmless — its signature still fails verification for every later
+    * reader until a rebuild overwrites it. Rows with a FUTURE format
+    * version are kept verbatim as raw lines (a mixed-version
+    * deployment's newer entries must survive an older binary's save; no
+    * parse into PStats, no keyAlive GC — a future format may rename
+    * either field); pre-current rows are dropped — rebuild is the safe
+    * direction for superseded formats.
     */
-  def save(spark: SparkSession, dir: String): Int = withSidecarLock(dir) {
+  def save(dir: String): Int = withSidecarLock(dir) {
     import scala.jdk.CollectionConverters._
-    // normalized like the lock path: a trailing-slash dir would place
-    // the ".tmp-<pid>" sibling INSIDE the target, where the swap's
-    // delete walk destroys it before the rename (review r15)
-    val normDir =
-      java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    val target = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
+    require(!java.nio.file.Files.exists(target) || java.nio.file.Files.isDirectory(target),
+      s"stats sidecar target $dir exists and is not a directory — " +
+        "refusing to replace it; point GRAFT_STATS_DIR elsewhere")
     val rows = byKey.asScala.toSeq
       .collect { case (k, e) if e.signature.isDefined && keyAlive(k) =>
         val ts = e.ts
@@ -352,106 +319,22 @@ object StatsRegistry {
           ts.ndvsMap.toSeq.sortBy(_._1).map { case (c, n) => PNdv(c, n) },
           Some(SidecarFormatVersion))
       }
-    val target = java.nio.file.Paths.get(normDir)
-    // delete guard FIRST: a target we may not delete must fail before
-    // any write work, and with the prior sidecar intact
-    val targetIsSidecar = java.nio.file.Files.exists(target) && {
-      require(java.nio.file.Files.isDirectory(target),
-        s"stats sidecar target $dir exists and is not a directory — " +
-          "refusing to replace it; point GRAFT_STATS_DIR elsewhere")
-      val names = scala.util.Using.resource(java.nio.file.Files.list(target)) {
-        _.iterator().asScala.map(_.getFileName.toString).toList
-      }
-      // the marker is part-*.json SPECIFICALLY, not _SUCCESS: every
-      // Spark output directory carries _SUCCESS (a parquet table IS the
-      // misconfigured-GRAFT_STATS_DIR scenario this guard exists for),
-      // while only a JSON sidecar carries json part files (review r15).
-      // And the directory must contain ONLY sidecar entries (_SUCCESS /
-      // part-*.json / committer .crc residue) — ADVICE r15: a dir
-      // mixing one sidecar-like part file with unrelated user files
-      // would otherwise still be recursively deleted.
-      def sidecarEntry(n: String): Boolean =
-        n == "_SUCCESS" || n.endsWith(".crc") ||
-          (n.startsWith("part-") && n.endsWith(".json"))
-      val foreign = names.filterNot(sidecarEntry)
-      val marker = names.isEmpty ||
-        (foreign.isEmpty &&
-          names.exists(n => n.startsWith("part-") && n.endsWith(".json")))
-      require(marker,
-        s"stats sidecar target $dir is non-empty and is not purely a prior " +
-          s"sidecar (non-sidecar entries: ${foreign.take(5).mkString(", ")}" +
-          s"${if (foreign.size > 5) ", ..." else ""}; a sidecar holds only " +
-          "_SUCCESS/part-*.json/.crc) — refusing to delete it; point " +
-          "GRAFT_STATS_DIR at an empty or sidecar directory")
-      names.contains("_SUCCESS")
-    }
-    // merge-on-save: carry forward a peer's current-version entries for
-    // keys this process has no build of (fresh in-memory beats disk)
+    val prior = sidecarLines(target.toString)
     val memKeys = rows.map(_.key).toSet
     val carried =
-      if (!targetIsSidecar) Seq.empty[PStats]
-      else try readRows(spark, normDir)
-        .filter(p => !memKeys(p.key) && keyAlive(p.key))
+      try readRows(dir, prior).filter(p => !memKeys(p.key) && keyAlive(p.key))
       catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[stats] prior sidecar at $dir unreadable during " +
             s"merge-on-save ($e) — writing this process's entries only")
           Seq.empty[PStats]
       }
-    // FUTURE-format rows are preserved VERBATIM (ADVICE r15): merge-on-
-    // save carries only current-version typed rows, so a save by an
-    // older binary would otherwise permanently DELETE a newer peer's
-    // rows from the sidecar rather than merely refusing to read them —
-    // destructive in a mixed-version deployment. Raw JSON lines whose
-    // "version" exceeds ours ride through the rewrite untouched (no
-    // parse into PStats, no keyAlive GC — a future format may rename
-    // either field); this binary's version gate keeps refusing them at
-    // load, and the newer binary still finds them. OLDER-than-current
-    // rows stay dropped: rebuilding them is the safe direction and the
-    // current format supersedes them by definition.
-    val preservedFuture: Seq[String] =
-      if (!targetIsSidecar) Seq.empty
-      else try rawSidecarLines(normDir)
-        .filter(lineVersion(_).exists(_ > SidecarFormatVersion))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[stats] prior sidecar at $dir unreadable while " +
-            s"checking for future-format rows ($e) — none preserved")
-          Seq.empty
-      }
+    val preservedFuture = prior.filter(lineVersion(_).exists(_ > SidecarFormatVersion))
     val all = (rows ++ carried).sortBy(_.key)
-    val tmp = s"$normDir.tmp-${ProcessHandle.current().pid()}"
-    spark.createDataset(all)(Encoders.product[PStats])
-      .coalesce(1).write.mode("overwrite").json(tmp)
-    val tmpPath = java.nio.file.Paths.get(tmp)
-    // preserved future-format lines land as their OWN part file in the
-    // swap dir (readers list part-*.json, so they ride along; appending
-    // into Spark's part file would race its .crc checksum)
-    if (preservedFuture.nonEmpty)
-      java.nio.file.Files.write(
-        tmpPath.resolve("part-preserved-future.json"),
-        preservedFuture.asJava,
-        java.nio.file.StandardOpenOption.CREATE)
-    try {
-      if (java.nio.file.Files.exists(target)) {
-        scala.util.Using.resource(java.nio.file.Files.walk(target)) { w =>
-          w.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(java.nio.file.Files.delete)
-        }
-      }
-      java.nio.file.Files.move(tmpPath, target)
-    } catch {
-      case t: Throwable =>
-        // best-effort cleanup of the temp dir; the caller's NonFatal
-        // handler logs the failure itself
-        try {
-          scala.util.Using.resource(java.nio.file.Files.walk(tmpPath)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(java.nio.file.Files.delete)
-          }
-        } catch { case scala.util.control.NonFatal(_) => () }
-        throw t
-    }
+    val lines = all.map(org.json4s.jackson.Serialization.write(_)) ++ preservedFuture
+    java.nio.file.Files.createDirectories(target)
+    graft.core.Scratch.writeAtomic(target.resolve(SidecarFile),
+      lines.map(_ + "\n").mkString)
     all.size
   }
 
@@ -461,13 +344,13 @@ object StatsRegistry {
     * staleness guard — a fresh process must never optimize against
     * statistics of data that changed). Entries already registered
     * in-process win over loaded ones. Rows whose format version is not
-    * [[SidecarFormatVersion]] are refused by name ([[versionGate]]) —
+    * [[SidecarFormatVersion]] are refused by name ([[readRows]]) —
     * never deserialized into live statistics. Runs under the sidecar
-    * file lock so a peer's save can never delete the dir mid-read.
-    * Returns the number of entries loaded.
+    * lock, so it never interleaves with a peer's save. Returns the number
+    * of entries loaded; 0 when `<dir>/stats.jsonl` is absent.
     */
-  def load(spark: SparkSession, dir: String): Int = withSidecarLock(dir) {
-    val rows = readRows(spark, dir)
+  def load(dir: String): Int = withSidecarLock(dir) {
+    val rows = readRows(dir, sidecarLines(dir))
     rows.foreach { p =>
       val hists = p.hists.map { ph =>
         val h = new IntHistogram(ph.buckets, ph.minV, ph.maxV)

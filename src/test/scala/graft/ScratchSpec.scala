@@ -50,18 +50,14 @@ class ScratchSpec extends AnyFunSuite {
 
   /** Lines of `files` that name a per-process path by hand. The listed
     * exceptions are not scratch: the persistent probe tapes and GenScale's
-    * default output dir outlive the process on purpose, and the two
-    * atomic-write temp siblings (Bench's ref file, the stats sidecar) sit
-    * next to the file they replace.
+    * default output dir outlive the process on purpose.
     */
   private def handRolled(files: Seq[(Path, String)]): Seq[String] = {
     val exceptions = Seq(
       "ScaleProbe.scala" -> "/tmp/graft-scaleprobe-",
       "StreamWriteProbe.scala" -> "/tmp/graft-scaleprobe-",
       "StreamWriteProbe.scala" -> "/tmp/graft-writeprobe-${copies}x-",
-      "GenScale.scala" -> "/tmp/graft-sf1",
-      "Bench.scala" -> "path.getFileName.toString + s\".tmp-${ProcessHandle.current().pid()}\"",
-      "StatsRegistry.scala" -> "s\"$normDir.tmp-${ProcessHandle.current().pid()}\"")
+      "GenScale.scala" -> "/tmp/graft-sf1")
     files.filterNot(_._1.endsWith(Paths.get("core", "Scratch.scala"))).flatMap {
       case (path, text) =>
         val file = path.getFileName.toString
@@ -81,9 +77,7 @@ class ScratchSpec extends AnyFunSuite {
     assert(handRolled(bad).size == 4)
     val allowed = Seq(
       Paths.get("graft", "core", "Scratch.scala") -> "val pid = ProcessHandle.current().pid()",
-      Paths.get("graft", "ScaleProbe.scala") -> "val dir = s\"/tmp/graft-scaleprobe-1x\"",
-      Paths.get("graft", "stats", "StatsRegistry.scala") ->
-        "val tmp = s\"$normDir.tmp-${ProcessHandle.current().pid()}\"")
+      Paths.get("graft", "ScaleProbe.scala") -> "val dir = s\"/tmp/graft-scaleprobe-1x\"")
     assert(handRolled(allowed).isEmpty)
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession across all ScalaTest suites (starting a
@@ -38,6 +40,33 @@ object SharedSpark {
     SparkSession.setDefaultSession(base)
     SparkSession.setActiveSession(base)
     s
+  }
+
+  /** Runs `body` and counts the Spark jobs it started from this thread
+    * (tagged by a job group, so jobs of other threads do not count). The
+    * listener bus is drained before and after, so every job start posted
+    * by `body` has been seen.
+    */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      val a = body
+      TestListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   /** Every message down a throwable's cause chain — the named-error

@@ -51,12 +51,12 @@ class StatsPersistSpec extends AnyFunSuite {
     val built = TableStats.build(df)
     StatsRegistry.register(df, built, full = true)
     val before = probeGrid(built)
-    val saved = StatsRegistry.save(spark, sidecar)
+    val saved = StatsRegistry.save(sidecar)
     assert(saved >= 1, "the registered entry must persist")
 
     StatsRegistry.clear() // fresh process simulation
     assert(StatsRegistry.forPlan(df.queryExecution.analyzed).isEmpty)
-    val loaded = StatsRegistry.load(spark, sidecar)
+    val loaded = StatsRegistry.load(sidecar)
     assert(loaded == saved)
 
     // the loaded entry resolves through the SAME plan-key path Selinger
@@ -75,19 +75,18 @@ class StatsPersistSpec extends AnyFunSuite {
   }
 
   test("staleness guard: a changed file set drops the loaded entry (named refusal → rebuild)") {
-    val spark = SharedSpark.spark
     val tableDir = scratch("stale")
     val sidecar = scratch("stale-sidecar")
     val df = writeTable(tableDir, seed = 7)
     StatsRegistry.register(df, TableStats.build(df), full = true)
-    assert(StatsRegistry.save(spark, sidecar) >= 1)
+    assert(StatsRegistry.save(sidecar) >= 1)
 
     // the data changes: same directory, regenerated content (new part
     // files — exactly the driver-regenerates-testdata scenario)
     val df2 = writeTable(tableDir, seed = 8, n = 7000)
 
     StatsRegistry.clear()
-    StatsRegistry.load(spark, sidecar)
+    StatsRegistry.load(sidecar)
     // the loaded entry's stored signature no longer matches the live file
     // set → dropped, NOT served (optimizing on stale histograms is the
     // failure mode the guard exists for)
@@ -101,15 +100,14 @@ class StatsPersistSpec extends AnyFunSuite {
   }
 
   test("completeness guard: a light entry never satisfies a with-histograms request") {
-    val spark = SharedSpark.spark
     val tableDir = scratch("light")
     val sidecar = scratch("light-sidecar")
     val df = writeTable(tableDir, seed = 9)
     StatsRegistry.register(df, TableStats.build(df, withHistograms = false),
       full = false)
-    StatsRegistry.save(spark, sidecar)
+    StatsRegistry.save(sidecar)
     StatsRegistry.clear()
-    StatsRegistry.load(spark, sidecar)
+    StatsRegistry.load(sidecar)
     assert(StatsRegistry.lookupVerified(df, needFull = true).isEmpty,
       "a row-count-only entry must not answer a histogram request")
     val light = StatsRegistry.lookupVerified(df, needFull = false)
@@ -119,116 +117,124 @@ class StatsPersistSpec extends AnyFunSuite {
     assert(StatsRegistry.lookupVerified(df, needFull = false).exists(_._2))
   }
 
+  // every regular file under `dir` except the sidecar itself, by content
+  private def foreignFiles(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) {
+      _.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filterNot(_.getFileName.toString == StatsRegistry.SidecarFile)
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    }
+  }
+
   test("save refuses to delete a non-sidecar target (ADVICE r14 delete guard)") {
-    val spark = SharedSpark.spark
     val tableDir = scratch("guard")
     val df = writeTable(tableDir, seed = 21)
     StatsRegistry.clear()
     StatsRegistry.register(df, TableStats.build(df), full = true)
-    // a dir holding innocent non-sidecar content: the misconfigured
-    // GRAFT_STATS_DIR scenario (pointed at testdata / an output dir) —
-    // pre-guard, save() recursively destroyed it on the first build
-    val victim = scratch("victim")
-    val innocent = java.nio.file.Paths.get(victim, "precious.txt")
-    java.nio.file.Files.writeString(innocent, "not a sidecar")
-    val e = intercept[IllegalArgumentException] { StatsRegistry.save(spark, victim) }
-    assert(e.getMessage.contains("refusing to delete"))
-    assert(java.nio.file.Files.exists(innocent), "the guarded dir must be untouched")
-    assert(java.nio.file.Files.readString(innocent) == "not a sidecar")
-    // an empty dir IS a legal target, and so is a prior sidecar (the
-    // overwrite path the guard must not break)
+    // the misconfigured GRAFT_STATS_DIR scenario (pointed at testdata /
+    // an output dir): save writes only its own sidecar file, so a plain
+    // file and a parquet table with its _SUCCESS marker survive two saves
+    val shared = scratch("victim")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(shared, "precious.txt"),
+      "not a sidecar")
+    writeTable(s"$shared/table.parquet", seed = 22, n = 100)
+    val before = foreignFiles(shared)
+    assert(before.keySet.contains("table.parquet/_SUCCESS"))
+    assert(StatsRegistry.save(shared) == 1)
+    assert(StatsRegistry.save(shared) == 1)
+    assert(foreignFiles(shared) == before, "no foreign file may change or vanish")
+    // an empty dir is a legal target, and so is a prior sidecar
     val ok = scratch("guard-ok")
-    assert(StatsRegistry.save(spark, ok) >= 1)
-    assert(StatsRegistry.save(spark, ok) >= 1)
-    // a plain FILE at the target refuses by name too
+    assert(StatsRegistry.save(ok) >= 1)
+    assert(StatsRegistry.save(ok) >= 1)
+    // a plain FILE at the target refuses by name
     val filePath = java.nio.file.Paths.get(scratch("guard-file"), "f")
     java.nio.file.Files.writeString(filePath, "x")
-    val e2 = intercept[IllegalArgumentException] {
-      StatsRegistry.save(spark, filePath.toString)
+    val e = intercept[IllegalArgumentException] {
+      StatsRegistry.save(filePath.toString)
     }
-    assert(e2.getMessage.contains("not a directory"))
+    assert(e.getMessage.contains("not a directory"))
     assert(java.nio.file.Files.readString(filePath) == "x")
-    // a SPARK OUTPUT directory (parquet table: part-*.parquet +
-    // _SUCCESS) is the canonical misconfigured-GRAFT_STATS_DIR victim —
-    // _SUCCESS alone must NOT read as a sidecar marker (review r15)
-    val parquetDir = scratch("guard-parquet")
-    writeTable(parquetDir, seed = 22, n = 100)
-    val e3 = intercept[IllegalArgumentException] {
-      StatsRegistry.save(spark, parquetDir)
-    }
-    assert(e3.getMessage.contains("refusing to delete"))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(parquetDir, "_SUCCESS")),
-      "the parquet table must be untouched")
-    // and a trailing-slash target resolves the SAME lock/guard paths as
-    // its normalized form (a naive dir+'.lock' would land the lock file
-    // INSIDE the target and refuse every save of a fresh dir)
+    // and a trailing-slash target resolves the SAME lock path as its
+    // normalized form (a naive dir+'.lock' would land the lock file
+    // INSIDE the target)
     val slashed = scratch("guard-slash")
-    assert(StatsRegistry.save(spark, slashed + "/") >= 1)
+    assert(StatsRegistry.save(slashed + "/") >= 1)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(slashed + ".lock")),
       "the lock file must be a SIBLING of the normalized target")
   }
 
+  test("delete guard: a sidecar-LIKE dir mixing foreign files refuses (ADVICE r15)") {
+    val dfA = writeTable(scratch("mixed-a"), seed = 61)
+    StatsRegistry.clear()
+    StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
+    // a user dir holding a stray part-*.json plus unrelated content: the
+    // part file neither licenses a delete nor is read as sidecar rows
+    val mixed = scratch("mixed-victim")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(mixed, "part-00000.json"), "{}")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(mixed, "precious.txt"), "user data")
+    val before = foreignFiles(mixed)
+    assert(StatsRegistry.save(mixed) == 1)
+    assert(StatsRegistry.save(mixed) == 1)
+    assert(foreignFiles(mixed) == before, "no foreign file may change or vanish")
+    StatsRegistry.clear()
+    assert(StatsRegistry.load(mixed) == 1)
+    assert(StatsRegistry.forPlan(dfA.queryExecution.analyzed).isDefined)
+  }
+
   test("format version: future and pre-versioning rows are refused by name (r14 verdict #5)") {
-    val spark = SharedSpark.spark
     val tableDir = scratch("ver")
     val sidecar = scratch("ver-sidecar")
     val df = writeTable(tableDir, seed = 31)
     StatsRegistry.clear()
     StatsRegistry.register(df, TableStats.build(df), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 1)
-    // doctor the sidecar rows in place (drop the .crc twins so the local
-    // checksum filesystem does not veto the edited bytes)
-    def rewrite(f: String => String): Unit = {
-      import scala.jdk.CollectionConverters._
-      val entries = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(sidecar)))(
-        _.iterator().asScala.toList)
-      entries.foreach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith(".") && n.endsWith(".crc")) java.nio.file.Files.delete(p)
-        else if (n.startsWith("part-") && n.endsWith(".json"))
-          java.nio.file.Files.writeString(p, f(java.nio.file.Files.readString(p)))
-      }
-    }
+    assert(StatsRegistry.save(sidecar) == 1)
+    // doctor the sidecar rows in place
+    val file = java.nio.file.Paths.get(sidecar, StatsRegistry.SidecarFile)
+    def rewrite(f: String => String): Unit =
+      java.nio.file.Files.writeString(file, f(java.nio.file.Files.readString(file)))
     // a FUTURE format version: deserializing it by name would read
     // arbitrarily-reinterpreted fields as live statistics
     rewrite(_.replace("\"version\":2", "\"version\":99"))
     StatsRegistry.clear()
-    assert(StatsRegistry.load(spark, sidecar) == 0, "future-version rows must not load")
+    assert(StatsRegistry.load(sidecar) == 0, "future-version rows must not load")
     assert(StatsRegistry.forPlan(df.queryExecution.analyzed).isEmpty)
     // the pre-versioning r14 format: no version field at all
     rewrite(_.replace(",\"version\":99}", "}"))
     StatsRegistry.clear()
-    assert(StatsRegistry.load(spark, sidecar) == 0, "pre-versioning rows must be refused")
+    assert(StatsRegistry.load(sidecar) == 0, "pre-versioning rows must be refused")
     // a rebuild + save rewrites the sidecar in the current format (the
     // merge-on-save re-read must refuse the doctored rows too, not carry
     // them forward)
     StatsRegistry.register(df, TableStats.build(df), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 1)
+    assert(StatsRegistry.save(sidecar) == 1)
     StatsRegistry.clear()
-    assert(StatsRegistry.load(spark, sidecar) == 1)
+    assert(StatsRegistry.load(sidecar) == 1)
     assert(StatsRegistry.forPlan(df.queryExecution.analyzed).isDefined)
   }
 
   test("two-process save survivorship: merge-on-save keeps a peer's entries (ADVICE r14)") {
-    val spark = SharedSpark.spark
     val sidecar = scratch("merge-sidecar")
     val dfA = writeTable(scratch("merge-a"), seed = 41)
     val dirB = scratch("merge-b")
     val dfB = writeTable(dirB, seed = 43, n = 6000)
     StatsRegistry.clear()
     StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 1)
+    assert(StatsRegistry.save(sidecar) == 1)
     // "process 2": a fresh registry that only ever built B saves to the
     // SAME dir — pre-merge this was last-writer-wins and silently erased
     // A's entry (ADVICE r14 / r14 verdict #5)
     StatsRegistry.clear()
     StatsRegistry.register(dfB, TableStats.build(dfB), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 2, "the save must carry A forward")
+    assert(StatsRegistry.save(sidecar) == 2, "the save must carry A forward")
     StatsRegistry.clear()
-    assert(StatsRegistry.load(spark, sidecar) == 2)
+    assert(StatsRegistry.load(sidecar) == 2)
     assert(StatsRegistry.forPlan(dfA.queryExecution.analyzed).exists(_.numTuples == 5000L))
     assert(StatsRegistry.forPlan(dfB.queryExecution.analyzed).exists(_.numTuples == 6000L))
     // key conflict: the in-memory (fresher) build wins over the carried
@@ -236,9 +242,9 @@ class StatsPersistSpec extends AnyFunSuite {
     val dfB2 = writeTable(dirB, seed = 44, n = 7000)
     StatsRegistry.clear()
     StatsRegistry.register(dfB2, TableStats.build(dfB2), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 2)
+    assert(StatsRegistry.save(sidecar) == 2)
     StatsRegistry.clear()
-    StatsRegistry.load(spark, sidecar)
+    StatsRegistry.load(sidecar)
     assert(StatsRegistry.forPlan(dfB2.queryExecution.analyzed).exists(_.numTuples == 7000L))
     // and the sidecar lock released cleanly: a fresh exclusive claim on
     // the lock file succeeds immediately after save/load returned
@@ -253,92 +259,42 @@ class StatsPersistSpec extends AnyFunSuite {
   }
 
   test("future-format rows survive an older binary's save verbatim (ADVICE r15)") {
-    val spark = SharedSpark.spark
     val sidecar = scratch("future-sidecar")
     val dfA = writeTable(scratch("future-a"), seed = 51)
     StatsRegistry.clear()
     StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 1)
+    assert(StatsRegistry.save(sidecar) == 1)
     // a NEWER binary's row lands in the sidecar (format version 99, a
     // shape this binary's PStats schema does not know)
     val futureLine = """{"key":"file:/future/table.parquet","version":99,""" +
       """"new_field_this_binary_never_heard_of":{"a":[1,2,3]}}"""
-    import scala.jdk.CollectionConverters._
-    val part = scala.util.Using.resource(
-      java.nio.file.Files.list(java.nio.file.Paths.get(sidecar)))(
-      _.iterator().asScala.toList)
-      .find { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".json")
-      }.get
-    // drop the .crc twin so the local checksum fs accepts the edit
-    scala.util.Using.resource(
-      java.nio.file.Files.list(java.nio.file.Paths.get(sidecar)))(
-      _.iterator().asScala.toList)
-      .filter(p => p.getFileName.toString.endsWith(".crc"))
-      .foreach(java.nio.file.Files.delete)
-    java.nio.file.Files.writeString(part,
-      java.nio.file.Files.readString(part) + futureLine + "\n")
+    val file = java.nio.file.Paths.get(sidecar, StatsRegistry.SidecarFile)
+    java.nio.file.Files.writeString(file,
+      java.nio.file.Files.readString(file) + futureLine + "\n")
     // this (older) binary saves a second table over the same sidecar:
     // pre-fix, merge-on-save carried only current-version rows and the
     // newer peer's row was permanently DELETED
     val dfB = writeTable(scratch("future-b"), seed = 52, n = 6000)
     StatsRegistry.clear()
     StatsRegistry.register(dfB, TableStats.build(dfB), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 2, "A carried + B fresh")
-    val rawAfter = scala.util.Using.resource(
-      java.nio.file.Files.list(java.nio.file.Paths.get(sidecar)))(
-      _.iterator().asScala.toList)
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".json")
-      }
-      .map(java.nio.file.Files.readString(_)).mkString
+    assert(StatsRegistry.save(sidecar) == 2, "A carried + B fresh")
+    val rawAfter = java.nio.file.Files.readString(file)
     assert(rawAfter.contains(futureLine),
       "the future-format row must ride through the rewrite verbatim")
     // this binary still refuses it at load; the typed rows still work
     StatsRegistry.clear()
-    assert(StatsRegistry.load(spark, sidecar) == 2)
+    assert(StatsRegistry.load(sidecar) == 2)
     assert(StatsRegistry.forPlan(dfA.queryExecution.analyzed).isDefined)
     assert(StatsRegistry.forPlan(dfB.queryExecution.analyzed).isDefined)
     // and a THIRD save keeps preserving it (stable across rewrites)
     StatsRegistry.clear()
     StatsRegistry.register(dfB, TableStats.build(dfB), full = true)
-    assert(StatsRegistry.save(spark, sidecar) == 2)
-    val rawThird = scala.util.Using.resource(
-      java.nio.file.Files.list(java.nio.file.Paths.get(sidecar)))(
-      _.iterator().asScala.toList)
-      .filter(p => p.getFileName.toString.endsWith(".json"))
-      .map(java.nio.file.Files.readString(_)).mkString
+    assert(StatsRegistry.save(sidecar) == 2)
+    val rawThird = java.nio.file.Files.readString(file)
     assert(rawThird.contains(futureLine))
   }
 
-  test("delete guard: a sidecar-LIKE dir mixing foreign files refuses (ADVICE r15)") {
-    val spark = SharedSpark.spark
-    val dfA = writeTable(scratch("mixed-a"), seed = 61)
-    StatsRegistry.clear()
-    StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
-    // pre-fix: ONE part-*.json anywhere in the dir licensed a recursive
-    // delete of EVERYTHING in it — a user dir that happens to hold a
-    // sidecar-like file plus unrelated content was still destroyed
-    val victim = scratch("mixed-victim")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(victim, "part-00000.json"), "{}")
-    val innocent = java.nio.file.Paths.get(victim, "precious.txt")
-    java.nio.file.Files.writeString(innocent, "user data")
-    val e = intercept[IllegalArgumentException] { StatsRegistry.save(spark, victim) }
-    assert(e.getMessage.contains("refusing to delete"))
-    assert(e.getMessage.contains("precious.txt"),
-      "the refusal must name the foreign entry")
-    assert(java.nio.file.Files.readString(innocent) == "user data")
-    // a PURE prior sidecar (only _SUCCESS/part-*.json/.crc) still saves
-    val ok = scratch("mixed-ok")
-    assert(StatsRegistry.save(spark, ok) >= 1)
-    assert(StatsRegistry.save(spark, ok) >= 1)
-  }
-
   test("save GCs entries whose local file set is gone (dead scratch paths)") {
-    val spark = SharedSpark.spark
     val tableDir = scratch("gone")
     val sidecar = scratch("gone-sidecar")
     val df = writeTable(tableDir, seed = 11)
@@ -351,7 +307,7 @@ class StatsPersistSpec extends AnyFunSuite {
       w.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(java.nio.file.Files.delete)
     }
-    assert(StatsRegistry.save(spark, sidecar) == 0,
+    assert(StatsRegistry.save(sidecar) == 0,
       "a dead path's entry must not be written to the sidecar")
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
+import graft.SharedSpark.jobsOf
 import graft.txn.{LogRecord, TxnTable}
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{CalendarIntervalType, StructField, StructType}
@@ -50,33 +49,6 @@ class TxnSpec extends AnyFunSuite {
     scala.util.Using.resource(Files.list(Paths.get(t.dir))) { s =>
       s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("batch-")).toSeq.sorted
     }
-
-  /** Runs `body` and counts the Spark jobs it started from this thread
-    * (tagged by a job group, so jobs of other threads do not count). The
-    * listener bus is drained before and after, so every job start posted
-    * by `body` has been seen.
-    */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"txn-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TxnSpec job count")
-    try {
-      val a = body
-      TestListenerBus.drain(sc)
-      (a, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   // log_manager_test.cc:197-214 — one txn, two row writes, commit:
   // 4 records total, 2 of them UPDATE.
