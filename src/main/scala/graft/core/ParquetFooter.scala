@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -47,16 +48,23 @@ object ParquetFooter {
         .minByOption(_.getPath.getName)
     first match {
       case None => spark.read.parquet(dir).schema
-      case Some(file) =>
-        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-          new ParquetToSparkSchemaConverter(sqlConf))
+      case Some(file) => fileSchema(file, conf, sqlConf)
     }
   }
 
-  // Spark's file listing skips `_`- and `.`-prefixed names (markers,
-  // checksums) and files still being copied in.
-  private def isDataFile(name: String): Boolean =
+  /** The schema Spark's inference takes from the footer of `file`, a data
+    * file already listed, converted under `sqlConf`.
+    */
+  def fileSchema(file: FileStatus, conf: Configuration, sqlConf: SQLConf): StructType = {
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(sqlConf))
+  }
+
+  /** Spark's file listing skips `_`- and `.`-prefixed names (markers,
+    * checksums) and files still being copied in.
+    */
+  def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".") && !name.endsWith("._COPYING_")
 }

@@ -1,17 +1,25 @@
 package graft.txn
 
 import graft.core.ParquetFooter
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils, FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetUtils}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import java.io.{Closeable, FileNotFoundException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -33,12 +41,15 @@ import scala.util.control.NonFatal
   * into reads), and recovery = re-deriving the committed set from the log.
   * This is the standard commit-log-over-immutable-files design used by
   * large-scale table formats, and it scales: the log carries only
-  * metadata. A batch whose rows already sit in driver memory (a local
-  * relation, e.g. `createDataFrame` of a row list) is written on the
-  * driver as one parquet file through Spark's own parquet writer; every
-  * other batch, and every checkpoint, moves through a distributed
-  * `df.write.parquet`. Reads take the table schema from one parquet
-  * footer on the driver, so building a read plan starts no Spark job.
+  * metadata. A batch or checkpoint whose rows already sit in driver
+  * memory (a local relation, e.g. `createDataFrame` of a row list or a
+  * small snapshot) is written on the driver as one parquet file through
+  * Spark's own parquet writer; every other one moves through a
+  * distributed `df.write.parquet`. A snapshot whose decoded rows take at
+  * most [[TxnTable.LocalReadMaxBytes]] is read on the driver, decoding
+  * each immutable file once; a larger one is one distributed scan whose
+  * schema comes from one parquet footer. Neither starts a Spark job
+  * before the read's action.
   */
 object LogRecord {
   val Begin = "BEGIN"
@@ -531,7 +542,14 @@ final class TxnTable(spark: SparkSession, val dir: String,
   def insert(txn: Long, df: DataFrame): Unit = {
     batchSeq += 1
     val batch = s"batch-$txn-$batchSeq"
-    val path = root.resolve(batch)
+    write(root.resolve(batch), df)
+    log.logUpdate(txn, batch)
+  }
+
+  /** `df` as the new directory `path`: on the driver when its rows are
+    * already in driver memory, else through `df.write.parquet`.
+    */
+  private def write(path: Path, df: DataFrame): Unit = {
     // Only a plan whose every leaf is a local relation can fold into one
     // (ConvertToLocalRelation); any other plan is left for `df.write` to
     // optimize, once.
@@ -542,7 +560,6 @@ final class TxnTable(spark: SparkSession, val dir: String,
         writeOnDriver(path, df.schema.fieldNames.toSeq, local)
       case _ => df.write.mode("errorifexists").parquet(path.toString)
     }
-    log.logUpdate(txn, batch)
   }
 
   /** The rows of `local` as one parquet file in the new directory `dir`,
@@ -587,16 +604,27 @@ final class TxnTable(spark: SparkSession, val dir: String,
     * committed txns. `asTxn` additionally sees its own uncommitted writes
     * (read-your-writes).
     *
-    * All visible dirs go into ONE multi-path `spark.read.parquet` call —
-    * one scan node however many batches are live. (Batches share a schema
-    * by construction: every insert targets the same logical table. The
-    * earlier per-batch `unionByName` chain built an O(#batches)-deep plan
-    * tree — thousands of small txns between checkpoints meant driver-side
-    * planning blowup for a plan the scan expresses natively.) The scan is
-    * given the schema of the first dir, read from its parquet footer on the
-    * driver ([[ParquetFooter.schema]]) — what Spark's inference job would
-    * answer — so building the DataFrame starts no Spark job; only its
-    * action does.
+    * The visible dirs are listed once. When their rows, decoded, take at
+    * most [[TxnTable.LocalReadMaxBytes]] of driver heap, the snapshot is
+    * read into driver memory when read() is called, and the DataFrame is
+    * one local relation: its actions start no Spark job. Each file is
+    * decoded by Spark's own parquet reader once per table instance and kept
+    * while it stays visible (files are immutable), so a read decodes only
+    * the files committed since the last one. A decode that passes the
+    * constant stops there and the read falls back to the scan.
+    *
+    * Above the constant, all visible dirs go into ONE multi-path
+    * `spark.read.parquet` call — one scan node however many batches are
+    * live. (Batches share a schema by construction: every insert targets
+    * the same logical table. The earlier per-batch `unionByName` chain
+    * built an O(#batches)-deep plan tree — thousands of small txns between
+    * checkpoints meant driver-side planning blowup for a plan the scan
+    * expresses natively.) The scan is given the schema of the first dir,
+    * read from its parquet footer on the driver ([[ParquetFooter.schema]])
+    * — what Spark's inference job would answer — so building the DataFrame
+    * starts no Spark job; only its action does.
+    *
+    * Both report the same schema: the first file's, every field nullable.
     */
   def read(asTxn: Option[Long] = None): DataFrame = {
     val (base, committed, batchMap) = log.committedState
@@ -614,8 +642,8 @@ final class TxnTable(spark: SparkSession, val dir: String,
   }
 
   /** Time-travel read: the committed snapshot as of `txn`'s commit —
-    * exactly what read() returned the moment that COMMIT landed. Same
-    * single multi-path scan as [[read]].
+    * exactly what read() returned the moment that COMMIT landed. Read like
+    * [[read]]: in driver memory when small, else one multi-path scan.
     */
   def readAsOf(txn: Long): DataFrame = {
     val (base, _, batchMap) = log.committedStateAsOf(txn)
@@ -624,8 +652,21 @@ final class TxnTable(spark: SparkSession, val dir: String,
 
   private def scan(dirs: Vector[String]): DataFrame =
     if (dirs.isEmpty) spark.emptyDataFrame
-    else spark.read.schema(ParquetFooter.schema(spark, root.resolve(dirs.head).toString))
-      .parquet(dirs.map(b => root.resolve(b).toString): _*)
+    else {
+      val paths = dirs.map(b => root.resolve(b).toString)
+      (if (forceScan) None else decoded.read(paths)).getOrElse(
+        spark.read.schema(ParquetFooter.schema(spark, paths.head)).parquet(paths: _*))
+    }
+
+  private val decoded = new DecodedFiles(spark)
+
+  /** Reads every snapshot through the distributed scan, whatever its size,
+    * so tests can compare the two paths over the same dirs.
+    */
+  private[txn] var forceScan: Boolean = false
+
+  /** Number of files whose decoded rows this table keeps. */
+  private[txn] def decodedFiles: Int = decoded.size
 
   // All UPDATE records of t from the full durable tape (committedState
   // hides uncommitted ones). Durable, not in-memory: own writes must be
@@ -637,6 +678,8 @@ final class TxnTable(spark: SparkSession, val dir: String,
 
   /** Compact all currently-committed data into a single base dir and log
     * a CHECKPOINT; recovery after this never replays older batches.
+    * The base is written like an insert: a snapshot that [[read]] holds in
+    * driver memory is written on the driver, a larger one by Spark tasks.
     * A checkpoint with NOTHING visible is a no-op (found by the tape
     * fuzz: parquet refuses an empty-schema write, and an empty base dir
     * would poison every later read) — there are no batches to subsume,
@@ -647,7 +690,7 @@ final class TxnTable(spark: SparkSession, val dir: String,
     if (snapshot.columns.nonEmpty) {
       batchSeq += 1
       val base = s"ckpt-$batchSeq"
-      snapshot.write.mode("errorifexists").parquet(root.resolve(base).toString)
+      write(root.resolve(base), snapshot)
       log.logCheckpoint(base)
     }
   }
@@ -690,8 +733,8 @@ final class TxnTable(spark: SparkSession, val dir: String,
         .iterator().asScala.foreach(Files.delete)
     }
 
-  /** Simulate a crash: all in-memory state gone. */
-  def crash(): Unit = { log.reset(); txns.reset() }
+  /** Simulate a crash: all in-memory state gone, decoded files included. */
+  def crash(): Unit = { log.reset(); txns.reset(); decoded.clear() }
 
   /** Recover from the durable log; committed data is readable again and
     * new txn ids resume past everything on the tape.
@@ -704,4 +747,170 @@ final class TxnTable(spark: SparkSession, val dir: String,
 
   private def maxSeen: Long =
     log.durableRecords().foldLeft(0L) { case (m, (_, t, _)) => math.max(m, t) }
+}
+
+object TxnTable {
+  /** Largest snapshot, in bytes of decoded rows, that a read holds in
+    * driver memory instead of scanning with Spark tasks. The bound comes
+    * from driver memory: a table keeps the decoded rows of its visible
+    * snapshot on the driver heap, and collecting them copies them once
+    * more, beside everything else the application keeps there; 16 MiB is
+    * under 2% of Spark's default 1 GiB driver heap (`spark.driver.memory`).
+    * Rows are counted as decoded, not as stored: dictionary and run-length
+    * encodings keep a low-cardinality column in about a byte a row or less,
+    * so bytes on disk do not bound them. A larger snapshot reads through
+    * the distributed scan, which works at any size.
+    */
+  val LocalReadMaxBytes: Long = 16L << 20
+
+  /** Driver heap a decoded row takes beyond its `UnsafeRow` bytes: the row
+    * object, its byte array's header and its slot in the file's array.
+    */
+  val RowOverheadBytes: Long = 64
+}
+
+/** A [[TxnTable]]'s driver-side reads of small snapshots, and the decoded
+  * rows they keep.
+  *
+  * A batch or checkpoint file is created exclusively and never rewritten,
+  * so its rows, decoded once, stay valid while the file is visible; they
+  * are keyed by path, size and modification time, with the driver heap
+  * they take. The rows, the reader function and row projection that
+  * decoded them (building the reader broadcasts the Hadoop conf, which
+  * costs more than decoding a small file) and the footer schema belong to
+  * one generation: the schema plus the session's SQL confs. A change to
+  * either drops everything. Each read drops what it holds of files no
+  * longer visible, and a snapshot above [[TxnTable.LocalReadMaxBytes]]
+  * drops all rows, so at most one small snapshot is held. All access
+  * holds this object's lock.
+  */
+private final class DecodedFiles(spark: SparkSession) {
+  private case class FileKey(path: String, size: Long, mtime: Long)
+
+  private var confs = Map.empty[String, String]
+  private var hadoopConf: Configuration = null
+  private var footer: Option[(FileKey, StructType)] = None
+  private var decoder: Option[(PartitionedFile => Iterator[InternalRow], UnsafeProjection)] = None
+  private val rows = mutable.HashMap.empty[FileKey, Array[InternalRow]]
+  // Driver heap of each visible file's rows: exact for a file in `rows`,
+  // else a lower bound, what a decode stopped at the budget had reached.
+  // It sends later reads of a snapshot over the budget straight to the
+  // scan, without decoding again.
+  private val bytes = mutable.HashMap.empty[FileKey, Long]
+
+  /** The snapshot over `dirs` as one local relation, or None when its rows
+    * take more than [[TxnTable.LocalReadMaxBytes]] decoded (or its files on
+    * disk already do, so it is not opened), when the vectorized parquet
+    * reader does not read its schema (only that reader can be closed in
+    * the middle of a file), or when a dir is one only the scan handles:
+    * missing, holding a subdirectory, or (the first dir) holding no data
+    * file. The schema is the first file's footer schema with every field
+    * nullable, as the scan reports it.
+    */
+  def read(dirs: Seq[String]): Option[DataFrame] = synchronized {
+    val sqlConf = spark.sessionState.conf
+    val now = sqlConf.getAllConfs
+    if (now != confs) {
+      clear()
+      confs = now
+      hadoopConf = spark.sessionState.newHadoopConf()
+    }
+    listing(dirs).filter(_.iterator.map(_.getLen).sum <= TxnTable.LocalReadMaxBytes) match {
+      case None =>
+        rows.clear()
+        bytes.clear()
+        None
+      case Some(files) =>
+        val keys = files.map(f => FileKey(f.getPath.toString, f.getLen, f.getModificationTime))
+        val schema = footer.collect { case (k, s) if k == keys.head => s }.getOrElse {
+          val s = GraftSqlBridge.asNullable(ParquetFooter.fileSchema(files.head, hadoopConf, sqlConf))
+          if (!footer.exists(_._2 == s)) { rows.clear(); bytes.clear(); decoder = None }
+          footer = Some(keys.head -> s)
+          s
+        }
+        val visible = keys.toSet
+        rows.filterInPlace((k, _) => visible(k))
+        bytes.filterInPlace((k, _) => visible(k))
+        val fits = ParquetUtils.isBatchReadSupportedForSchema(sqlConf, schema) &&
+          keys.iterator.map(bytes.getOrElse(_, 0L)).sum <= TxnTable.LocalReadMaxBytes && {
+            var held = keys.iterator.filter(rows.contains).map(bytes).sum
+            files.zip(keys).forall { case (f, k) =>
+              rows.contains(k) || (decode(f, schema, TxnTable.LocalReadMaxBytes - held) match {
+                case Right((data, size)) =>
+                  rows(k) = data
+                  bytes(k) = size
+                  held += size
+                  true
+                case Left(reached) =>
+                  bytes(k) = reached
+                  false
+              })
+            }
+          }
+        if (!fits) {
+          rows.clear()
+          None
+        } else Some(GraftSqlBridge.datasetOfRows(spark,
+          LocalRelation(DataTypeUtils.toAttributes(schema), keys.flatMap(k => rows(k)))))
+    }
+  }
+
+  def clear(): Unit = synchronized {
+    confs = Map.empty
+    hadoopConf = null
+    footer = None
+    decoder = None
+    rows.clear()
+    bytes.clear()
+  }
+
+  def size: Int = synchronized(rows.size)
+
+  /** Each dir's data files in name order, or None (see [[read]]). */
+  private def listing(dirs: Seq[String]): Option[Vector[FileStatus]] = {
+    val perDir = dirs.map { d =>
+      val path = new HPath(d)
+      try {
+        val all = path.getFileSystem(hadoopConf).listStatus(path).toVector
+        val named = all.filter(f => ParquetFooter.isDataFile(f.getPath.getName))
+        if (named.exists(_.isDirectory)) None
+        else Some(named.filter(_.isFile).sortBy(_.getPath.getName))
+      } catch { case _: FileNotFoundException => None }
+    }
+    if (perDir.contains(None) || perDir.head.exists(_.isEmpty)) None
+    else Some(perDir.flatMap(_.get).toVector)
+  }
+
+  /** The rows of `file` decoded by Spark's parquet reader (the function a
+    * scan task runs), each copied out of the reader's reused buffers, with
+    * the driver heap they take; or, once that passes `budget`, Left of the
+    * heap reached, the rest of the file unread.
+    */
+  private def decode(file: FileStatus, schema: StructType,
+                     budget: Long): Either[Long, (Array[InternalRow], Long)] = {
+    val (read, toRow) = decoder.getOrElse {
+      val d = (new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        hadoopConf), UnsafeProjection.create(schema))
+      decoder = Some(d)
+      d
+    }
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      val it = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(file.getPath), 0L,
+        file.getLen, Array.empty, file.getModificationTime, file.getLen))
+      try {
+        val out = mutable.ArrayBuilder.make[InternalRow]
+        var size = 0L
+        while (size <= budget && it.hasNext) {
+          val row = toRow(it.next()).copy()
+          size += row.getSizeInBytes + TxnTable.RowOverheadBytes
+          out += row
+        }
+        if (size > budget) Left(size) else Right((out.result(), size))
+      } finally it match {
+        case c: Closeable => c.close()
+        case _ =>
+      }
+    }
+  }
 }

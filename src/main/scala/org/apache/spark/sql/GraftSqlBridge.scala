@@ -30,4 +30,9 @@ object GraftSqlBridge {
     */
   def checkColumnNameDuplication(names: Seq[String], caseSensitive: Boolean): Unit =
     util.SchemaUtils.checkColumnNameDuplication(names, caseSensitive)
+
+  /** `schema` with every field, array element and map value nullable: the
+    * data schema a file source relation reports.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

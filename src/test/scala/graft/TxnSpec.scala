@@ -160,20 +160,40 @@ class TxnSpec extends AnyFunSuite {
   // an N-deep union chain (thousands of small txns between checkpoints
   // must not mean O(N) driver-side plan depth).
   test("read plans one scan over many committed batches") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
     import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def noUnion(plan: LogicalPlan): Unit =
+      assert(plan.collect { case u: Union => u }.isEmpty,
+        s"multi-batch read must not union per-batch frames:\n$plan")
     val t = freshTable()
     (1 to 50).foreach { i =>
       val txn = t.txns.startTxn()
       insertValues(t, txn, i.toLong)
       t.txns.commitTxn(txn)
     }
+    // below LocalReadMaxBytes: one local relation holds every batch's rows
+    val small = t.read()
+    val smallPlan = small.queryExecution.optimizedPlan
+    assert(smallPlan.collectLeaves().map(_.getClass) == Seq(classOf[LocalRelation]),
+      s"expected one local relation, got:\n$smallPlan")
+    noUnion(smallPlan)
+    assert(small.collect().map(_.getLong(0)).sorted.toSeq == (1L to 50L))
+    // one batch whose decoded rows take more driver heap than the constant
+    // (each at least RowOverheadBytes) lifts the snapshot above it: the
+    // read is one scan node, and its action runs Spark tasks
+    val bigRows = 300000
+    assert(bigRows * TxnTable.RowOverheadBytes > TxnTable.LocalReadMaxBytes)
+    val big = t.txns.startTxn()
+    t.insert(big, spark.range(0, bigRows).selectExpr("xxhash64(id) as value"))
+    t.txns.commitTxn(big)
     val df = t.read()
     val plan = df.queryExecution.optimizedPlan
     val scans = plan.collect { case r: LogicalRelation => r }
     assert(scans.length == 1, s"expected one scan node, got:\n$plan")
-    assert(plan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.isEmpty,
-      "multi-batch read must not union per-batch frames")
-    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (1L to 50L))
+    noUnion(plan)
+    val (rows, jobs) = jobsOf(df.collect())
+    assert(rows.length == bigRows + 50)
+    assert(jobs >= 1)
   }
 
   // Time travel: a snapshot as of txn N is the tape-prefix fold — later
@@ -635,7 +655,7 @@ class TxnSpec extends AnyFunSuite {
     assert(updates.toSet.size == 50, s"expected 50 updates, got ${updates.size}")
   }
 
-  test("a driver-local insert and building read() start no Spark job; the read's action starts one") {
+  test("a driver-local insert, small read and checkpoint start no Spark job") {
     val t = freshTable()
     val t1 = t.txns.startTxn()
     val (_, insertJobs) = jobsOf(t.insert(t1, localBatch(1 to 500)))
@@ -643,8 +663,14 @@ class TxnSpec extends AnyFunSuite {
     val (df, readJobs) = jobsOf(t.read())
     val (rows, collectJobs) = jobsOf(df.collect())
     // (insert, read(), collect) — one assertion, so a failure shows all three
-    assert((insertJobs, readJobs, collectJobs) == ((0, 0, 1)))
+    assert((insertJobs, readJobs, collectJobs) == ((0, 0, 0)))
     assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 500L))
+    // the small snapshot is in driver memory, so its checkpoint is
+    // written on the driver too
+    val (_, checkpointJobs) = jobsOf(t.checkpoint())
+    assert(checkpointJobs == 0)
+    assert(t.log.count(LogRecord.Checkpoint) == 1)
+    assert(t.read().collect().map(_.getLong(0)).sorted.toSeq == (1L to 500L))
     // a batch that is not in driver memory still goes through Spark tasks
     val t2 = t.txns.startTxn()
     val (_, distributedJobs) = jobsOf(t.insert(t2,
