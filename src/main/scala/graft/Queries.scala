@@ -2,10 +2,8 @@ package graft
 
 import graft.core.{Catalog, ParquetFooter}
 import graft.core.Scratch.{deleteRecursively, dirSlug, scratch}
-import graft.exec.Executor
 import graft.operators._
-import graft.plans.{JoinEdge, JoinOptimizer}
-import graft.stats.{PredicateOp, TableStats}
+import graft.stats.TableStats
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -73,48 +71,23 @@ object Queries {
         max(cents(col("l_extendedprice"))).as("max_price_c"),
         count(lit(1)).as("n"))
 
-  /** Flagship: the reference's OrderJoinsTest shape on TPC-H-ish tables —
-    * our Selinger DP picks the join order from real stats, the executor
-    * folds it into broadcast-hinted joins, Catalyst pushes the filter to
-    * the parquet scan.
+  /** Flagship: the reference's OrderJoinsTest shape on TPC-H-ish tables,
+    * authored as a plain filtered join chain. In a session built by
+    * `Catalog.newSession` the Selinger rule ([[plans.SelingerJoinReorder]])
+    * picks its join order from the registered stats, like every other
+    * chain; Catalyst pushes the filter to the parquet scan.
     */
   def q05_join_opt(s: SparkSession, dir: String): DataFrame = {
-    val names = Seq("lineitem", "orders", "customer", "nation")
-    val tables = names.map(n => n -> t(s, dir, n)).toMap
-    // Stats come from the Catalog's per-(dir, table) memo — built once
-    // per process (like the reference's persisted Catalog.txt) and shared
-    // with the Catalyst rule via StatsRegistry, so repeat invocations
-    // skip the aggregation jobs. Light build: the DP needs row counts +
-    // scan costs; the filter selectivity arrives pre-computed per the
-    // reference's order_joins contract.
-    val stats = Catalog.statsMany(s, dir, names, withHistograms = false)
-
-    val edges = Vector(
-      JoinEdge("lineitem", "orders", "l_orderkey", "o_orderkey", PredicateOp.EQ),
-      JoinEdge("orders", "customer", "o_custkey", "c_custkey", PredicateOp.EQ),
-      JoinEdge("customer", "nation", "c_nationkey", "n_nationkey", PredicateOp.EQ))
-
-    // reference-style pkey convention: the table's first column
-    val isPkey = (tbl: String, colName: String) =>
-      tables(tbl).columns.headOption.contains(colName)
-
-    val filtered = tables("lineitem").where(col("l_quantity") < 24)
-    // l_quantity is a double column (histograms are integer-first, like
-    // the reference's), so hand the optimizer a precomputed selectivity —
-    // exactly how the reference receives per-table filter selectivities
-    // (optimizer_test.cc:452-462). Uniform 1..50 ⇒ P(q < 24) = 23/50.
-    val qtySel = 23.0 / 50.0
-
-    val order = new JoinOptimizer(edges).orderJoins(
-      stats, Map("lineitem" -> qtySel), isPkey)
-
-    val joined = Executor.execute(
-      tables + ("lineitem" -> filtered), order, stats,
-      Map("lineitem" -> qtySel))
-
-    joined.groupBy("n_name").agg(
-      count(lit(1)).as("n"),
-      sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue_c"))
+    val li = t(s, dir, "lineitem").where(col("l_quantity") < 24)
+    val o = t(s, dir, "orders")
+    val c = t(s, dir, "customer")
+    val n = t(s, dir, "nation")
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .join(c, col("o_custkey") === col("c_custkey"))
+      .join(n, col("c_nationkey") === col("n_nationkey"))
+      .groupBy("n_name").agg(
+        count(lit(1)).as("n"),
+        sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue_c"))
   }
 
   def q06_theta_join(s: SparkSession, dir: String): DataFrame = {

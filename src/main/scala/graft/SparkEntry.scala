@@ -3,7 +3,8 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * Runs the Selinger-optimized 4-table join (SURVEY §7.2 slice).
+    * Runs the filtered 4-table join chain (SURVEY §7.2 slice), which the
+    * Selinger rule orders in sessions built by `Catalog.newSession`.
     */
   def entry(spark: SparkSession): DataFrame =
     Queries.q05_join_opt(spark, "/root/testdata/sf0.001")

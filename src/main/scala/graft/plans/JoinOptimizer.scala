@@ -23,7 +23,8 @@ import graft.stats.{PredicateOp, TableStats}
   *
   * Quirk kept for parity: after the orientation swap the cardinality call
   * receives the UNSWAPPED (t1_card, t2_card) but SWAPPED pkey flags,
-  * exactly as the reference does (`join_optimizer.cc:269-290`).
+  * exactly as the reference does (`join_optimizer.cc:269-290`); the
+  * [[orientedCardinality]] hook lets a subclass drop it.
   */
 class JoinOptimizer(joins: Vector[JoinEdge]) {
 
@@ -51,10 +52,10 @@ class JoinOptimizer(joins: Vector[JoinEdge]) {
     // The memo's reference-faithful identity ignores op (PlanCache keys):
     // two edges identical up to op would share memo slots, and the DP
     // could return a plan that repeats one edge and DROPS the other — a
-    // silently wrong join downstream (Executor.execute applies the plan
-    // as returned). SelingerJoinReorder declines such inputs before
-    // calling in; direct callers of this public API get the same
-    // contract as a named error instead of corrupt output.
+    // silently wrong join for whoever applies the plan as returned.
+    // SelingerJoinReorder declines such inputs before calling in; direct
+    // callers of this public API get the same contract as a named error
+    // instead of corrupt output.
     require(joins.distinct
       .map(e => (e.leftTable, e.rightTable, e.leftField, e.rightField))
       .distinct.size == joins.distinct.size,
@@ -93,6 +94,18 @@ class JoinOptimizer(joins: Vector[JoinEdge]) {
     if (joins.isEmpty) Vector.empty
     else pc.get(joins).map(_.plan).getOrElse(Vector.empty)
   }
+
+  /** Cardinality of the join the DP just oriented: `j` is `edge` after
+    * the orientation swap (`swapped` says whether it happened), while
+    * `card1`/`t1pkey` and `card2`/`t2pkey` describe `edge`'s left and
+    * right side as written. The default keeps the reference quirk — cards
+    * unswapped, pkey flags swapped — so the estimate depends on which way
+    * the edge is written.
+    */
+  protected[graft] def orientedCardinality(j: JoinEdge, swapped: Boolean,
+      card1: Long, card2: Long, t1pkey: Boolean, t2pkey: Boolean): Long =
+    if (swapped) estimateJoinCardinality(j, card1, card2, t2pkey, t1pkey)
+    else estimateJoinCardinality(j, card1, card2, t1pkey, t2pkey)
 
   /** Mirror of `compute_cost_and_card_of_subplan`
     * (`join_optimizer.cc:195-292`): returns the CostCard for joining
@@ -142,17 +155,15 @@ class JoinOptimizer(joins: Vector[JoinEdge]) {
       }
 
     resolved.flatMap {
-      case (prevPlan, t1Cost, t1Card, leftPk0, t2Cost, t2Card, rightPk0) =>
+      case (prevPlan, t1Cost, t1Card, leftPk, t2Cost, t2Card, rightPk) =>
         val costForward = estimateJoinCost(t1Card, t2Card, t1Cost, t2Cost)
         val costSwapped = estimateJoinCost(t2Card, t1Card, t2Cost, t1Cost)
-        val (j, cost, leftPk, rightPk) =
-          if (costSwapped < costForward)
-            (edge.swapInnerOuter, costSwapped, rightPk0, leftPk0)
-          else (edge, costForward, leftPk0, rightPk0)
+        val swapped = costSwapped < costForward
+        val (j, cost) =
+          if (swapped) (edge.swapInnerOuter, costSwapped) else (edge, costForward)
         if (cost >= bestCostSoFar) None
         else {
-          // Reference quirk: cards stay unswapped while pkeys swap.
-          val card = estimateJoinCardinality(j, t1Card, t2Card, leftPk, rightPk)
+          val card = orientedCardinality(j, swapped, t1Card, t2Card, leftPk, rightPk)
           Some(CostCard(cost, card, prevPlan :+ j))
         }
     }
@@ -175,13 +186,21 @@ class JoinOptimizer(joins: Vector[JoinEdge]) {
   * keyed side's row count, so true FK joins are unchanged, while m:n
   * expansions become visible to the cost model mid-plan. ndv comes from
   * HLL sketches (full stats builds) or the integer domain width (pass-1
-  * min/max), capped by row count. The base [[JoinOptimizer]] stays
-  * reference-faithful — its ported plan-shape tests pin the original
-  * model.
+  * min/max), capped by row count.
+  *
+  * It also drops the reference's orientation quirk: cards swap together
+  * with the pkey flags, so an edge gets the same estimate whichever way
+  * it is written. The base [[JoinOptimizer]] stays reference-faithful —
+  * its ported plan-shape tests pin the original model.
   */
 final class NdvAwareJoinOptimizer(
     joins: Vector[JoinEdge],
     ndvOf: (String, String) => Option[Long]) extends JoinOptimizer(joins) {
+  override protected[graft] def orientedCardinality(j: JoinEdge, swapped: Boolean,
+      card1: Long, card2: Long, t1pkey: Boolean, t2pkey: Boolean): Long =
+    if (swapped) estimateJoinCardinality(j, card2, card1, t2pkey, t1pkey)
+    else estimateJoinCardinality(j, card1, card2, t1pkey, t2pkey)
+
   override def estimateJoinCardinality(j: JoinEdge, card1: Long, card2: Long,
       t1pkey: Boolean, t2pkey: Boolean): Long = {
     val base = super.estimateJoinCardinality(j, card1, card2, t1pkey, t2pkey)

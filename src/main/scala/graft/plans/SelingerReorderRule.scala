@@ -11,8 +11,11 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 
 /** Catalyst integration of the Selinger DP (SURVEY §4.3): an optimizer
   * rule that detects chains of inner equi-joins over base relations and
-  * rewrites them into the left-deep order chosen by
-  * [[JoinOptimizer.orderJoins]] under the reference's NLJ cost model.
+  * rewrites them into the left-deep order chosen by one
+  * [[JoinOptimizer.orderJoins]] call under the reference's NLJ cost model,
+  * with [[NdvAwareJoinOptimizer]]'s cardinalities. It is the engine's only
+  * join-order front end: the flagship q05 is a plain join chain ordered
+  * here like any other.
   *
   * This is the Spark-first packaging of the reference's core deliverable:
   * instead of an external planner producing a call sequence, the DP runs
@@ -39,8 +42,9 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * the theta ops via `<`,`<=`,`>`,`>=`,`!=`), and multiple edges between
   * the same table pair are allowed (the extra edges land as residual
   * Filters over the join, like the reference's plan application); only
-  * edges identical up to op are declined, since the memo's reference-
-  * faithful identity ignores op ([[PlanCache]]).
+  * edges identical up to op once written in one direction are declined,
+  * since the memo's reference-faithful identity ignores op
+  * ([[PlanCache]]).
   *
   * Registered via [[GraftExtensions]]
   * (`spark.sql.extensions=graft.plans.GraftExtensions`) or applied
@@ -49,10 +53,6 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
 
   private val MaxEdges = 12 // DP is exponential; the reference caps at ~10
-  // DP runs one invocation may spend following its own answers (see
-  // reorder); over every batch query and the generated 4–12-relation
-  // graphs a chain repeated within four runs, in cycles of length two
-  private val MaxDpRuns = 8
 
   /** Marks the spine joins of a chain this rule already settled, keyed by
     * the CONTENT of each join's subtree (canonicalized hash), not a bare
@@ -68,22 +68,16 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
     * DP; an untouched one skips.
     *
     * Why the batch converges: the rule's answer depends only on the
-    * query, not on the order the previous iteration left the joins in.
-    * Relations are named by a position-free key ([[relationKey]]), so the
-    * DP breaks cost ties the same way whatever the current order. The one
-    * input a rebuild does change is which way each condition reads, and
-    * the reference's cardinality model is sensitive to that; so reorder
-    * follows the DP's own answers until they repeat and takes the fixed
-    * point, or a fixed member of the cycle, which the rebuilt tree leads
-    * straight back to. A chain whose left-deep spine already has that
-    * order is settled, not rebuilt — looking through the attribute-only
-    * Projects that column pruning keeps re-inserting between the joins —
-    * so once the rest of the batch stops changing the leaves, the rule
-    * stops changing the plan. Settling on whole-tree equality instead
-    * rebuilt every chain on every iteration (pruning re-adds its Projects
-    * after each rebuild), and position-derived names with one DP run per
-    * iteration let the order flip back and forth until the batch hit its
-    * iteration cap.
+    * query, not on the tree the previous iteration left. Relations are
+    * named by a position-free key ([[relationKey]]) and every edge is
+    * written in one canonical direction, so the DP sees the same input
+    * whatever the current order and whichever way a condition reads. A
+    * chain whose left-deep spine already has that order is settled, not
+    * rebuilt — looking through the attribute-only Projects that column
+    * pruning keeps re-inserting between the joins — so once the rest of
+    * the batch stops changing the leaves, the rule stops changing the
+    * plan. Settling on whole-tree equality instead rebuilt every chain on
+    * every iteration (pruning re-adds its Projects after each rebuild).
     */
   private[graft] val OrderedTag = TreeNodeTag[Int]("graft.selinger.ordered")
 
@@ -259,11 +253,18 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
       }
     }
 
-    val specs = edgeSpecs.result()
+    // Each edge written in one direction by name, so the DP's input does
+    // not depend on which way the query (or the tree a previous iteration
+    // rebuilt) writes a condition.
+    val specs = edgeSpecs.result().map { case (e, m) =>
+      (if (e.leftTable > e.rightTable) e.swapInnerOuter else e, m)
+    }
     val joinEdges = specs.map(_._1).distinct
     if (joinEdges.isEmpty || joinEdges.size > MaxEdges) return None
     // The memo's reference-faithful identity ignores op (PlanCache keys,
     // JoinGraph.scala:59): two edges identical up to op would collide.
+    // Checked on the canonical edges, so `a.x <= b.y AND b.y <= a.x`
+    // collides too.
     if (joinEdges.map(e => (e.leftTable, e.rightTable, e.leftField, e.rightField))
       .distinct.size != joinEdges.size) return None
     // JoinEdge identity is by column NAME: two conjuncts binding
@@ -312,8 +313,8 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
     // ndv-aware m:n refinement (see NdvAwareJoinOptimizer): column
     // ranges come from registered stats' pass-1 min/max
     val ndvOf = (t: String, f: String) => stats.get(t).flatMap(_.estimateNdv(f))
-    def dp(edges: Set[JoinEdge]): Vector[JoinEdge] =
-      new NdvAwareJoinOptimizer(edges.toVector, ndvOf).orderJoins(stats, filterSel, isPkey)
+    val order = new NdvAwareJoinOptimizer(joinEdges, ndvOf).orderJoins(stats, filterSel, isPkey)
+    if (order.isEmpty) return None
 
     /** The left-deep leaf order an edge order builds, and per edge after
       * the first the relation it brings in (None: both its tables are
@@ -339,30 +340,7 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
       }
       Some((placed, newSides))
     }
-
-    // The reference's cardinality model reads an edge's cards before the
-    // DP's orientation swap but its pkey flags after it (JoinOptimizer's
-    // "quirk kept for parity"), so the estimates, and with them the order,
-    // depend on which way each edge is written. An answer writes every
-    // edge the way the DP joined it, and a rebuilt tree hands that to the
-    // next run. Follow that chain here, from the way the conditions read
-    // now, until an edge set repeats: an answer that reproduces its own
-    // input is a fixed point; otherwise the answers since the repeat form
-    // a cycle, and its member with the smallest leaf order by name is the
-    // answer, so entering the cycle at any member picks the same one.
-    val inputs = scala.collection.mutable.ArrayBuffer(joinEdges.toSet)
-    val answers = scala.collection.mutable.ArrayBuffer.empty[Vector[JoinEdge]]
-    var repeatAt = -1
-    while (repeatAt < 0 && answers.size < MaxDpRuns) {
-      val answer = dp(inputs.last)
-      if (answer.isEmpty) return None
-      answers += answer
-      repeatAt = inputs.indexOf(answer.toSet)
-      inputs += answer.toSet
-    }
-    val (order, (leafOrder, newSides)) = answers.drop(math.max(repeatAt, 0))
-      .map(o => o -> placement(o).getOrElse(return None))
-      .minBy { case (o, (leaves, _)) => (leaves.mkString(","), o.mkString(",")) }
+    val (leafOrder, newSides) = placement(order).getOrElse(return None)
 
     // fold the order back into a left-deep Join tree
     val attrFor: Map[JoinEdge, Map[String, Attribute]] =

@@ -188,6 +188,33 @@ class JoinOptimizerSpec extends AnyFunSuite {
     assert(blind.estimateJoinCardinality(e, 4000L, 15000L, false, false) == 15000L)
   }
 
+  // The DP calls orientedCardinality with an edge as written and, after
+  // its orientation swap, the edge it joins. Written the other way round
+  // the same join reaches the hook unswapped with both sides exchanged.
+  // The rule's NdvAwareJoinOptimizer must estimate both alike; the base
+  // keeps the reference quirk (cards unswapped, pkey flags swapped), so
+  // one pkey side makes its estimate depend on the writing.
+  test("orientedCardinality: NdvAware is orientation-free, the base keeps the quirk") {
+    val e = JoinEdge("a", "b", "a_k", "b_k", PredicateOp.EQ)
+    val j = e.swapInnerOuter // the join as the DP performs it: b then a
+    val (cardA, cardB) = (1000L, 50L)
+    val refined = Seq(None, Some(50L), Some(1000L)).map(ndv =>
+      new graft.plans.NdvAwareJoinOptimizer(Vector(e), (_, _) => ndv))
+    for ((pkA, pkB) <- Seq((false, true), (true, false), (false, false));
+         jo <- refined :+ jo0) {
+      // written a-first, swapped by the DP; written b-first, kept
+      val writtenAB = jo.orientedCardinality(j, swapped = true, cardA, cardB, pkA, pkB)
+      val writtenBA = jo.orientedCardinality(j, swapped = false, cardB, cardA, pkB, pkA)
+      if (jo eq jo0) {
+        assert(writtenAB == jo0.estimateJoinCardinality(j, cardA, cardB, pkB, pkA))
+        assert(writtenBA == jo0.estimateJoinCardinality(j, cardB, cardA, pkB, pkA))
+        if (pkA != pkB) assert(writtenAB != writtenBA, s"quirk gone for pkeys ($pkA, $pkB)")
+      } else assert(writtenAB == writtenBA, s"pkeys ($pkA, $pkB): $writtenAB vs $writtenBA")
+    }
+    // one pkey side: the keyed side's partner sets the estimate
+    assert(refined.head.orientedCardinality(j, swapped = true, cardA, cardB, false, true) == cardA)
+  }
+
   // The memo's reference-faithful identity ignores op (PlanCache keys):
   // feeding orderJoins two edges identical up to op would alias one memo
   // slot and the DP could return a plan repeating one edge and DROPPING

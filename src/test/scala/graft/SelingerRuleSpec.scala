@@ -24,28 +24,33 @@ class SelingerRuleSpec extends AnyFunSuite {
   private def joinChainLeaves(p: LogicalPlan): Seq[String] =
     p.collectLeaves().map(_.output.headOption.map(_.name).getOrElse("?"))
 
-  test("rule reorders a lineitem-first chain and preserves the result") {
+  test("rule reorders a nation-first chain and preserves the result") {
     val li = graft.core.Catalog.table(spark, dir, "lineitem")
     val o = graft.core.Catalog.table(spark, dir, "orders")
     val c = graft.core.Catalog.table(spark, dir, "customer")
     val n = graft.core.Catalog.table(spark, dir, "nation")
 
-    // deliberately bad authoring order: big lineitem outermost-left
-    val q = li
+    // the same chain authored from either end: the rule's order depends
+    // only on the query, so both come out with the same leaves
+    val liFirst = li
       .join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(n, c("c_nationkey") === n("n_nationkey"))
+      .select(li("l_orderkey"), n("n_name"))
+    val q = n
+      .join(c, c("c_nationkey") === n("n_nationkey"))
+      .join(o, o("o_custkey") === c("c_custkey"))
+      .join(li, li("l_orderkey") === o("o_orderkey"))
       .select(li("l_orderkey"), n("n_name"))
 
     val before = q.queryExecution.optimizedPlan
     val after = SelingerJoinReorder(before)
 
     assert(after ne before, "rule should have rewritten the join tree")
-    val beforeLeaves = joinChainLeaves(before)
-    val afterLeaves = joinChainLeaves(after)
-    assert(beforeLeaves.head.startsWith("l_"))
-    assert(!afterLeaves.head.startsWith("l_"),
-      s"big table still outermost: $afterLeaves")
+    assert(joinChainLeaves(before).head.startsWith("n_"))
+    val expectedLeaves = joinChainLeaves(SelingerJoinReorder(liFirst.queryExecution.optimizedPlan))
+    assert(joinChainLeaves(after) == expectedLeaves,
+      s"nation-first authoring ordered ${joinChainLeaves(after)}, lineitem-first $expectedLeaves")
 
     // semantics preserved: execute the rewritten plan and compare
     val expected = q.collect().map(_.toSeq).toSet
@@ -224,25 +229,32 @@ class SelingerRuleSpec extends AnyFunSuite {
     // its std::set and PlanCache memo. We keep JoinEdge distinct by op
     // (JoinGraph.scala:14-18) but the memo keys stay reference-faithful
     // op-blind (JoinGraph.scala:53-61), so the RULE must detect the
-    // collision and decline (SelingerReorderRule.scala:209-212) rather
-    // than let the two predicates alias one memo entry and drop one from
-    // the rebuilt tree. Same column pair, two different ops:
+    // collision and decline rather than let the two predicates alias one
+    // memo entry and drop one from the rebuilt tree. Same column pair, two
+    // different ops — also when the pair is written both ways, which is
+    // one edge and its swapped copy once the rule writes every edge in one
+    // direction:
     val s2 = SharedSpark.sparkWithExtensions
     Seq("lineitem", "orders", "customer").foreach { t =>
       graft.core.Catalog.table(s2, dir, t).createOrReplaceTempView(t)
       graft.core.Catalog.table(spark, dir, t).createOrReplaceTempView(t)
     }
-    val sql =
-      """SELECT count(*) AS cnt
-        |FROM lineitem, orders, customer
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND o_custkey >= c_custkey""".stripMargin
-    // decline = authored order survives (lineitem stays outermost)…
-    val leaves = joinChainLeaves(s2.sql(sql).queryExecution.optimizedPlan)
-    assert(leaves.head.startsWith("l_"),
-      s"rule should decline on op-ambiguous duplicate edges: $leaves")
-    // …and BOTH predicates still apply (a memo collision would drop one)
-    assert(s2.sql(sql).head().getLong(0) == spark.sql(sql).head().getLong(0))
+    for (pair <- Seq(
+        "o_custkey = c_custkey AND o_custkey >= c_custkey",
+        "o_custkey = c_custkey AND c_custkey <= o_custkey",
+        "o_custkey <= c_custkey AND c_custkey <= o_custkey",
+        "o_custkey < c_custkey AND c_custkey < o_custkey")) {
+      val sql =
+        s"""SELECT count(*) AS cnt
+           |FROM lineitem, orders, customer
+           |WHERE l_orderkey = o_orderkey AND $pair""".stripMargin
+      // decline = authored order survives (lineitem stays outermost)…
+      val leaves = joinChainLeaves(s2.sql(sql).queryExecution.optimizedPlan)
+      assert(leaves.head.startsWith("l_"),
+        s"rule should decline on op-ambiguous duplicate edges ($pair): $leaves")
+      // …and BOTH predicates still apply (a memo collision would drop one)
+      assert(s2.sql(sql).head().getLong(0) == spark.sql(sql).head().getLong(0), pair)
+    }
   }
 
   test("duplicate-name conjuncts into one opaque leaf: rule declines, both predicates hold") {
@@ -306,9 +318,9 @@ class SelingerRuleSpec extends AnyFunSuite {
   // engine session with full stats registered. PLANS.md records exchange
   // counts, not order, so a change in where or how the rule runs (e.g.
   // injecting it pre-CBO instead of as an optimizer rule) shows up here
-  // first. q05 orders its joins itself through exec.Executor.
+  // first. q05 is a plain join chain ordered by the same rule.
   private val pinnedOrders: Map[String, Seq[String]] = Map(
-    "q05_join_opt" -> Seq("n_nationkey", "c_custkey", "o_orderkey", "l_orderkey"),
+    "q05_join_opt" -> Seq("l_orderkey", "o_orderkey", "c_custkey", "n_nationkey"),
     "q51_tpch_q1" -> Seq("l_orderkey"),
     "q52_tpch_q3" -> Seq("c_custkey", "o_orderkey", "l_orderkey"),
     "q53_tpch_q5" -> Seq("s_suppkey", "n_nationkey", "r_regionkey", "c_custkey",
@@ -329,8 +341,8 @@ class SelingerRuleSpec extends AnyFunSuite {
     "q79_tpch_q16" -> Seq("l_orderkey", "s_suppkey", "p_partkey"),
     "q80_tpch_q21" -> Seq("s_suppkey", "l_orderkey", "l_orderkey", "o_orderkey",
       "l_orderkey"),
-    "q86_tpch_q8" -> Seq("p_partkey", "l_orderkey", "o_orderkey", "c_custkey",
-      "n_nationkey", "r_regionkey", "s_suppkey", "n_nationkey"),
+    "q86_tpch_q8" -> Seq("s_suppkey", "l_orderkey", "p_partkey", "o_orderkey",
+      "c_custkey", "n_nationkey", "r_regionkey", "n_nationkey"),
     "q87_tpch_q9" -> Seq("s_suppkey", "n_nationkey", "l_orderkey", "p_partkey",
       "o_orderkey"),
     "q88_tpch_q11" -> Seq("l_orderkey", "s_suppkey", "l_orderkey", "s_suppkey"),
@@ -382,14 +394,16 @@ class SelingerRuleSpec extends AnyFunSuite {
   }
 
   /** Inner-join `rels` in the listed order; each relation joins the ones
-    * before it through every edge that reaches them.
+    * before it through every edge that reaches them, each condition
+    * written as the edge lists it or, if `flipped`, the other way round.
     */
   private def chain(rels: Seq[(String, DataFrame)],
-      edges: Seq[(String, String, String, String)]): DataFrame = {
+      edges: Seq[(String, String, String, String)], flipped: Boolean): DataFrame = {
     def c(a: String, f: String) = col(s"${a}__$f")
     rels.tail.foldLeft((rels.head._2, Set(rels.head._1))) { case ((acc, joined), (a, df)) =>
       val on = edges.collect {
-        case (l, lc, r, rc) if (l == a && joined(r)) || (r == a && joined(l)) => c(l, lc) === c(r, rc)
+        case (l, lc, r, rc) if (l == a && joined(r)) || (r == a && joined(l)) =>
+          if (flipped) c(r, rc) === c(l, lc) else c(l, lc) === c(r, rc)
       }
       (acc.join(df, on.reduce(_ && _)), joined + a)
     }._1.groupBy().count()
@@ -416,24 +430,29 @@ class SelingerRuleSpec extends AnyFunSuite {
   }
 
   // The two-`part` self-join (lineitem, part, part, supplier) and TPC-H
-  // Q9's five relations, each with two authored relation orders.
-  private def shapes: Seq[(String, Seq[Seq[(String, DataFrame)]], Seq[(String, String, String, String)])] = {
+  // Q9's five relations, each authored in two relation orders and once
+  // more with every join condition written the other way round.
+  private def shapes: Seq[(String, Seq[(Seq[(String, DataFrame)], Boolean)], Seq[(String, String, String, String)])] = {
     val (p1, l1, s1, p2) = (rel("p1", "part", Some(("p_size", 26L, 48L))), rel("l1", "lineitem"),
       rel("s1", "supplier", Some(("s_nationkey", 4L, 14L))), rel("p2", "part", Some(("p_size", 9L, 38L))))
     val (l, p, s, o, n) = (rel("l", "lineitem"), rel("p", "part", Some(("p_size", 1L, 10L))),
       rel("s", "supplier"), rel("o", "orders"), rel("n", "nation"))
     Seq(
-      ("two-part self-join", Seq(Seq(p1, l1, s1, p2), Seq(s1, l1, p2, p1)),
+      ("two-part self-join",
+        Seq((Seq(p1, l1, s1, p2), false), (Seq(s1, l1, p2, p1), false), (Seq(p1, l1, s1, p2), true)),
         Seq(("p1", "p_partkey", "l1", "l_partkey"), ("l1", "l_suppkey", "s1", "s_suppkey"),
           ("l1", "l_partkey", "p2", "p_partkey"))),
-      ("TPC-H Q9", Seq(Seq(l, p, s, o, n), Seq(n, s, l, o, p)),
+      ("TPC-H Q9",
+        Seq((Seq(l, p, s, o, n), false), (Seq(n, s, l, o, p), false), (Seq(l, p, s, o, n), true)),
         Seq(("l", "l_partkey", "p", "p_partkey"), ("l", "l_suppkey", "s", "s_suppkey"),
           ("l", "l_orderkey", "o", "o_orderkey"), ("s", "s_nationkey", "n", "n_nationkey"))))
   }
 
   test("chosen leaf order does not depend on the authored relation order") {
     val differing = shapes.flatMap { case (shape, authorings, edges) =>
-      val orders = authorings.map(rs => chainOrder(chain(rs, edges).queryExecution.optimizedPlan))
+      val orders = authorings.map { case (rs, flipped) =>
+        chainOrder(chain(rs, edges, flipped).queryExecution.optimizedPlan)
+      }
       if (orders.distinct.size == 1) None else Some(s"$shape: $orders")
     }
     assert(differing.isEmpty, s"authorings chose different orders:\n${differing.mkString("\n")}")
@@ -441,11 +460,12 @@ class SelingerRuleSpec extends AnyFunSuite {
 
   test("the optimized plan is a fixed point of the rule") {
     val rewritten = shapes.flatMap { case (shape, authorings, edges) =>
-      authorings.flatMap { rs =>
-        val plan = unmarked(chain(rs, edges).queryExecution.optimizedPlan)
+      authorings.flatMap { case (rs, flipped) =>
+        val plan = unmarked(chain(rs, edges, flipped).queryExecution.optimizedPlan)
         val again = SelingerJoinReorder(plan)
         if (again == plan) None
-        else Some(s"$shape authored ${rs.map(_._1)}: ${chainOrder(plan)} -> ${chainOrder(again)}")
+        else Some(s"$shape authored ${rs.map(_._1)}${if (flipped) " flipped" else ""}: " +
+          s"${chainOrder(plan)} -> ${chainOrder(again)}")
       }
     }
     assert(rewritten.isEmpty, s"the rule rewrote its own output:\n${rewritten.mkString("\n")}")
