@@ -444,8 +444,7 @@ object Bench {
       // first cold-timed queries measure themselves, not JVM init —
       // AFTER the timed calib probe, so calib_sec stays comparable
       warmEnginePaths(spark)
-      graft.core.Catalog.statsMany(spark, sfDir,
-        graft.core.Catalog.tableNames, withHistograms = true)
+      graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
       // stage the streaming source copy (input plumbing, not operator
       // work — a production stream reads an existing directory)
       Queries.stageStreamSource(spark, sfDir)

@@ -36,8 +36,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.core.Catalog.newSession("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Catalog.statsMany(spark, sfDir,
-      graft.core.Catalog.tableNames, withHistograms = true)
+    graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       try {

@@ -7,7 +7,7 @@ package graft
   *    cache's 77-vs-8 ms measurement).
   *  - "joins <sfDir>": counts join-node kinds in every batch query's
   *    pre-AQE physical plan under the engine session (extensions +
-  *    full stats) — the SortMergeJoin census.
+  *    statistics) — the SortMergeJoin census.
   *  - "stages <sfDir> <query> [repeats]": per-stage wall/tasks/bytes
   *    breakdown via a SparkListener, construction vs count timed
   *    separately (the §4 single-task-stage evidence).
@@ -46,8 +46,7 @@ object OptProbe {
         // how many reads does a typical pass do? count table() calls
         // indirectly: 237 queries x ~2 tables x 2 passes
       case "joins" =>
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
+        graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
         Queries.stageStreamSource(spark, sfDir)
         Queries.stageDppLayout(spark, sfDir)
         val streaming = SparkEntry.streamingQueries
@@ -72,8 +71,7 @@ object OptProbe {
         // stages <sfDir> <queryName> [repeats] — per-stage wall breakdown
         val qn = args(2)
         val repeats = if (args.length > 3) args(3).toInt else 2
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
+        graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
         spark.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {
             override def onStageCompleted(
@@ -117,8 +115,7 @@ object OptProbe {
           else Array.empty
         if (ballastMb > 0)
           println(s"GCLOOP ballast=${ballastMb} MB live (${ballast.length} chunks)")
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
+        graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
         case class St(id: Int, ms: Long, tasks: Int, gcMs: Long,
           memSpill: Long, diskSpill: Long, peakMem: Long,
           in: Long, sr: Long, sw: Long, name: String)
@@ -182,8 +179,7 @@ object OptProbe {
         // the floor from codegen/JIT warmup.
         val names = args(2).split(",").toSeq
         val repeats = if (args.length > 3) args(3).toInt else 6
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
+        graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
         names.foreach { n =>
           (1 to repeats).foreach { i =>
             val t0 = System.nanoTime()
@@ -209,8 +205,7 @@ object OptProbe {
         // dump <sfDir> <tag> <q1,q2,...> → plans/r17/<q>_<tag>.txt
         val tag = args(2)
         val names = args(3).split(",").toSeq
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
+        graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
         new java.io.File("plans/r17").mkdirs()
         names.foreach { n =>
           try {

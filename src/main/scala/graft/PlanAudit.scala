@@ -52,8 +52,7 @@ object PlanAudit {
     val outFile = args.drop(1).headOption.getOrElse("PLANS.md")
     val spark = graft.core.Catalog.newSession("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Catalog.statsMany(spark, sfDir,
-      graft.core.Catalog.tableNames, withHistograms = true)
+    graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
 
     // Every node of the pre-AQE tree PLUS plans nested inside
     // expressions: scalar/DPP subqueries carry their own exchanges and

@@ -10,11 +10,10 @@ object Verify {
     // WITH our optimizer rules active, not around them.
     val spark = graft.core.Catalog.newSession()
     // Load the catalog's statistics up front (the reference loads
-    // Catalog.txt at startup): full stats (row counts, histograms, ndv sketches) for every table,
+    // Catalog.txt at startup): row counts, histograms and ndv sketches for every table,
     // so SelingerJoinReorder decisions are deterministic rather than
     // dependent on which query happened to build stats first.
-    graft.core.Catalog.statsMany(spark, sfDir,
-      graft.core.Catalog.tableNames, withHistograms = true)
+    graft.core.Catalog.statsMany(spark, sfDir, graft.core.Catalog.tableNames)
     new java.io.File(outDir).mkdirs()
     val only = EnvFilter.only()
     SparkEntry.queries

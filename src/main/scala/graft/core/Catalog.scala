@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference's trivial catalog (`/root/reference/src/include/optimizer/
   * catalog.h:13-20` — a map table_id → page count), generalized to real
   * schemas: each table's schema comes from its parquet footer, read on
-  * the driver, and its statistics from [[stats]] and the sidecar.
+  * the driver, and its statistics from [[statsMany]] and the sidecar.
   */
 object Catalog {
   val tableNames: Seq[String] = Seq(
@@ -63,10 +63,10 @@ object Catalog {
   def loadAll(spark: SparkSession, dir: String): Map[String, DataFrame] =
     tableNames.map(n => n -> table(spark, dir, n)).toMap
 
-  // value: (stats, whether histograms were built) — a light (row-count
-  // only) entry upgrades in place when a caller first needs histograms
+  // one instance per (dir, table): the first build or sidecar hit to
+  // land wins, and every caller reads that instance back
   private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (graft.stats.TableStats, Boolean)]()
+    (String, String), graft.stats.TableStats]()
 
   /** Where built statistics persist ACROSS PROCESSES — the true analogue
     * of the reference's `Catalog.txt` (`test/utils/utils.cc:43-46`): a
@@ -131,85 +131,51 @@ object Catalog {
     * analogue of the reference's persisted Catalog.txt: the fixtures are
     * immutable, so stats built once serve every later query in the
     * process, and a FRESH process loads them (signature-guarded) instead
-    * of re-scanning every table. Each
-    * build also registers with [[graft.stats.StatsRegistry]], so
-    * [[graft.plans.SelingerJoinReorder]] sees true row counts (and, once
-    * built, histogram selectivities) for SQL-path queries over these
-    * tables. Histograms are a second aggregation job per table, so
-    * callers that only need cardinalities pass `withHistograms = false`
-    * and the histogram pass stays lazy until someone asks.
+    * of re-scanning every table. Each build also registers with
+    * [[graft.stats.StatsRegistry]], so [[graft.plans.SelingerJoinReorder]]
+    * sees true row counts and histogram selectivities for SQL-path
+    * queries over these tables.
     */
-  def stats(spark: SparkSession, dir: String, name: String,
-      withHistograms: Boolean = true): graft.stats.TableStats = {
-    val key = (dir, name)
-    val cached = statsCache.get(key)
-    if (cached != null && (cached._2 || !withHistograms)) cached._1
-    else {
-      ensureStatsLoaded()
-      val df = table(spark, dir, name)
-      // persisted-catalog hit: signature-fresh and at least as complete
-      // as requested → zero scans (the whole point of the sidecar)
-      graft.stats.StatsRegistry.lookupVerified(df, needFull = withHistograms) match {
-        case Some((ts, entryFull)) =>
-          statsCache.merge(key, (ts, entryFull),
-            (oldV, newV) => if (oldV._2 && !newV._2) oldV else newV)._1
-        case None =>
-          val ts = graft.stats.TableStats.build(df, withHistograms = withHistograms)
-          // merge, never blind put: the check-then-put had a window where a
-          // LIGHT (histogram-less) build racing a completed FULL build could
-          // overwrite it in both the cache and the registry — silently
-          // degrading every later Selinger decision to System R constants
-          val kept = statsCache.merge(key, (ts, withHistograms),
-            (oldV, newV) => if (oldV._2 && !newV._2) oldV else newV)
-          if (kept._1 eq ts) {
-            graft.stats.StatsRegistry.register(df, ts, full = withHistograms)
-            saveStats()
-          }
-          kept._1
-      }
-    }
-  }
+  def stats(spark: SparkSession, dir: String, name: String): graft.stats.TableStats =
+    statsMany(spark, dir, Seq(name))(name)
 
-  /** Batch variant: builds only the missing tables, their Spark jobs
-    * submitted concurrently via [[graft.stats.TableStats.buildMany]].
+  /** [[stats]] of several tables: builds only the missing ones, their
+    * Spark jobs submitted concurrently via
+    * [[graft.stats.TableStats.buildMany]]. Of two threads building one
+    * table, only the first to cache its build registers it, and both
+    * return that one instance.
+    *
+    * @param withHistograms must be true. Row-count-only builds were
+    *        removed; the parameter stays so callers that still pass it
+    *        keep compiling.
     */
   def statsMany(spark: SparkSession, dir: String, names: Seq[String],
       withHistograms: Boolean = true): Map[String, graft.stats.TableStats] = {
-    val missing = names.filterNot { n =>
-      val c = statsCache.get((dir, n))
-      c != null && (c._2 || !withHistograms)
-    }
+    require(withHistograms, "withHistograms = false is not supported: " +
+      "row-count-only statistics builds were removed, every build has histograms")
+    val missing = names.filterNot(n => statsCache.containsKey((dir, n)))
     if (missing.nonEmpty) {
       ensureStatsLoaded()
       // build the DataFrames once and reuse them for registration — a
       // second table() per name would repeat the driver-side file
       // listing/footer read (and the events ts-normalization branch)
       val dfs = missing.map(n => n -> table(spark, dir, n)).toMap
-      // split persisted-catalog hits (signature-fresh, complete enough)
-      // from the tables that genuinely need the distributed build
+      // persisted-catalog hits (signature-fresh) cost zero scans; only the
+      // rest need the distributed build
       val hits = dfs.flatMap { case (n, df) =>
-        graft.stats.StatsRegistry.lookupVerified(df, needFull = withHistograms)
-          .map(n -> _)
+        graft.stats.StatsRegistry.forPlan(df.queryExecution.analyzed).map(n -> _)
       }
-      hits.foreach { case (n, (ts, entryFull)) =>
-        statsCache.merge((dir, n), (ts, entryFull),
-          (oldV, newV) => if (oldV._2 && !newV._2) oldV else newV)
-      }
+      hits.foreach { case (n, ts) => statsCache.putIfAbsent((dir, n), ts) }
       val toBuild = dfs -- hits.keys
       if (toBuild.nonEmpty) {
-        val built = graft.stats.TableStats.buildMany(toBuild,
-          withHistograms = withHistograms)
-        built.foreach { case (n, ts) =>
-          // same full-beats-light merge as stats() — see the race note there
-          val kept = statsCache.merge((dir, n), (ts, withHistograms),
-            (oldV, newV) => if (oldV._2 && !newV._2) oldV else newV)
-          if (kept._1 eq ts)
-            graft.stats.StatsRegistry.register(dfs(n), ts, full = withHistograms)
+        graft.stats.TableStats.buildMany(toBuild).foreach { case (n, ts) =>
+          if (statsCache.putIfAbsent((dir, n), ts) == null)
+            graft.stats.StatsRegistry.register(dfs(n), ts)
         }
         saveStats()
       }
     }
-    names.map(n => n -> statsCache.get((dir, n))._1).toMap
+    names.map(n => n -> statsCache.get((dir, n))).toMap
   }
 
   /** Worker threads for the default `local[n]` master: `SPARK_GRAFT_CPUS`

@@ -185,8 +185,9 @@ class JoinOptimizer(joins: Vector[JoinEdge]) {
   * form degenerates to exactly the FK estimate when ndv equals the
   * keyed side's row count, so true FK joins are unchanged, while m:n
   * expansions become visible to the cost model mid-plan. ndv comes from
-  * HLL sketches (full stats builds) or the integer domain width (pass-1
-  * min/max), capped by row count.
+  * the HLL sketches every [[graft.stats.TableStats.build]] measures, or
+  * for stats made from histograms alone the integer domain width,
+  * capped by row count.
   *
   * It also drops the reference's orientation quirk: cards swap together
   * with the pkey flags, so an edge gets the same estimate whichever way

@@ -207,6 +207,25 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
+  /** Stats of a base relation with no registered entry: its pages from
+    * Spark's size-in-bytes, its rows from the CBO rowCount or, without
+    * one, from a default in-memory row width against the (compressed)
+    * file bytes. Spark's size estimate is a BigInt that passes
+    * Long.MaxValue over opaque leaves such as a flattened join, so each
+    * value saturates at Long.MaxValue instead of wrapping negative.
+    */
+  private[plans] def fallbackStats(base: LogicalPlan): TableStats = {
+    val s = base.stats
+    val bytes = s.sizeInBytes
+    val maxLong = BigInt(Long.MaxValue)
+    val ps = BigInt(TableStats.PageSizeBytes)
+    val pages = ((bytes + ps - 1) / ps).max(1).min(maxLong).toLong
+    val rowSize = math.max(8L, base.output.map(_.dataType.defaultSize.toLong).sum)
+    val rows = s.rowCount.map(_.min(maxLong).toLong)
+      .getOrElse((bytes / rowSize).max(1).min(maxLong).toLong)
+    TableStats.fromHistograms(rows, 100.0, pages, IndexedSeq.empty)
+  }
+
   private def reorder(root: Join): Option[LogicalPlan] = {
     val (rels, conds, spineJoins) = flatten(root)
     if (rels.size < 3 || rels.size > MaxEdges + 1) return None
@@ -285,20 +304,7 @@ object SelingerJoinReorder extends Rule[LogicalPlan] with PredicateHelper {
     val statsAndSel: Map[String, (TableStats, Double)] = byName.map { case (n, rel) =>
       val (base, peeledFilters) = peeled(n)
       val registered = StatsRegistry.forPlan(base)
-      val ts = registered.getOrElse {
-        val s = base.stats
-        val bytes = s.sizeInBytes
-        val ps = BigInt(TableStats.PageSizeBytes)
-        val pages = ((bytes + ps - 1) / ps).max(1).toLong
-        // fallback guess: default in-memory row width vs (compressed)
-        // file bytes — only reached when no stats were registered and
-        // CBO has no rowCount
-        val rowSize = math.max(8L,
-          base.output.map(_.dataType.defaultSize.toLong).sum)
-        val rows = s.rowCount.map(_.toLong)
-          .getOrElse((bytes / rowSize).max(1).toLong)
-        TableStats.fromHistograms(rows, 100.0, pages, IndexedSeq.empty)
-      }
+      val ts = registered.getOrElse(fallbackStats(base))
       val sel = (peeledFilters ++ residual(rel))
         .foldLeft(1.0)((acc, f) => acc * predicateSelectivity(registered, f))
       n -> (ts, sel)

@@ -12,9 +12,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Formats {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   // FAILFAST honors the header contract above: Spark's default
   // PERMISSIVE mode would silently null malformed records and let the
   // corruption flow downstream — readCsvTolerant is the designated
@@ -26,18 +23,6 @@ object Formats {
 
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("mode", "FAILFAST").json(path)
-
-  def writeParquet(df: DataFrame, path: String,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
-    df.write.mode("overwrite").option("header", header.toString).csv(path)
-
-  def writeJsonLines(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
 
   /** Tolerant CSV ingestion for crawled/third-party feeds: malformed
     * rows don't kill the job (PERMISSIVE) — they surface in a

@@ -40,7 +40,7 @@ object StatsRegistry {
     * index this process (in-process builds are born verified; loaded
     * entries verify lazily on first lookup).
     */
-  private final case class Entry(ts: TableStats, full: Boolean,
+  private final case class Entry(ts: TableStats,
       signature: Option[String], verified: Boolean)
 
   private val byKey = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
@@ -79,15 +79,11 @@ object StatsRegistry {
       case _ => None
     }
 
-  /** Register stats for the (single) file relation a DataFrame scans.
-    * @param full whether this was a with-histograms build — persisted so
-    *        a later process asking for histograms never accepts a
-    *        row-count-only entry.
-    */
-  def register(df: DataFrame, ts: TableStats, full: Boolean = true): Unit = {
+  /** Register stats for the (single) file relation a DataFrame scans. */
+  def register(df: DataFrame, ts: TableStats): Unit = {
     val plan = df.queryExecution.analyzed
     planKey(plan).foreach { k =>
-      byKey.put(k, Entry(ts, full, signatureOf(plan), verified = true))
+      byKey.put(k, Entry(ts, signatureOf(plan), verified = true))
     }
   }
 
@@ -116,23 +112,6 @@ object StatsRegistry {
       Option(byKey.get(k)).flatMap(e => verifiedStats(k, e, plan)).map(_.ts)
     }
 
-  /** Signature-verified lookup for a DataFrame over one file relation:
-    * `Some((stats, full))` iff an entry exists, its file-set signature
-    * matches the live scan, and it is at least as complete as
-    * `needFull` asks (a full entry satisfies a light request; never the
-    * reverse — a histogram-less entry answering range predicates would
-    * be garbage, see [[TableStats.hasHistogram]]).
-    */
-  def lookupVerified(df: DataFrame, needFull: Boolean): Option[(TableStats, Boolean)] = {
-    val plan = df.queryExecution.analyzed
-    planKey(plan).flatMap { k =>
-      Option(byKey.get(k))
-        .filter(e => e.full || !needFull)
-        .flatMap(e => verifiedStats(k, e, plan))
-        .map(e => (e.ts, e.full))
-    }
-  }
-
   def clear(): Unit = byKey.clear()
 
   // --- persistence -------------------------------------------------------
@@ -143,9 +122,12 @@ object StatsRegistry {
     * reinterpreted). 2 = the first versioned format; "1" retroactively
     * names the unversioned r14 sidecars, whose rows carry no version
     * field at all and are refused as pre-versioning (they rebuild once,
-    * which is the safe direction).
+    * which is the safe direction). 3 drops the per-row `full` flag: every
+    * build has histograms, so version-2 rows are refused and rebuilt once,
+    * and a version-2 binary sharing the directory keeps version-3 rows
+    * verbatim as a newer binary's rows instead of failing to read them.
     */
-  private[stats] val SidecarFormatVersion: Long = 2L
+  private[stats] val SidecarFormatVersion: Long = 3L
 
   /** One persisted histogram column / range / ndv sketch value. */
   private[stats] case class PHist(column: String, buckets: Int,
@@ -153,7 +135,7 @@ object StatsRegistry {
   private[stats] case class PRange(column: String, lo: Long, hi: Long)
   private[stats] case class PNdv(column: String, ndv: Long)
   private[stats] case class PStats(
-      key: String, signature: String, full: Boolean,
+      key: String, signature: String,
       numTuples: Long, ioCostPerPage: Double, numPages: Long,
       columns: Seq[String], hists: Seq[PHist], ranges: Seq[PRange],
       ndvs: Seq[PNdv], version: Option[Long])
@@ -311,7 +293,7 @@ object StatsRegistry {
     val rows = byKey.asScala.toSeq
       .collect { case (k, e) if e.signature.isDefined && keyAlive(k) =>
         val ts = e.ts
-        PStats(k, e.signature.get, e.full, ts.numTuples, ts.ioCostPerPage,
+        PStats(k, e.signature.get, ts.numTuples, ts.ioCostPerPage,
           ts.numPages, ts.columns, ts.histsMap.toSeq.sortBy(_._1)
             .map { case (c, h) => PHist(c, h.buckets, h.minV, h.maxV, h.bucketCounts) },
           ts.rangesMap.toSeq.sortBy(_._1)
@@ -363,8 +345,7 @@ object StatsRegistry {
         p.columns.toIndexedSeq, hists,
         p.ranges.map(r => r.column -> (r.lo, r.hi)).toMap,
         p.ndvs.map(n => n.column -> n.ndv).toMap)
-      byKey.putIfAbsent(p.key,
-        Entry(ts, p.full, Some(p.signature), verified = false))
+      byKey.putIfAbsent(p.key, Entry(ts, Some(p.signature), verified = false))
     }
     rows.length
   }

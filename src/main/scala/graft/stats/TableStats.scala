@@ -11,11 +11,10 @@ import org.apache.spark.sql.types._
   * Unlike the reference (two full single-threaded scans per table), the
   * build is two distributed Spark aggregation jobs over the DataFrame —
   * pass 1: one `agg` computing count + min/max of every integral column;
-  * pass 2: one bucketize + `groupBy(col, bucket).count()` over all columns
-  * at once (stacked via `posexplode`, so it is a single shuffle regardless
-  * of column count). Both passes are aggregation-only — nothing row-sized
-  * ever reaches the driver, so the build scales to arbitrarily large
-  * tables.
+  * pass 2: one `agg` filling every histogram ([[HistogramAgg]]) and an HLL
+  * ndv sketch per atomic column. Both passes are aggregation-only —
+  * nothing row-sized ever reaches the driver, so the build scales to
+  * arbitrarily large tables. Every build makes both passes.
   */
 final class TableStats private (
     val numTuples: Long,
@@ -39,28 +38,21 @@ final class TableStats private (
 
   def histogram(col: String): IntHistogram = hists(col)
 
-  /** Whether a histogram was built for `col` (integral/timestamp,
-    * non-all-null, `withHistograms` build, and not excluded by the
-    * build's column filter). Light builds expose NO histograms — an
-    * empty histogram would answer range predicates with garbage.
+  /** Whether a histogram was built for `col`: integral or timestamp, not
+    * all null, and not excluded by the build's column filter.
     */
   def hasHistogram(col: String): Boolean = hists.contains(col)
 
-  /** Observed (min, max) of `col` — known even for light builds (pass 1
-    * computes it); the basis for domain-capped ndv estimates.
-    */
-  def columnRange(col: String): Option[(Long, Long)] = ranges.get(col)
-
-  /** Distinct-count estimate for `col`: the measured HLL sketch value
-    * from the build's pass 1 when available (works for ANY atomic type,
-    * including string join keys), else capped by the integer domain
-    * width; always capped by the row count.
+  /** Distinct-count estimate for `col`: the HLL sketch value the build's
+    * pass 2 measured (any atomic type, string join keys included). Stats
+    * made by [[TableStats.fromHistograms]] carry no sketch and fall back
+    * to the integer domain width. Always capped by the row count.
     */
   def estimateNdv(col: String): Option[Long] = {
     val measured = ndvs.get(col)
-    // hi - lo + 1 overflows Long for hash/id-width ranges on light builds
-    // (no HLL sketch); a wrapped-negative width would clamp to ndv=1 and
-    // price EQ joins as cross products — saturate to numTuples instead.
+    // hi - lo + 1 overflows Long for hash/id-width ranges; a
+    // wrapped-negative width would clamp to ndv=1 and price EQ joins as
+    // cross products — saturate to numTuples instead.
     val domain = ranges.get(col).map { case (lo, hi) =>
       val width = hi - lo
       if (width < 0L || width + 1L <= 0L) numTuples else width + 1L
@@ -114,11 +106,6 @@ object TableStats {
     * @param numPagesOverride page count for the scan-cost model; when
     *        absent it is derived from the relation's size-in-bytes at the
     *        reference's 8196-byte page size.
-    */
-  /** @param withHistograms false skips pass 2 entirely — enough for
-    *        callers that only need row counts and scan costs (the join
-    *        DP receives filter selectivities pre-computed, like the
-    *        reference's order_joins contract).
     * @param columns restrict histogram building to these columns — at
     *        100 TB every extra column is an extra per-partition buffer in
     *        both passes, so callers that read one histogram shouldn't pay
@@ -128,8 +115,6 @@ object TableStats {
       df: DataFrame,
       ioCostPerPage: Double = 100.0,
       numPagesOverride: Option[Long] = None,
-      numBins: Int = NumHistBins,
-      withHistograms: Boolean = true,
       columns: Option[Seq[String]] = None): TableStats = {
 
     val histCols: IndexedSeq[(String, DataType)] =
@@ -151,13 +136,8 @@ object TableStats {
            TimestampNTZType => true
       case _ => false
     }
-    // ndv sketches ride in pass 2 (full builds only): light builds stay
-    // a single count/min-max job, and their consumers fall back to the
-    // domain-cap ndv estimate.
     val ndvCols: IndexedSeq[String] =
-      if (!withHistograms) IndexedSeq.empty
-      else df.schema.fields.collect { case f if atomic(f.dataType) => f.name }
-        .toIndexedSeq
+      df.schema.fields.collect { case f if atomic(f.dataType) => f.name }.toIndexedSeq
 
     // Pass 1: count + min/max for every histogrammed column in ONE job.
     val aggExprs = Seq(count(lit(1)).as("__n")) ++ intCols.flatMap { c =>
@@ -173,23 +153,19 @@ object TableStats {
       else Some((c, row.getLong(mi), row.getLong(ma)))
     }
 
-    // No histogram objects on light builds: an all-zero histogram would
-    // answer selectivity queries with garbage (e.g. LT mid-domain = 1.0).
-    val hists: Map[String, IntHistogram] =
-      if (!withHistograms) Map.empty
-      else ranges.map { case (c, lo, hi) =>
-        c -> new IntHistogram(numBins, lo, hi)
-      }.toMap
+    val hists: Map[String, IntHistogram] = ranges.map { case (c, lo, hi) =>
+      c -> new IntHistogram(NumHistBins, lo, hi)
+    }.toMap
 
-    // Pass 2 (full builds): all histograms in ONE job via the typed
-    // HistogramAgg aggregator — each column contributes one Array[Long]
-    // buffer, merged tree-wise; no row ever re-keys through a shuffle
-    // (the explode + groupBy(col, bucket) alternative shuffles
-    // numCols x rows) — plus the HLL ndv sketches in the SAME job.
+    // Pass 2: all histograms in ONE job via the typed HistogramAgg
+    // aggregator — each column contributes one Array[Long] buffer, merged
+    // tree-wise; no row ever re-keys through a shuffle (the explode +
+    // groupBy(col, bucket) alternative shuffles numCols x rows) — plus
+    // the HLL ndv sketches in the SAME job.
     var ndvs: Map[String, Long] = Map.empty
-    if (withHistograms && (ranges.nonEmpty || ndvCols.nonEmpty) && n > 0) {
+    if ((ranges.nonEmpty || ndvCols.nonEmpty) && n > 0) {
       val aggCols = ranges.map { case (c, lo, hi) =>
-        HistogramAgg.column(exprOf(c), lo, hi, numBins).as(s"__h_$c")
+        HistogramAgg.column(exprOf(c), lo, hi, NumHistBins).as(s"__h_$c")
       } ++ ndvCols.map(c => approx_count_distinct(col(c)).as(s"__ndv_$c"))
       val hrow = df.agg(aggCols.head, aggCols.tail: _*).head()
       ranges.zipWithIndex.foreach { case ((c, _, _), i) =>
@@ -221,10 +197,7 @@ object TableStats {
     * sequentially leaves the cluster idle between jobs. Thread-safe:
     * Spark job submission is designed for multi-threaded drivers.
     */
-  def buildMany(
-      tables: Map[String, DataFrame],
-      ioCostPerPage: Double = 100.0,
-      withHistograms: Boolean = true): Map[String, TableStats] = {
+  def buildMany(tables: Map[String, DataFrame]): Map[String, TableStats] = {
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -232,7 +205,7 @@ object TableStats {
     // table map would pin every global fork-join worker for the whole
     // Await and starve unrelated users of the shared pool.
     val futures = tables.map { case (n, df) =>
-      Future(blocking { n -> build(df, ioCostPerPage, withHistograms = withHistograms) })
+      Future(blocking { n -> build(df) })
     }
     Await.result(Future.sequence(futures), Duration.Inf).toMap
   }

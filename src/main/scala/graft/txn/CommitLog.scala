@@ -484,7 +484,6 @@ final class TransactionManager(log: LogManager) {
     log.logAbort(txn)
     active -= txn
   }
-  def activeTxns: Set[Long] = active
   /** Crash simulation (reference TransactionManager::reset). */
   def reset(): Unit = { active = Set.empty; nextId = 0L }
   /** Post-recovery: resume ids past everything in the log. */

@@ -67,7 +67,7 @@ class CatalogMetadataSpec extends AnyFunSuite {
     val sidecar = Files.createTempDirectory("graft-catalog-sidecar").toString
     StatsRegistry.clear()
     val region = tables("region")
-    StatsRegistry.register(region, TableStats.build(region), full = true)
+    StatsRegistry.register(region, TableStats.build(region))
     assert(StatsRegistry.save(sidecar) == 1)
     val (saved, saveJobs) = jobsOf(StatsRegistry.save(sidecar))
     assert(saved == 1)
@@ -79,6 +79,35 @@ class CatalogMetadataSpec extends AnyFunSuite {
     assert(StatsRegistry.forPlan(region.queryExecution.analyzed).isDefined)
     assert(StatsRegistry.load(Files.createTempDirectory("graft-catalog-none").toString) == 0,
       "a dir without stats.jsonl loads nothing")
+  }
+
+  test("concurrent statsMany calls on one table share one instance, the one the registry serves") {
+    // a fresh copy, so no earlier build or sidecar row of the fixture is cached
+    val dir = Files.createTempDirectory("graft-catalog-race").toString
+    copyTree(Paths.get(sf, "orders.parquet"), Paths.get(dir, "orders.parquet"))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val got = try {
+      val calls = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[TableStats] {
+          def call(): TableStats = {
+            start.await()
+            Catalog.statsMany(spark, dir, Seq("orders"))("orders")
+          }
+        })
+      }
+      start.countDown()
+      calls.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    assert(got.forall(_ eq got.head), "every caller must get the one cached instance")
+    assert(Catalog.stats(spark, dir, "orders") eq got.head)
+    val plan = Catalog.table(spark, dir, "orders").queryExecution.analyzed
+    assert(StatsRegistry.forPlan(plan).exists(_ eq got.head),
+      "the registry must serve the instance the cache returns")
+    val e = intercept[IllegalArgumentException] {
+      Catalog.statsMany(spark, dir, Seq("orders"), withHistograms = false)
+    }
+    assert(e.getMessage.contains("row-count-only"))
   }
 
   test("events with TIMESTAMP(NANOS) ts read as TimestampType at nanos / 1000 micros") {

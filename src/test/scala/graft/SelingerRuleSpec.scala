@@ -309,7 +309,7 @@ class SelingerRuleSpec extends AnyFunSuite {
     val s2 = SharedSpark.sparkWithExtensions
     graft.core.Catalog.tableNames.foreach { t =>
       graft.stats.StatsRegistry.register(graft.core.Catalog.table(s2, dir, t),
-        graft.core.Catalog.stats(s2, dir, t), full = true)
+        graft.core.Catalog.stats(s2, dir, t))
     }
     s2
   }

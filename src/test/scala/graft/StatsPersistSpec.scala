@@ -49,7 +49,7 @@ class StatsPersistSpec extends AnyFunSuite {
     val sidecar = scratch("sidecar")
     val df = writeTable(tableDir, seed = 42)
     val built = TableStats.build(df)
-    StatsRegistry.register(df, built, full = true)
+    StatsRegistry.register(df, built)
     val before = probeGrid(built)
     val saved = StatsRegistry.save(sidecar)
     assert(saved >= 1, "the registered entry must persist")
@@ -78,7 +78,7 @@ class StatsPersistSpec extends AnyFunSuite {
     val tableDir = scratch("stale")
     val sidecar = scratch("stale-sidecar")
     val df = writeTable(tableDir, seed = 7)
-    StatsRegistry.register(df, TableStats.build(df), full = true)
+    StatsRegistry.register(df, TableStats.build(df))
     assert(StatsRegistry.save(sidecar) >= 1)
 
     // the data changes: same directory, regenerated content (new part
@@ -94,27 +94,9 @@ class StatsPersistSpec extends AnyFunSuite {
       "stale entry must be refused")
     // and the refusal is terminal for the entry: a rebuild re-registers
     val rebuilt = TableStats.build(df2)
-    StatsRegistry.register(df2, rebuilt, full = true)
+    StatsRegistry.register(df2, rebuilt)
     val got = StatsRegistry.forPlan(df2.queryExecution.analyzed)
     assert(got.exists(_.numTuples == 7000L))
-  }
-
-  test("completeness guard: a light entry never satisfies a with-histograms request") {
-    val tableDir = scratch("light")
-    val sidecar = scratch("light-sidecar")
-    val df = writeTable(tableDir, seed = 9)
-    StatsRegistry.register(df, TableStats.build(df, withHistograms = false),
-      full = false)
-    StatsRegistry.save(sidecar)
-    StatsRegistry.clear()
-    StatsRegistry.load(sidecar)
-    assert(StatsRegistry.lookupVerified(df, needFull = true).isEmpty,
-      "a row-count-only entry must not answer a histogram request")
-    val light = StatsRegistry.lookupVerified(df, needFull = false)
-    assert(light.exists { case (ts, full) => !full && ts.numTuples == 5000L })
-    // a full entry DOES satisfy a light request (full beats light)
-    StatsRegistry.register(df, TableStats.build(df), full = true)
-    assert(StatsRegistry.lookupVerified(df, needFull = false).exists(_._2))
   }
 
   // every regular file under `dir` except the sidecar itself, by content
@@ -133,7 +115,7 @@ class StatsPersistSpec extends AnyFunSuite {
     val tableDir = scratch("guard")
     val df = writeTable(tableDir, seed = 21)
     StatsRegistry.clear()
-    StatsRegistry.register(df, TableStats.build(df), full = true)
+    StatsRegistry.register(df, TableStats.build(df))
     // the misconfigured GRAFT_STATS_DIR scenario (pointed at testdata /
     // an output dir): save writes only its own sidecar file, so a plain
     // file and a parquet table with its _SUCCESS marker survive two saves
@@ -171,7 +153,7 @@ class StatsPersistSpec extends AnyFunSuite {
   test("delete guard: a sidecar-LIKE dir mixing foreign files refuses (ADVICE r15)") {
     val dfA = writeTable(scratch("mixed-a"), seed = 61)
     StatsRegistry.clear()
-    StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
+    StatsRegistry.register(dfA, TableStats.build(dfA))
     // a user dir holding a stray part-*.json plus unrelated content: the
     // part file neither licenses a delete nor is read as sidecar rows
     val mixed = scratch("mixed-victim")
@@ -193,7 +175,7 @@ class StatsPersistSpec extends AnyFunSuite {
     val sidecar = scratch("ver-sidecar")
     val df = writeTable(tableDir, seed = 31)
     StatsRegistry.clear()
-    StatsRegistry.register(df, TableStats.build(df), full = true)
+    StatsRegistry.register(df, TableStats.build(df))
     assert(StatsRegistry.save(sidecar) == 1)
     // doctor the sidecar rows in place
     val file = java.nio.file.Paths.get(sidecar, StatsRegistry.SidecarFile)
@@ -201,7 +183,7 @@ class StatsPersistSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(file, f(java.nio.file.Files.readString(file)))
     // a FUTURE format version: deserializing it by name would read
     // arbitrarily-reinterpreted fields as live statistics
-    rewrite(_.replace("\"version\":2", "\"version\":99"))
+    rewrite(_.replace("\"version\":3", "\"version\":99"))
     StatsRegistry.clear()
     assert(StatsRegistry.load(sidecar) == 0, "future-version rows must not load")
     assert(StatsRegistry.forPlan(df.queryExecution.analyzed).isEmpty)
@@ -209,10 +191,14 @@ class StatsPersistSpec extends AnyFunSuite {
     rewrite(_.replace(",\"version\":99}", "}"))
     StatsRegistry.clear()
     assert(StatsRegistry.load(sidecar) == 0, "pre-versioning rows must be refused")
+    // a version-2 row: the format before the per-row `full` flag was dropped
+    rewrite(_.replace("}\n", ",\"full\":true,\"version\":2}\n"))
+    StatsRegistry.clear()
+    assert(StatsRegistry.load(sidecar) == 0, "version-2 rows must be refused")
     // a rebuild + save rewrites the sidecar in the current format (the
     // merge-on-save re-read must refuse the doctored rows too, not carry
     // them forward)
-    StatsRegistry.register(df, TableStats.build(df), full = true)
+    StatsRegistry.register(df, TableStats.build(df))
     assert(StatsRegistry.save(sidecar) == 1)
     StatsRegistry.clear()
     assert(StatsRegistry.load(sidecar) == 1)
@@ -225,13 +211,13 @@ class StatsPersistSpec extends AnyFunSuite {
     val dirB = scratch("merge-b")
     val dfB = writeTable(dirB, seed = 43, n = 6000)
     StatsRegistry.clear()
-    StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
+    StatsRegistry.register(dfA, TableStats.build(dfA))
     assert(StatsRegistry.save(sidecar) == 1)
     // "process 2": a fresh registry that only ever built B saves to the
     // SAME dir — pre-merge this was last-writer-wins and silently erased
     // A's entry (ADVICE r14 / r14 verdict #5)
     StatsRegistry.clear()
-    StatsRegistry.register(dfB, TableStats.build(dfB), full = true)
+    StatsRegistry.register(dfB, TableStats.build(dfB))
     assert(StatsRegistry.save(sidecar) == 2, "the save must carry A forward")
     StatsRegistry.clear()
     assert(StatsRegistry.load(sidecar) == 2)
@@ -241,7 +227,7 @@ class StatsPersistSpec extends AnyFunSuite {
     // disk row — B regenerated at 7000 rows replaces the 6000-row entry
     val dfB2 = writeTable(dirB, seed = 44, n = 7000)
     StatsRegistry.clear()
-    StatsRegistry.register(dfB2, TableStats.build(dfB2), full = true)
+    StatsRegistry.register(dfB2, TableStats.build(dfB2))
     assert(StatsRegistry.save(sidecar) == 2)
     StatsRegistry.clear()
     StatsRegistry.load(sidecar)
@@ -262,7 +248,7 @@ class StatsPersistSpec extends AnyFunSuite {
     val sidecar = scratch("future-sidecar")
     val dfA = writeTable(scratch("future-a"), seed = 51)
     StatsRegistry.clear()
-    StatsRegistry.register(dfA, TableStats.build(dfA), full = true)
+    StatsRegistry.register(dfA, TableStats.build(dfA))
     assert(StatsRegistry.save(sidecar) == 1)
     // a NEWER binary's row lands in the sidecar (format version 99, a
     // shape this binary's PStats schema does not know)
@@ -276,7 +262,7 @@ class StatsPersistSpec extends AnyFunSuite {
     // newer peer's row was permanently DELETED
     val dfB = writeTable(scratch("future-b"), seed = 52, n = 6000)
     StatsRegistry.clear()
-    StatsRegistry.register(dfB, TableStats.build(dfB), full = true)
+    StatsRegistry.register(dfB, TableStats.build(dfB))
     assert(StatsRegistry.save(sidecar) == 2, "A carried + B fresh")
     val rawAfter = java.nio.file.Files.readString(file)
     assert(rawAfter.contains(futureLine),
@@ -288,7 +274,7 @@ class StatsPersistSpec extends AnyFunSuite {
     assert(StatsRegistry.forPlan(dfB.queryExecution.analyzed).isDefined)
     // and a THIRD save keeps preserving it (stable across rewrites)
     StatsRegistry.clear()
-    StatsRegistry.register(dfB, TableStats.build(dfB), full = true)
+    StatsRegistry.register(dfB, TableStats.build(dfB))
     assert(StatsRegistry.save(sidecar) == 2)
     val rawThird = java.nio.file.Files.readString(file)
     assert(rawThird.contains(futureLine))
@@ -299,7 +285,7 @@ class StatsPersistSpec extends AnyFunSuite {
     val sidecar = scratch("gone-sidecar")
     val df = writeTable(tableDir, seed = 11)
     StatsRegistry.clear()
-    StatsRegistry.register(df, TableStats.build(df), full = true)
+    StatsRegistry.register(df, TableStats.build(df))
     // delete the table out from under the registry entry
     import scala.jdk.CollectionConverters._
     scala.util.Using.resource(
